@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.control.NonFatal
 
 /** Benchmark main — one JSON line per run for the driver's BENCH_r{N}.
   *
@@ -191,6 +192,7 @@ object Bench {
         val txt = new String(java.nio.file.Files.readAllBytes(
           java.nio.file.Paths.get(prevPath)), "UTF-8")
         val qsec = txt.indexOf("\"queries\":{")
+        require(qsec >= 0, "no \"queries\" object in the archive")
         val body = txt.substring(qsec + "\"queries\":{".length,
           txt.indexOf("}", qsec))
         val prev = "\"(q[^\"]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(body)
@@ -207,16 +209,23 @@ object Bench {
           def top(seq: Seq[(String, Double)]) = seq.take(5).map { case (q, _) =>
             s""""$q":${math.rint(now(q) * 1000) / 1000}"""
           }.mkString("{", ",", "}")
-          val reg = top(common.map(q => (q, now(q) - prev(q)))
-            .filter(_._2 > 0).sortBy(-_._2))
-          val imp = top(common.map(q => (q, prev(q) - now(q)))
-            .filter(_._2 > 0).sortBy(-_._2))
+          // the named movers are the population the counts describe:
+          // outside the ±10% band, ranked by absolute delta
+          val reg = top(ratios.filter(_._2 > 1.1)
+            .map { case (q, _) => (q, now(q) - prev(q)) }.sortBy(-_._2))
+          val imp = top(ratios.filter(_._2 < 0.9)
+            .map { case (q, _) => (q, prev(q) - now(q)) }.sortBy(-_._2))
           s"""{"n_common":${common.size},"n_improved":$nImp,""" +
             s""""n_regressed":$nReg,""" +
             s""""geomean_vs_archive":${math.rint(geo * 1000) / 1000},""" +
             s""""top_regressed":$reg,"top_improved":$imp}"""
         }
-      } catch { case _: Throwable => "null" }
+      } catch {
+        case NonFatal(e) =>
+          System.err.println(s"[graft] bench digest vs $prevPath " +
+            s"skipped: $e")
+          "null"
+      }
     }
     println(s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${results.count(_._2.nonEmpty)},"n_errors":${errors.size},"n_rebuild_contaminated":${rebuilds.size},"slowest":$slowest,"digest":$digest,$envJson,"sf":"$sfDir"}""")
     spark.stop()

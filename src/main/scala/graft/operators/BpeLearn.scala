@@ -387,7 +387,7 @@ object BpeLearn {
         .coalesce(1).write.mode("overwrite").parquet(path)
       ArtifactGuard.stamp(spark, path, fingerprint)
     }
-    spark.read.parquet(path)
+    graft.Tables.read(spark, path)
   }
 
   /** Byte-level artifact location — kept distinct from the word-level

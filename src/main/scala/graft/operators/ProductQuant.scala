@@ -69,8 +69,8 @@ object ProductQuant {
       codes.write.mode("overwrite").parquet(s"$path/codes")
       ArtifactGuard.stamp(spark, path, fingerprint)
     }
-    (spark.read.parquet(s"$path/codebook"),
-      spark.read.parquet(s"$path/codes"))
+    (graft.Tables.read(spark, s"$path/codebook"),
+      graft.Tables.read(spark, s"$path/codes"))
   }
 
   /** L2-normalize (id, vec) — norm computed ONCE per vector, then one

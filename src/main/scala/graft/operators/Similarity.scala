@@ -507,8 +507,8 @@ object Similarity {
     }
 
     def load(spark: org.apache.spark.sql.SparkSession, path: String): IvfIndex = {
-      val assigned = spark.read.parquet(s"$path/assigned")
-      val centroids = spark.read.parquet(s"$path/centroids")
+      val assigned = graft.Tables.read(spark, s"$path/assigned")
+      val centroids = graft.Tables.read(spark, s"$path/centroids")
         .orderBy(col("list_id")).collect()
         .map(_.getAs[scala.collection.Seq[Double]]("centroid").toSeq).toSeq
       new IvfIndex(assigned, centroids)

@@ -113,7 +113,7 @@ object ModelQueries {
         ArtifactGuard.stamp(s, path, Some(fp))
       }
     })
-    s.read.parquet(s"$path/weights")
+    Tables.read(s, s"$path/weights")
   }
 
   private def lrScored(s: org.apache.spark.sql.SparkSession, dir: String) = {

@@ -29,16 +29,6 @@ final case class QueryDef(
 }
 
 object QueryDef {
-  /** Registry assembled by SparkEntry from each module's `defs`;
-    * `dir` resolves the dir-parameterized oracles.
-    */
-  def toMaps(all: Seq[QueryDef], dir: String)
-      : (Map[String, (SparkSession, String) => DataFrame], Map[String, String]) = {
-    val qs = all.map(d => d.name -> d.fn).toMap
-    val os = all.flatMap(d => d.oracleFor(dir).map(d.name -> _)).toMap
-    (qs, os)
-  }
-
   /** Names excluded from the timed bench sweep. */
   def benchExempt(all: Seq[QueryDef]): Set[String] =
     all.filterNot(_.inBench).map(_.name).toSet

@@ -53,7 +53,7 @@ object SuffixQueries {
       }
     })
     PersistedLevels.map(l =>
-      l -> s.read.parquet(s"$path/level_$l")).toMap
+      l -> Tables.read(s, s"$path/level_$l")).toMap
   }
 
   /** q170/q171 shared core: merged maximal repeated-16-gram spans per

@@ -83,8 +83,8 @@ object VectorQueries {
           .write.mode("overwrite").parquet(s"$path/postings")
         ArtifactGuard.stamp(s, path, Some(fp))
       }
-      val postings = s.read.parquet(s"$path/postings")
-      val model = s.read.parquet(s"$path/centroids").collect()
+      val postings = Tables.read(s, s"$path/postings")
+      val model = Tables.read(s, s"$path/centroids").collect()
         .map(r => (r.getAs[Int]("cluster"), r.getAs[Int]("j")) ->
           r.getAs[java.math.BigDecimal]("c").setScale(6))
         .toMap

@@ -30,6 +30,25 @@ class ArtifactHygieneSpec extends AnyFunSuite {
       s"hardcoded temp paths (route through Artifacts.root): $offenders")
   }
 
+  /** Every engine parquet read goes through `Tables.read`, which infers
+    * a schema once per file version; a direct `spark.read.parquet` runs
+    * a schema-inference job on every call. The stress mains are exempt:
+    * they read scratch corpora they have just written.
+    */
+  test("engine parquet reads go through Tables.read") {
+    val exempt = Set("Tables.scala", "TailStress.scala", "CorpusStress.scala",
+      "EmbedStress.scala", "IvfSizingStress.scala", "ScaleStress.scala")
+    val direct = """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""".r
+    val offenders = scalaFiles(new java.io.File("src/main/scala"))
+      .filterNot(f => exempt(f.getName))
+      .filter { f =>
+        direct.findFirstIn(new String(
+          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty
+      }.map(_.getPath)
+    assert(offenders.isEmpty,
+      s"direct parquet reads (use graft.Tables.read): $offenders")
+  }
+
   test("artifact dirs disambiguate raw data dirs that sanitize alike") {
     val a = graft.sources.Artifacts.dir("lr", "/data/x.y", "d8")
     val b = graft.sources.Artifacts.dir("lr", "/data/x_y", "d8")
