@@ -1,5 +1,6 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 /** Benchmark main — one JSON line per run for the driver's BENCH_r{N}.
@@ -22,33 +23,14 @@ import scala.util.control.NonFatal
   * noise. Totals remain comparable across rounds (sum of mins).
   */
 object Bench {
-  private def force(df: DataFrame): Unit =
+  /** Forces every output column through Spark's `noop` sink. */
+  def force(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Lazy-localCheckpoint blocks are released by the
-      // ContextCleaner only after a GC processes their plan
-      // references; with the default 30 MIN periodic-GC interval a
-      // ~90-query sweep would retain every dead block to the end. A
-      // 30 s cleaner cadence (Spark's documented knob for long-lived
-      // drivers) keeps that debt bounded on a background thread.
-      // Measured effect at sf0.1 is hygiene, not speed — the GC log
-      // shows ~2.5 s total pause for the whole suite either way.
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Metrics.register(spark)
+    val cpus = Tables.cpus
+    val spark = Tables.localSession("graft-bench")
 
     // ---- environment self-diagnosis (r14 verdict #1) ----
     // The r13/r14 driver benches carried multi-x outliers (q199 22.4 s
@@ -90,7 +72,7 @@ object Bench {
         .getOperatingSystemMXBean.getSystemLoadAverage
     spinSec(1) // JIT-warm the loop itself, untimed (first probe read
                // 0.73 s vs 0.39 post-sweep purely from C2 warmup)
-    val spinPre = spinSec(cpus.toInt)
+    val spinPre = spinSec(cpus)
     val loadPre = loadAvg()
     val widening = Tables.names.map { n =>
       s"\"$n\":${Tables.wideningEngages(spark, sfDir, n)}"
@@ -103,8 +85,12 @@ object Bench {
       .toSeq.sortBy(_._1)
     // Warmup: one untimed full sweep (JVM + per-query codegen +
     // parquet footer caches); the timed sweep then measures plan cost.
-    queries.foreach { case (_, fn) =>
-      try force(fn(spark, sfDir)) catch { case _: Throwable => () }
+    // A failure here is logged, then recorded by the timed sweeps.
+    queries.foreach { case (name, fn) =>
+      try force(fn(spark, sfDir)) catch {
+        case NonFatal(e) =>
+          System.err.println(s"[graft] bench warm-up $name failed: $e")
+      }
     }
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "2").toInt.max(1)
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
@@ -126,7 +112,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok =
           try { force(fn(spark, sfDir)); true } catch {
-            case e: Throwable =>
+            case NonFatal(e) =>
               errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
                 .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
               false
@@ -155,7 +141,7 @@ object Bench {
       .mkString("[", ",", "]")
     val rebuildJson = rebuilds.map { case (k, v) => s"\"$k\":$v" }
       .mkString("{", ",", "}")
-    val spinPost = spinSec(cpus.toInt)
+    val spinPost = spinSec(cpus)
     val loadPost = loadAvg()
     val envJson = s""""widening":$widening,"spin_sec":[$spinPre,$spinPost],""" +
       s""""spin_checksum":${spinSink.get},"load_avg":[$loadPre,$loadPost]"""
@@ -176,58 +162,64 @@ object Bench {
       .sortBy(-_._2).take(5)
       .map { case (k, t) => s"""\"$k\":${math.rint(t * 1000) / 1000}""" }
       .mkString("{", ",", "}")
-    // Bounded per-query DIGEST vs the committed previous-round archive
-    // (r15 verdict #2): the full per-query line overflows the driver's
-    // ~3 KB tail capture, so PERF_r{N}.per_query has come back empty
-    // for two rounds. This computes the round-over-round comparison
-    // IN-PROCESS against bench_archive/prev_final_sf01.json (updated
-    // each round-close) and rides the compact line — ≤5 names each
-    // way, so the line stays well under 2 KB. Counts use a ±10% band
-    // (the measured sweep-noise floor); geomean is over all common
-    // queries, unbanded.
-    val digest: String = {
-      val prevPath = sys.env.getOrElse("SPARK_GRAFT_PREV_BENCH",
-        "bench_archive/prev_final_sf01.json")
-      try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(prevPath)), "UTF-8")
-        val qsec = txt.indexOf("\"queries\":{")
-        require(qsec >= 0, "no \"queries\" object in the archive")
-        val body = txt.substring(qsec + "\"queries\":{".length,
-          txt.indexOf("}", qsec))
-        val prev = "\"(q[^\"]+)\":([0-9.Ee+-]+)".r.findAllMatchIn(body)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val now = results.collect { case (k, Some(t)) => (k, t) }.toMap
-        val common = prev.keySet.intersect(now.keySet).toSeq
-        if (common.isEmpty) "null"
-        else {
-          val ratios = common.map(q => (q, now(q) / prev(q)))
-          val nImp = ratios.count(_._2 < 0.9)
-          val nReg = ratios.count(_._2 > 1.1)
-          val geo = math.exp(
-            ratios.map(r => math.log(1.0 / r._2)).sum / ratios.size)
-          def top(seq: Seq[(String, Double)]) = seq.take(5).map { case (q, _) =>
-            s""""$q":${math.rint(now(q) * 1000) / 1000}"""
-          }.mkString("{", ",", "}")
-          // the named movers are the population the counts describe:
-          // outside the ±10% band, ranked by absolute delta
-          val reg = top(ratios.filter(_._2 > 1.1)
-            .map { case (q, _) => (q, now(q) - prev(q)) }.sortBy(-_._2))
-          val imp = top(ratios.filter(_._2 < 0.9)
-            .map { case (q, _) => (q, prev(q) - now(q)) }.sortBy(-_._2))
-          s"""{"n_common":${common.size},"n_improved":$nImp,""" +
-            s""""n_regressed":$nReg,""" +
-            s""""geomean_vs_archive":${math.rint(geo * 1000) / 1000},""" +
-            s""""top_regressed":$reg,"top_improved":$imp}"""
-        }
-      } catch {
+    // Bounded per-query digest vs the committed previous-round
+    // archive; see [[digest]].
+    val prevPath = sys.env.getOrElse("SPARK_GRAFT_PREV_BENCH",
+      "bench_archive/prev_final_sf01.json")
+    val digestJson =
+      try digest(new String(java.nio.file.Files.readAllBytes(
+          java.nio.file.Paths.get(prevPath)), "UTF-8"),
+        results.collect { case (k, Some(t)) => (k, t) }.toMap)
+      catch {
         case NonFatal(e) =>
           System.err.println(s"[graft] bench digest vs $prevPath " +
             s"skipped: $e")
           "null"
       }
-    }
-    println(s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${results.count(_._2.nonEmpty)},"n_errors":${errors.size},"n_rebuild_contaminated":${rebuilds.size},"slowest":$slowest,"digest":$digest,$envJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${math.rint(total * 1000) / 1000},"unit":"sec","n":${results.count(_._2.nonEmpty)},"n_errors":${errors.size},"n_rebuild_contaminated":${rebuilds.size},"slowest":$slowest,"digest":$digestJson,$envJson,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** Round-over-round digest of this run's per-query times (`now`,
+    * seconds, successful queries only) against a previous Bench
+    * artifact (r15 verdict #2): the full per-query line overflows the
+    * driver's ~3 KB tail capture, so PERF_r{N}.per_query has come back
+    * empty for two rounds. The comparison rides the compact line
+    * instead, with ≤5 names each way so the line stays well under
+    * 2 KB. Counts use a ±10% band (the measured sweep-noise floor);
+    * geomean is over all common queries, unbanded. A query with a
+    * `null` (failed) archive time is not common. Returns `"null"`
+    * when no query is common.
+    */
+  def digest(archiveJson: String, now: Map[String, Double]): String = {
+    val queries = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(archiveJson).get("queries")
+    require(queries != null && queries.isObject,
+      "no \"queries\" object in the archive")
+    val prev = queries.properties.asScala
+      .collect { case e if e.getValue.isNumber =>
+        e.getKey -> e.getValue.asDouble }.toMap
+    val common = prev.keySet.intersect(now.keySet).toSeq.sorted
+    if (common.isEmpty) "null"
+    else {
+      val ratios = common.map(q => (q, now(q) / prev(q)))
+      val nImp = ratios.count(_._2 < 0.9)
+      val nReg = ratios.count(_._2 > 1.1)
+      val geo = math.exp(
+        ratios.map(r => math.log(1.0 / r._2)).sum / ratios.size)
+      def top(seq: Seq[(String, Double)]) = seq.take(5).map { case (q, _) =>
+        s""""$q":${math.rint(now(q) * 1000) / 1000}"""
+      }.mkString("{", ",", "}")
+      // the named movers are the population the counts describe:
+      // outside the ±10% band, ranked by absolute delta
+      val reg = top(ratios.filter(_._2 > 1.1)
+        .map { case (q, _) => (q, now(q) - prev(q)) }.sortBy(-_._2))
+      val imp = top(ratios.filter(_._2 < 0.9)
+        .map { case (q, _) => (q, prev(q) - now(q)) }.sortBy(-_._2))
+      s"""{"n_common":${common.size},"n_improved":$nImp,""" +
+        s""""n_regressed":$nReg,""" +
+        s""""geomean_vs_archive":${math.rint(geo * 1000) / 1000},""" +
+        s""""top_regressed":$reg,"top_improved":$imp}"""
+    }
   }
 }

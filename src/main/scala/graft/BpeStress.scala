@@ -1,8 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.BpeLearn
+import graft.Metrics.time
 
 /** Scale-stress for q81's batched BPE merge learning — the companion
   * of `CorpusStress` for the one training loop whose cost is rounds ×
@@ -23,26 +22,16 @@ object BpeStress {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val budgets = (if (args.length > 1) args(1) else "24,128,512")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession("graft-bpestress")
 
     val docs = Tables.load(spark, sfDir, "documents")
     budgets.foreach { m =>
       Seq(false, true).foreach { relaxed =>
-        val t0 = System.nanoTime()
-        val (merges, rounds) = BpeLearn.learnMergesWithStats(
-          docs, "text", numMerges = m, relaxed = relaxed)
-        val got = merges.count()
-        val sec = (System.nanoTime() - t0) / 1e9
+        val ((got, rounds), sec) = time {
+          val (merges, rounds) = BpeLearn.learnMergesWithStats(
+            docs, "text", numMerges = m, relaxed = relaxed)
+          (merges.count(), rounds)
+        }
         println(f"""{"mode":"${if (relaxed) "relaxed" else "exact"}",""" +
           f""""merges":$got,"requested":$m,"rounds":$rounds,""" +
           f""""merges_per_round":${got.toDouble / rounds}%.2f,""" +

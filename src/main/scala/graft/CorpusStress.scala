@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusOps
+import graft.Metrics.time
 
 /** Local scale-stress for the round-4 corpus-prep operators, the
   * companion of `ScaleStress` (LSH family) and `EmbedStress`
@@ -25,12 +26,6 @@ import graft.operators.CorpusOps
   * near-linear is the scale argument.
   */
 object CorpusStress {
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   /** Guard-instrumented timing: besides wall time, attribute how many
     * LshSkew cap drops (buckets/rows) and AQE skew-split sub-partitions
     * this query triggered ("caps-engaged / skew-split-observed" — the
@@ -39,9 +34,7 @@ object CorpusStress {
     */
   private def timeGuarded[A](f: => A): (A, Double, Long, Long, Long) = {
     val (s0, m0) = Metrics.settle()
-    val t0 = System.nanoTime()
-    val a = f
-    val dt = (System.nanoTime() - t0) / 1e9
+    val (a, dt) = time(f)
     val (s1, m1) = Metrics.settle()
     def delta(suffix: String): Long =
       m1.collect { case (k, v) if k.endsWith(suffix) =>
@@ -54,29 +47,18 @@ object CorpusStress {
     val factors = (if (args.length > 1) args(1) else "1,10,50")
       .split(",").map(_.trim.toInt).toSeq
     val outBase = if (args.length > 2) args(2) else graft.sources.Artifacts.root + "/corpus_stress"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Scale AQE's skew-detection thresholds to the local corpus: the
-      // production defaults (256 MB skewed-partition threshold, 64 MB
-      // advisory size) are sized for executor-scale partitions; the
-      // stress corpus is a few GB over 32 local partitions, so no
-      // partition can reach them and skew handling would be
-      // structurally unobservable here. 16m/8m preserves the same
-      // detection RATIO (threshold = 2× advisory, factor-of-5 vs
-      // median unchanged) at the local scale; production clusters
-      // keep the defaults.
-      .config("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Metrics.register(spark)
+    val spark = Tables.localSession("graft-corpusstress")
+    // Scale AQE's skew-detection thresholds to the local corpus: the
+    // production defaults (256 MB skewed-partition threshold, 64 MB
+    // advisory size) are sized for executor-scale partitions; the
+    // stress corpus is a few GB over a few dozen local partitions, so no
+    // partition can reach them and skew handling would be
+    // structurally unobservable here. 16m/8m preserves the same
+    // detection RATIO (threshold = 2× advisory, factor-of-5 vs
+    // median unchanged) at the local scale; production clusters
+    // keep the defaults.
+    spark.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16m")
+    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "8m")
 
     val base = Tables.load(spark, sfDir, "documents")
 
@@ -114,9 +96,9 @@ object CorpusStress {
       // many splits, like a real ×N table (the crossJoin plan funnels
       // into the source scan's 1-2 partitions; a one-file corpus gives
       // every measured op a 1-partition scan — see TailStress note)
-      corpus.repartition(cpus.toInt, org.apache.spark.sql.functions.col("doc_id"))
+      corpus.repartition(Tables.cpus, org.apache.spark.sql.functions.col("doc_id"))
         .write.mode("overwrite").parquet(path)
-      val docs = spark.read.parquet(path)
+      val docs = Tables.read(spark, path)
       val n = docs.count()
 
       val (r67, t67) = time(
@@ -569,10 +551,10 @@ object CorpusStress {
       //     alpha/unimax shares to 5e-6 (the 6-decimal ln/exp rounds
       //     and the integral τ division do not scale bit-exactly).
       val pureDirX = s"$outBase/puredup_x$f"
-      pureDup.repartition(cpus.toInt, org.apache.spark.sql.functions.col("doc_id"))
+      pureDup.repartition(Tables.cpus, org.apache.spark.sql.functions.col("doc_id"))
         .write.mode("overwrite")
         .parquet(s"$pureDirX/documents.parquet")
-      val nDup = spark.read.parquet(s"$pureDirX/documents.parquet")
+      val nDup = Tables.read(spark, s"$pureDirX/documents.parquet")
         .count()
       val (mix, t198) = time(
         SparkEntry.queries("q198_mixture_compare")(spark, pureDirX)

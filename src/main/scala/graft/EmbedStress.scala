@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.Metrics.time
 
 /** Scale-stress for the embedding near-dup LSH path (q45's operator)
   * with MEASURABLE ground truth: replicate the sf0.1 embeddings N×
@@ -28,29 +28,12 @@ import graft.operators.Similarity
   * corpus" knob); recall comes from the 24 tables.
   */
 object EmbedStress {
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factors = (if (args.length > 1) args(1) else "1,10,50")
       .split(",").map(_.trim.toInt).toSeq
     val outBase = if (args.length > 2) args(2) else graft.sources.Artifacts.root + "/embstress"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Metrics.register(spark)
+    val spark = Tables.localSession("graft-embedstress")
 
     val base = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id").as("oid"), col("embedding").as("v"))
@@ -72,9 +55,9 @@ object EmbedStress {
               .cast("float")).as("vec"))
       val path = s"$outBase/emb_x$f"
       // many splits, like a real ×N table (see TailStress note)
-      srcs.union(twins).repartition(cpus.toInt, org.apache.spark.sql.functions.col("id"))
+      srcs.union(twins).repartition(Tables.cpus, org.apache.spark.sql.functions.col("id"))
         .write.mode("overwrite").parquet(path)
-      val corpus = spark.read.parquet(path)
+      val corpus = Tables.read(spark, path)
       val n = corpus.count()
       val nTwins = corpus.filter(col("id") % 2 === 1).count()
 

@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
+import graft.Metrics.time
 
 /** The nLists sizing lever, measured (round-12 follow-through on the
   * TailStress ×50 finding): q169's margin alignment probes a shared
@@ -24,12 +25,6 @@ import graft.operators.Similarity
   * 16,64,256.
   */
 object IvfSizingStress {
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   /** q169's margin body (CurationQueries.scala) over an arbitrary
     * index: forward/backward IVF top-k, mean-top-4 normalizers,
     * margin = cos / ((af+ab)/2). nProbe is a parameter since r14 —
@@ -67,19 +62,7 @@ object IvfSizingStress {
       else graft.sources.Artifacts.root + "/tail_stress/x50/embeddings.parquet"
     val sizes = (if (args.length > 1) args(1) else "16,64,256")
       .split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Metrics.register(spark)
+    val spark = Tables.localSession("graft-ivfsizing")
 
     // repartition the scan: the ×50 corpus is one ~26 MB parquet file
     // (1 scan partition), and build() keeps in-memory lineage — every
@@ -87,9 +70,9 @@ object IvfSizingStress {
     // registered q169 gets its parallelism from the SAVED index
     // (postings partitioned by list_id); spreading the postings over
     // the worker count mirrors that.
-    val emb = spark.read.parquet(embPath)
+    val emb = Tables.read(spark, embPath)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
-      .repartition(cpus.toInt, col("id"))
+      .repartition(Tables.cpus, col("id"))
       .localCheckpoint(eager = false)
     val n = emb.count()
 

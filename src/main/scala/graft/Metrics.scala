@@ -3,6 +3,7 @@ package graft
 import java.util.concurrent.atomic.LongAdder
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{PartialReducerPartitionSpec, QueryExecution, SparkPlan}
@@ -51,6 +52,13 @@ object Metrics {
     prev
   }
 
+  /** Wall seconds of one evaluation of `f`, for the stress mains. */
+  def time[A](f: => A): (A, Double) = {
+    val t0 = System.nanoTime()
+    val a = f
+    (a, (System.nanoTime() - t0) / 1e9)
+  }
+
   private def countSkewSplits(p: SparkPlan): Long = {
     val self = p match {
       case r: AQEShuffleReadExec =>
@@ -88,13 +96,20 @@ object Metrics {
         }
       }
       try aqeSkewSplits.add(countSkewSplits(qe.executedPlan))
-      catch { case _: Throwable => () } // diagnostics must never fail a job
+      catch { case NonFatal(_) => () } // diagnostics must never fail a job
     }
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
   }
 
-  /** Idempotent-enough for our single-session mains/tests. */
-  def register(spark: SparkSession): Unit =
-    spark.listenerManager.register(new LogListener)
+  private val registered = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+
+  /** Adds one [[LogListener]] per session; later calls are no-ops, so
+    * a row is summed and logged once however often this is called.
+    */
+  def register(spark: SparkSession): Unit = registered.synchronized {
+    if (registered.add(spark))
+      spark.listenerManager.register(new LogListener)
+  }
 }

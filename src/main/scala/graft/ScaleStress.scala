@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{MinHashDedup, SimHashDedup}
+import graft.Metrics.time
 
 /** Local scale-stress for the LSH dedup family (round-3 verdict #7):
   * replicate the sf0.1 documents corpus N× and measure how
@@ -23,29 +24,12 @@ import graft.operators.{MinHashDedup, SimHashDedup}
   * Metrics listener ([graft-metrics] lines).
   */
 object ScaleStress {
-  private def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factors = (if (args.length > 1) args(1) else "1,10,50")
       .split(",").map(_.trim.toInt).toSeq
     val outBase = if (args.length > 2) args(2) else graft.sources.Artifacts.root + "/stress"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Metrics.register(spark)
+    val spark = Tables.localSession("graft-scalestress")
 
     val base = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -60,9 +44,9 @@ object ScaleStress {
               .otherwise(concat_ws(" ", transform(split(col("text"), " "),
                 t => concat(t, lit("~"), col("cp"))))).as("text"))
       // many splits, like a real ×N table (see TailStress note)
-      corpus.repartition(cpus.toInt, org.apache.spark.sql.functions.col("doc_id"))
+      corpus.repartition(Tables.cpus, org.apache.spark.sql.functions.col("doc_id"))
         .write.mode("overwrite").parquet(path)
-      val docs = spark.read.parquet(path)
+      val docs = Tables.read(spark, path)
       val n = docs.count()
 
       val (p25, t25) = time(MinHashDedup.nearDuplicatePairs(

@@ -238,12 +238,32 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String): Tpch = Tpch(spark, dir)
 
-  /** Local session tuned per the builder contract: shuffle partitions
-    * sized to cores (not 200), AQE on for runtime re-planning (skew
-    * joins, partition coalescing) — the settings that transfer to a
-    * real cluster.
+  /** Worker count for every main: `SPARK_GRAFT_CPUS`, else the
+    * machine's processor count. The one place the variable is read;
+    * mains that size a `repartition` or a probe use this, too.
     */
-  def localSession(appName: String, cores: Int = 32): SparkSession = {
+  lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The engine's only session builder (every main, the benchmark
+    * harness; a spec pins that no other `SparkSession.builder` exists
+    * in the engine). Shuffle partitions sized to cores (not 200), AQE
+    * on for runtime re-planning (skew joins, partition coalescing) —
+    * the settings that transfer to a real cluster — plus the
+    * suite-sized codegen cache and the [[Metrics]] listener. Mains
+    * that need a different runtime SQL conf set it with
+    * `spark.conf.set` afterwards.
+    *
+    * `spark.cleaner.periodicGC.interval` stays at Spark's default
+    * (30 min). A 30 s cadence (once set by five mains to release dead
+    * lazy-checkpoint blocks sooner) was measured with `perfbench`,
+    * adding only that line: `curation` ops/s fell from a
+    * median 1.060 to 0.987 (−6.9%, lower in 8 of 10 alternating
+    * pairs; p50 latency 1152 → 1142 ms, mixed), `flwor` was flat
+    * (p50 295.8 → 285.4 ms, ops/s 2.85 → 2.90). Bench's own note had
+    * called it hygiene, not speed.
+    */
+  def localSession(appName: String, cores: Int = cpus): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$cores]")
       .appName(appName)

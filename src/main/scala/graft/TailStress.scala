@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale rehearsal of the slowest REGISTERED queries (r11 verdict #5):
@@ -39,9 +39,6 @@ object TailStress {
     "q169_margin_align_ivf", "q183_curation_funnel", "q192_bm25_cdc",
     "q199_dedup_savings")
 
-  private def force(df: DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factors = (if (args.length > 1) args(1) else "1,10")
@@ -66,19 +63,7 @@ object TailStress {
     val maxRatio =
       sys.env.getOrElse("SPARK_GRAFT_TAIL_MAX_RATIO", "15").toDouble
     val reps = sys.env.getOrElse("SPARK_GRAFT_TAIL_REPS", "2").toInt.max(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Metrics.register(spark)
+    val spark = Tables.localSession("graft-tailstress")
 
     val docs = Tables.load(spark, sfDir, "documents")
     val emb = Tables.load(spark, sfDir, "embeddings")
@@ -116,22 +101,19 @@ object TailStress {
       // whose placement depends on input partition order) so the
       // file layout is deterministic run-over-run, not just the
       // table content.
-      docsX.repartition(cpus.toInt, col("doc_id"))
+      docsX.repartition(Tables.cpus, col("doc_id"))
         .write.mode("overwrite").parquet(s"$dirX/documents.parquet")
-      embX.repartition(cpus.toInt, col("vec_id"))
+      embX.repartition(Tables.cpus, col("vec_id"))
         .write.mode("overwrite").parquet(s"$dirX/embeddings.parquet")
-      val nD = spark.read.parquet(s"$dirX/documents.parquet").count()
-      val nE = spark.read.parquet(s"$dirX/embeddings.parquet").count()
+      val nD = Tables.read(spark, s"$dirX/documents.parquet").count()
+      val nE = Tables.read(spark, s"$dirX/embeddings.parquet").count()
 
       // untimed warmup sweep (includes the per-dir artifact builds)
       tailQueries.foreach(q =>
-        force(SparkEntry.queries(q)(spark, dirX)))
+        Bench.force(SparkEntry.queries(q)(spark, dirX)))
       val mins = tailQueries.map { q =>
-        val ts = (1 to reps).map { _ =>
-          val t0 = System.nanoTime()
-          force(SparkEntry.queries(q)(spark, dirX))
-          (System.nanoTime() - t0) / 1e9
-        }
+        val ts = (1 to reps).map(_ =>
+          Metrics.time(Bench.force(SparkEntry.queries(q)(spark, dirX)))._2)
         timings((f, q)) = ts.min
         s""""$q":${math.rint(ts.min * 1000) / 1000}"""
       }

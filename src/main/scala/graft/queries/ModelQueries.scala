@@ -687,12 +687,14 @@ object ModelQueries {
         // Overlap them from a small thread pool (guide §2.6: submit
         // independent jobs concurrently so the next fold's stats
         // back-fill the previous one's stragglers). Results are
-        // unchanged: each fold's model sees only its own data.
-        import scala.concurrent.{Await, Future}
+        // unchanged: each fold's model sees only its own data. The
+        // bodies are `blocking`, so the global pool adds threads
+        // instead of serializing the folds on a low-core host.
+        import scala.concurrent.{Await, Future, blocking}
         import scala.concurrent.duration.Duration
         import scala.concurrent.ExecutionContext.Implicits.global
         val folds = Await.result(Future.sequence((0 until 3).map { f =>
-          Future {
+          Future { blocking {
             val train = d.filter(col("doc_id") % 3 =!= f)
             val test = d.filter(col("doc_id") % 3 === f)
             graft.operators.NaiveBayes
@@ -704,7 +706,7 @@ object ModelQueries {
               .select(lit(f).as("fold"), col("n"), col("n_correct"),
                 round(col("n_correct").cast("double") /
                   col("n").cast("double"), 6).as("acc"))
-          }
+          } }
         }), Duration.Inf)
         folds.reduce(_ unionByName _).orderBy(col("fold"))
       },

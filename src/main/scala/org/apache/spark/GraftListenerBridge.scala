@@ -1,8 +1,8 @@
 package org.apache.spark
 
-/** `SparkContext.listenerBus` is `private[spark]`; the JobCount
-  * diagnostic needs `waitUntilEmpty` so its per-query job/stage/task
-  * deltas attribute cleanly (listener events are async). Same pattern
+/** `SparkContext.listenerBus` is `private[spark]`; `graft.QueryTime`
+  * needs `waitUntilEmpty` so its per-query job/stage/task deltas
+  * attribute cleanly (listener events are async). Same pattern
   * as `org.apache.spark.sql.GraftSqlBridge`.
   */
 object GraftListenerBridge {

@@ -30,23 +30,43 @@ class ArtifactHygieneSpec extends AnyFunSuite {
       s"hardcoded temp paths (route through Artifacts.root): $offenders")
   }
 
-  /** Every engine parquet read goes through `Tables.read`, which infers
-    * a schema once per file version; a direct `spark.read.parquet` runs
-    * a schema-inference job on every call. The stress mains are exempt:
-    * they read scratch corpora they have just written.
-    */
-  test("engine parquet reads go through Tables.read") {
-    val exempt = Set("Tables.scala", "TailStress.scala", "CorpusStress.scala",
-      "EmbedStress.scala", "IvfSizingStress.scala", "ScaleStress.scala")
-    val direct = """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""".r
-    val offenders = scalaFiles(new java.io.File("src/main/scala"))
-      .filterNot(f => exempt(f.getName))
+  /** Paths of the `src/main/scala` files in which `pattern` occurs. */
+  private def mainFilesMatching(pattern: scala.util.matching.Regex)
+      : Seq[String] =
+    scalaFiles(new java.io.File("src/main/scala"))
       .filter { f =>
-        direct.findFirstIn(new String(
+        pattern.findFirstIn(new String(
           java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).nonEmpty
       }.map(_.getPath)
+
+  private def outsideTables(paths: Seq[String]): Seq[String] =
+    paths.filterNot(_.endsWith("/Tables.scala"))
+
+  /** Every engine parquet read goes through `Tables.read`, which infers
+    * a schema once per file version; a direct `spark.read.parquet` runs
+    * a schema-inference job on every call.
+    */
+  test("engine parquet reads go through Tables.read") {
+    val offenders = outsideTables(mainFilesMatching(
+      """\.read\s*\.\s*(parquet\s*\(|format\s*\(\s*"parquet")""".r))
     assert(offenders.isEmpty,
       s"direct parquet reads (use graft.Tables.read): $offenders")
+  }
+
+  /** Every main shares one session config: `Tables.localSession`. */
+  test("the only SparkSession builder is Tables.localSession") {
+    val offenders = outsideTables(
+      mainFilesMatching("""SparkSession\s*\.\s*builder""".r))
+    assert(offenders.isEmpty,
+      s"session builders outside Tables.localSession: $offenders")
+  }
+
+  /** Failures must be loud: a `Throwable` catch also swallows fatal
+    * errors (OOM, interrupts). Catch `NonFatal` instead.
+    */
+  test("no Throwable catches in src/main") {
+    val offenders = mainFilesMatching(""":\s*Throwable\s*=>""".r)
+    assert(offenders.isEmpty, s"catch Throwable (use NonFatal): $offenders")
   }
 
   test("artifact dirs disambiguate raw data dirs that sanitize alike") {

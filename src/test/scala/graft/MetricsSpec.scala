@@ -12,6 +12,18 @@ import org.apache.spark.sql.functions._
   */
 class MetricsSpec extends SparkSpec {
 
+  test("register is idempotent per session: an observed row counts once") {
+    Metrics.register(spark)
+    Metrics.register(spark)
+    val n = 1000L
+    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    val (_, m0) = Metrics.settle()
+    spark.range(n).observe("probe", count(lit(1)).as("n")).collect()
+    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    val (_, m1) = Metrics.settle()
+    assert(m1.getOrElse("probe.n", 0L) - m0.getOrElse("probe.n", 0L) == n)
+  }
+
   test("aqeSkewSplits counts AQE skew-join splits on a hot-keyed join") {
     Metrics.register(spark)
     val conf = spark.conf

@@ -119,7 +119,7 @@ class RetrievalSpec extends SparkSpec {
 
   test("df cap drops are METERED through the Metrics listener " +
       "(no silent caps)") {
-    Metrics.register(spark) // idempotent; the shared session may not have it
+    Metrics.register(spark) // once per session; the shared one may not have it
     val (_, m0) = Metrics.settle()
     Retrieval.bm25TopK(docs, "doc_id", "text", queries, k = 10,
       maxDfFrac = 0.77).count()
