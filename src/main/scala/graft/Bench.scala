@@ -50,9 +50,8 @@ object Bench {
     //  - `load_avg`: OS 1-minute load average at the same two points
     //    (-1.0 where the platform cannot report it).
     val spinSink = new java.util.concurrent.atomic.AtomicLong()
-    def spinSec(threads: Int): Double = {
+    def spinSec(threads: Int): Double = Metrics.measure(spark) {
       val iters = 200000000L
-      val t0 = System.nanoTime()
       val ts = (1 to threads).map { t =>
         new Thread(() => {
           var x = 0x9E3779B97F4A7C15L + t
@@ -65,8 +64,7 @@ object Bench {
         })
       }
       ts.foreach(_.start()); ts.foreach(_.join())
-      (System.nanoTime() - t0) / 1e9
-    }
+    }._2.sec
     def loadAvg(): Double =
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
@@ -104,23 +102,23 @@ object Bench {
     // is a different measurement than one that probes a warm
     // artifact — the warmup sweep is supposed to absorb every build,
     // so any nonzero count here marks its query's timing as
-    // rebuild-contaminated in the artifact itself.
-    val rebuilds = scala.collection.mutable.LinkedHashMap[String, Int]()
+    // rebuild-contaminated in the artifact itself. Each query's timed
+    // region is its `force` alone; `Metrics.measure` drains the
+    // listener bus before and after it, outside the timed window.
+    val rebuilds = scala.collection.mutable.LinkedHashMap[String, Long]()
     def timedSweep(): Seq[(String, (Double, Boolean))] =
       queries.map { case (name, fn) =>
-        val b0 = graft.sources.ArtifactGuard.buildEventCount
-        val t0 = System.nanoTime()
-        val ok =
+        val (ok, p) = Metrics.measure(spark) {
           try { force(fn(spark, sfDir)); true } catch {
             case NonFatal(e) =>
               errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
                 .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
               false
           }
-        val built = graft.sources.ArtifactGuard.buildEventCount - b0
-        if (built > 0)
-          rebuilds(name) = rebuilds.getOrElse(name, 0) + built
-        name -> ((System.nanoTime() - t0) / 1e9, ok)
+        }
+        if (p.artifactBuilds > 0)
+          rebuilds(name) = rebuilds.getOrElse(name, 0L) + p.artifactBuilds
+        name -> (p.sec, ok)
       }
     val sweeps = (1 to reps).map(_ => timedSweep().toMap)
     val results: Seq[(String, Option[Double])] = queries.map { case (name, _) =>

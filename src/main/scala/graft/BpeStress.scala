@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.BpeLearn
-import graft.Metrics.time
 
 /** Scale-stress for q81's batched BPE merge learning — the companion
   * of `CorpusStress` for the one training loop whose cost is rounds ×
@@ -27,15 +26,17 @@ object BpeStress {
     val docs = Tables.load(spark, sfDir, "documents")
     budgets.foreach { m =>
       Seq(false, true).foreach { relaxed =>
-        val ((got, rounds), sec) = time {
+        val ((got, rounds), p) = Metrics.measure(spark) {
           val (merges, rounds) = BpeLearn.learnMergesWithStats(
             docs, "text", numMerges = m, relaxed = relaxed)
           (merges.count(), rounds)
         }
-        println(f"""{"mode":"${if (relaxed) "relaxed" else "exact"}",""" +
-          f""""merges":$got,"requested":$m,"rounds":$rounds,""" +
-          f""""merges_per_round":${got.toDouble / rounds}%.2f,""" +
-          f""""sec":$sec%.1f}""")
+        val out = new Metrics.Report(spark,
+          "mode" -> (if (relaxed) "relaxed" else "exact"),
+          "merges" -> got, "requested" -> m, "rounds" -> rounds,
+          "merges_per_round" -> math.rint(got * 100.0 / rounds) / 100)
+        out.sec("sec", p)
+        println(out.json)
       }
     }
     spark.stop()

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.CorpusOps
-import graft.Metrics.time
 
 /** Local scale-stress for the round-4 corpus-prep operators, the
   * companion of `ScaleStress` (LSH family) and `EmbedStress`
@@ -24,24 +23,15 @@ import graft.Metrics.time
   * returns one row per document (boilerplate: per doc with ≥n
   * tokens), so rows must scale exactly with the factor; wall time
   * near-linear is the scale argument.
+  *
+  * Registered queries are forced through Bench's `noop` sink, their
+  * row counts observed in the same action (`StressData.forcedRows`).
+  * The guarded ones also report how many LshSkew cap drops
+  * (buckets/rows) and AQE skew-split sub-partitions they triggered
+  * ("caps-engaged / skew-split-observed" — the r6 judge's
+  * observability ask).
   */
 object CorpusStress {
-  /** Guard-instrumented timing: besides wall time, attribute how many
-    * LshSkew cap drops (buckets/rows) and AQE skew-split sub-partitions
-    * this query triggered ("caps-engaged / skew-split-observed" — the
-    * r6 judge's observability ask). The listener settles are OUTSIDE
-    * the timed window.
-    */
-  private def timeGuarded[A](f: => A): (A, Double, Long, Long, Long) = {
-    val (s0, m0) = Metrics.settle()
-    val (a, dt) = time(f)
-    val (s1, m1) = Metrics.settle()
-    def delta(suffix: String): Long =
-      m1.collect { case (k, v) if k.endsWith(suffix) =>
-        v - m0.getOrElse(k, 0L) }.sum
-    (a, dt, s1 - s0, delta(".dropped_buckets"), delta(".dropped_rows"))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val factors = (if (args.length > 1) args(1) else "1,10,50")
@@ -62,14 +52,10 @@ object CorpusStress {
 
     val base = Tables.load(spark, sfDir, "documents")
 
-    // Copy stride for doc_id remapping: a multiple of 50 and 8, larger
-    // than any base id, so the composition queries' structural splits
-    // (q90's doc_id % 50 eval set, q89's % 8 shards) are IDENTICAL in
-    // every copy — row counts then scale ~linearly with the factor.
-    val stride = 1000000L
-    val maxBaseId = base.agg(max(col("doc_id"))).head.getLong(0)
-    require(maxBaseId < stride,
-      s"base doc_id $maxBaseId >= stride $stride: copies would collide")
+    // StressData's copy stride preserves the composition queries'
+    // structural splits (q90's doc_id % 50 eval set, q89's % 8 shards)
+    // in every copy — row counts then scale ~linearly with the factor.
+    val stride = StressData.Stride
 
     // factor-1 reference values for the r9-family exact-linearity
     // invariants (token-disjoint copies ⇒ counts replicate per copy)
@@ -82,37 +68,27 @@ object CorpusStress {
 
     factors.foreach { f =>
       val dirX = s"$outBase/x$f"
-      val path = s"$dirX/documents.parquet"
-      val corpus: DataFrame =
-        if (f == 1) base
-        else base.crossJoin(spark.range(f).select(col("id").as("cp")))
-          .select(
-            (col("doc_id") + col("cp") * stride).as("doc_id") +:
-            when(col("cp") === 0, col("text"))
-              .otherwise(concat_ws(" ", transform(split(col("text"), " "),
-                t => concat(t, lit("~"), col("cp"))))).as("text") +:
-            base.columns.filterNot(c => c == "doc_id" || c == "text")
-              .map(col).toSeq: _*)
-      // many splits, like a real ×N table (the crossJoin plan funnels
-      // into the source scan's 1-2 partitions; a one-file corpus gives
-      // every measured op a 1-partition scan — see TailStress note)
-      corpus.repartition(Tables.cpus, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite").parquet(path)
-      val docs = Tables.read(spark, path)
+      val docs = StressData.writeSplits(StressData.replicateDocuments(base, f),
+        s"$dirX/documents.parquet", "doc_id")
       val n = docs.count()
+      val out = new Metrics.Report(spark, "factor" -> f, "docs" -> n)
+      // a registered query over the replicated dir, forced and counted
+      def registered(q: String): Long =
+        StressData.forcedRows(SparkEntry.queries(q)(spark, dirX))
 
-      val (r67, t67) = time(
+      out("q67_rows") = out.measure("q67")(
         CorpusOps.boilerplateNgrams(docs, "doc_id", "text").count())
-      val (r71, t71) = time(
+      out("q71_rows") = out.measure("q71")(
         CorpusOps.bigramCrossEntropy(docs, "doc_id", "text").count())
-      val (r74, t74) = time(
+      out("q74_rows") = out.measure("q74")(
         CorpusOps.hashedBowEmbedding(docs, "doc_id", "text").count())
       val withTok = docs.withColumn("n_tok",
         graft.functions.TextFunctions.tokenCount(col("text")).cast("long"))
       val shards = 32 * f // parallelism grows with the corpus
-      val (r70, t70) = time(
+      out("q70_rows") = out.measure("q70")(
         CorpusOps.packGreedy(withTok, "doc_id", "n_tok",
           budget = 256, nShards = shards).count())
+      out("q70_shards") = shards
 
       // q85: Bloom cross-corpus dedup vs the naive shuffle anti-join —
       // the naive run doubles as the EXACTNESS oracle at every factor
@@ -127,11 +103,12 @@ object CorpusStress {
       val baseMod = pmod(pmod(col("doc_id"), lit(stride)), lit(5))
       val ref = docs.filter(baseMod === 0)
       val corp = docs.filter(baseMod =!= 0)
-      val (r85, t85) = time(
+      val r85 = out.measure("q85")(
         graft.operators.BloomDedup.dedupAgainstReference(
           corp, ref, headKey, expectedItems = math.max(n / 5, 64L))
           .count())
-      val (rNaive, tNaive) = time(
+      out("q85_rows") = r85
+      val rNaive = out.measure("q85_naive")(
         corp.withColumn("__k", headKey)
           .join(ref.select(headKey.as("__k")), Seq("__k"), "left_anti")
           .count())
@@ -145,15 +122,15 @@ object CorpusStress {
       // structural splits, so outputs stay per-copy-identical in
       // shape and row counts scale ~linearly (hash gates modulate the
       // exact counts per remapped id).
-      val (r48, t48, sk48, cb48, cr48) = timeGuarded(
-        SparkEntry.queries("q48_clean_pipeline")(spark, dirX).count())
-      val (r90, t90, sk90, cb90, cr90) = timeGuarded(
-        SparkEntry.queries("q90_pretraining_program")(spark, dirX).count())
+      out("q48_rows") = out.measure("q48", guarded = true)(
+        registered("q48_clean_pipeline"))
+      out("q90_rows") = out.measure("q90", guarded = true)(
+        registered("q90_pretraining_program"))
       // q91 rides the replicated dir too: source columns are carried,
       // so the ref/corpus split is intact, and token-disjoint copies
       // keep cross-corpus matches within-copy → flags scale linearly
-      val (r91, t91, sk91, cb91, cr91) = timeGuarded(
-        SparkEntry.queries("q91_crosscorpus_neardup")(spark, dirX).count())
+      out("q91_rows") = out.measure("q91", guarded = true)(
+        registered("q91_crosscorpus_neardup"))
 
       // q103/q105 (r7): substring-granularity dedup at scale. The
       // window/gram explosion makes these the widest scans in the
@@ -162,10 +139,10 @@ object CorpusStress {
       // span counts and pair counts must scale linearly with the
       // factor, and the winnowing boilerplate cap is the observable
       // guard under replication-driven fingerprint heat.
-      val (r103, t103, sk103, cb103, cr103) = timeGuarded(
-        SparkEntry.queries("q103_dup_spans")(spark, dirX).count())
-      val (r105, t105, sk105, cb105, cr105) = timeGuarded(
-        SparkEntry.queries("q105_winnow_neardup")(spark, dirX).count())
+      out("q103_rows") = out.measure("q103", guarded = true)(
+        registered("q103_dup_spans"))
+      out("q105_rows") = out.measure("q105", guarded = true)(
+        registered("q105_winnow_neardup"))
 
       // q108/q109/q110 (r7 continuation): classifier + sketches at
       // scale. Token-disjoint copies mean every copy's label-token
@@ -176,8 +153,9 @@ object CorpusStress {
       // FIXED-SIZE as the corpus grows — asserted at every factor —
       // and the HLL estimate must track the ×f distinct growth
       // inside its 3-sigma band.
-      val (r108, t108, sk108, cb108, cr108) = timeGuarded(
-        SparkEntry.queries("q108_nb_classify")(spark, dirX).count())
+      val r108 = out.measure("q108", guarded = true)(
+        registered("q108_nb_classify"))
+      out("q108_rows") = r108
       require(r108 == n, s"NB classify not total at factor $f: $r108 vs $n")
       val grams3 = docs
         .withColumn("_t", split(col("text"), " "))
@@ -187,18 +165,22 @@ object CorpusStress {
               element_at(col("_t"), i + 1), element_at(col("_t"), i + 2))))
           .otherwise(array().cast("array<string>"))).as("gram"))
         .groupBy("gram").agg(count(lit(1)).as("cnt"))
-      val (rCms, tCms) = time(
+      val rCms = out.measure("cms")(
         graft.operators.Sketches.countMin(grams3, "gram", "cnt", 4, 2048)
           .count())
+      out("cms_cells") = rCms
       require(rCms <= 4 * 2048,
         s"CMS frame grew past depth*width at factor $f: $rCms")
-      val (hll, tHll) = time {
+      val hll = out.measure("hll") {
         val regs = graft.operators.Sketches.hllRegisters(grams3, "gram", 1024)
         val est = graft.operators.Sketches.hllEstimate(regs, 1024)
           .select(col("registers_used"), col("est")).head
         (est.getLong(0), est.getDouble(1))
       }
       val nGrams = grams3.count()
+      out("hll_regs") = hll._1
+      out("hll_est") = hll._2
+      out("ngrams_exact") = nGrams
       require(hll._1 <= 1024,
         s"HLL register frame grew past m at factor $f: ${hll._1}")
       require(math.abs(hll._2 - nGrams) <= 3 * 1.04 / 32.0 * nGrams,
@@ -214,7 +196,7 @@ object CorpusStress {
         val tot = oneClass.agg(sum(col("n_tok"))).head.getLong(0)
         math.max(tot / 2, 1L)
       }
-      val (r95, t95) = time(
+      val r95 = out.measure("q95")(
         CorpusOps.tokenBudgetSample(oneClass, "doc_id", "n_tok", "cls",
           budget95).count())
       val wNaive = org.apache.spark.sql.expressions.Window
@@ -223,10 +205,11 @@ object CorpusStress {
           col("doc_id"))
         .rowsBetween(
           org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val (r95n, t95n) = time(
+      val r95n = out.measure("q95_naive")(
         oneClass.withColumn("_run",
             coalesce(sum(col("n_tok")).over(wNaive), lit(0L)))
           .filter(col("_run") < budget95).count())
+      out("q95_rows") = r95
       require(r95 == r95n,
         s"token-budget decomposition diverged at factor $f: $r95 vs $r95n")
 
@@ -235,13 +218,13 @@ object CorpusStress {
       // token-disjoint copies confine every posting join within its
       // copy — so each query still fills its top-10 from its own
       // copy's candidates and hits scale exactly linearly.
-      val (r119, t119, sk119, cb119, cr119) = timeGuarded(
-        SparkEntry.queries("q119_bm25_topk")(spark, dirX).count())
+      val r119 = out.measure("q119", guarded = true)(
+        registered("q119_bm25_topk"))
+      out("q119_rows") = r119
       val nq119 = docs.filter(col("doc_id") % 50 === 7).count()
       require(r119 == 10 * nq119,
         s"bm25 hits not linear at factor $f: $r119 vs ${10 * nq119}")
-      val (r127, t127) = time(
-        SparkEntry.queries("q127_token_entropy")(spark, dirX).count())
+      val r127 = out.measure("q127")(registered("q127_token_entropy"))
       require(r127 == n, s"entropy not total at factor $f: $r127 vs $n")
 
       // q126's operator on an f×-replicated click graph: per-copy
@@ -252,7 +235,7 @@ object CorpusStress {
         .select(col("user_id"),
           get_json_object(col("props"), "$.k").cast("long").as("k"))
         .filter(col("k").isNotNull)
-        .crossJoin(spark.range(f).select(col("id").as("cp")))
+        .crossJoin(StressData.copies(spark, f))
       val fwdG = evG.select(
         concat(lit("u"), col("cp"), lit("_"), col("user_id")).as("src"),
         concat(lit("i"), col("cp"), lit("_"), col("k")).as("dst"))
@@ -260,8 +243,9 @@ object CorpusStress {
       val edgesG = fwdG.unionByName(
         fwdG.select(col("dst").as("src"), col("src").as("dst")))
       val nNodesG = edgesG.select(col("src")).distinct().count()
-      val (rPr, tPr) = time(
+      val rPr = out.measure("pr")(
         graft.operators.GraphRank.pageRank(edgesG, iters = 5).count())
+      out("pr_nodes") = rPr
       require(rPr == nNodesG,
         s"pagerank lost nodes at factor $f: $rPr vs $nNodesG")
 
@@ -277,16 +261,17 @@ object CorpusStress {
       // the action must READ avg_sb: a bare count() on the total left
       // join lets Catalyst eliminate the unique-keyed scoring join
       // entirely (measured: 0.2 s at every factor — timing nothing)
-      val (r136, t136) = time {
+      val r136 = out.measure("q136") {
         val r = graft.operators.LanguageModel.stupidBackoff(
             lmTrain, docs, "doc_id", "text")
           .agg(count(lit(1)), sum(col("avg_sb"))).head
         r.getLong(0)
       }
+      out("q136_rows") = r136
       require(r136 == n, s"LM scoring not total at factor $f: $r136 vs $n")
       val evL = Tables.load(spark, sfDir, "events")
         .select(col("user_id"), col("event_type"))
-        .crossJoin(spark.range(f).select(col("id").as("cp")))
+        .crossJoin(StressData.copies(spark, f))
       val seedsG = evL.filter(col("user_id") % 4 === 0)
         .groupBy(col("cp"), col("user_id"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))
@@ -297,14 +282,15 @@ object CorpusStress {
         .filter(col("rn") === 1)
         .select(concat(lit("u"), col("cp"), lit("_"), col("user_id"))
           .as("node"), col("event_type").as("label"))
-      val (lp, tLp) = time {
-        val out = graft.operators.GraphRank
+      val lp = out.measure("lp") {
+        val labeled = graft.operators.GraphRank
           .labelPropagate(edgesG, seedsG, iters = 3)
           .withColumn("cpp", split(col("node"), "_").getItem(0))
-        val perCopy = out.groupBy(col("cpp")).agg(count(lit(1)).as("c"))
+        val perCopy = labeled.groupBy(col("cpp")).agg(count(lit(1)).as("c"))
           .select(col("c")).distinct().collect().map(_.getLong(0))
-        (out.count(), perCopy)
+        (labeled.count(), perCopy)
       }
+      out("lp_labeled") = lp._1
       require(lp._2.length <= 2, // "uN"/"iN" prefixes may differ; per
         // prefix-class the count must replicate across copies
         s"label prop per-copy counts diverge at factor $f: ${lp._2.toSeq}")
@@ -322,10 +308,11 @@ object CorpusStress {
         if (f == 1) baseCounts(key) = v
         else baseCounts.get(key).foreach(b => require(v == b * f,
           s"$key not linear at factor $f: $v vs ${b * f}"))
-      val (r164, t164, sk164, cb164, cr164) = timeGuarded(
-        SparkEntry.queries("q164_containment_dedup")(spark, dirX).count())
+      val r164 = out.measure("q164", guarded = true)(
+        registered("q164_containment_dedup"))
+      out("q164_pairs") = r164
       linear("q164_pairs", r164)
-      val (curve166, t166) = time(
+      val curve166 = out.measure("q166")(
         SparkEntry.queries("q166_repeated_spans")(spark, dirX)
           .collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
@@ -338,10 +325,11 @@ object CorpusStress {
           require(maxRep == b,
             s"q166 L$level max_repeat drifted at factor $f: $maxRep vs $b"))
       }
-      val (r170, t170) = time(
-        SparkEntry.queries("q170_exact_substr_spans")(spark, dirX).count())
+      out("q166_dup_positions") = curve166.map(_._3).sum
+      val r170 = out.measure("q170")(registered("q170_exact_substr_spans"))
+      out("q170_spans") = r170
       linear("q170_spans", r170)
-      val (sel161, t161) = time {
+      val sel161 = out.measure("q161") {
         val r = SparkEntry.queries("q161_dsir_select")(spark, dirX)
           .agg(count(lit(1)).as("n"),
             sum(when(col("selected"), 1L).otherwise(0L)).as("sel")).head
@@ -351,12 +339,14 @@ object CorpusStress {
         s"DSIR scoring not total at factor $f: ${sel161._1} vs $n")
       require(sel161._2 >= (n * 15) / 100 && sel161._2 <= (n * 35) / 100,
         s"DSIR p80 gate selected ${sel161._2} of $n at factor $f")
-      val (adj168, t168) = time {
+      out("q161_selected") = sel161._2
+      val adj168 = out.measure("q168") {
         val media = graft.multimodal.ImageHash.dhashFixture(docs)
         graft.multimodal.ImageHash.nearDuplicatePairs(
             graft.multimodal.ImageHash.dhash(media), maxHamming = 7)
           .filter(col("doc_b") - col("doc_a") === 1).count()
       }
+      out("q168_adjacent_pairs") = adj168
       linear("q168_adjacent_pairs", adj168)
 
       // r10 family: KS drift, dup-graph triangles, Zipf fit,
@@ -371,14 +361,14 @@ object CorpusStress {
       // 4-decimal ln rounding) while the intercept shifts by ln f;
       // decreasing packing must hold its fill ratio as shards absorb
       // f× tokens.
-      val (ks174, t174) = time(
+      val ks174 = out.measure("q174")(
         SparkEntry.queries("q174_ks_drift")(spark, dirX).collect()
           .map(r => (r.getString(0), r.getDouble(2), r.getLong(3)))
           .sortBy(_._1).toSeq)
       if (f == 1) baseKs = ks174
       else require(ks174 == baseKs,
         s"KS stats not factor-invariant at $f:\n$ks174\nvs\n$baseKs")
-      val (tri175, t175) = time {
+      val tri175 = out.measure("q175") {
         val r = SparkEntry.queries("q175_dup_triangles")(spark, dirX)
           .agg(count(lit(1)).as("nodes"),
             sum(col("triangles")).as("tri"),
@@ -387,12 +377,13 @@ object CorpusStress {
       }
       linear("q175_nodes", tri175._1)
       linear("q175_triangles", tri175._2)
+      out("q175_triangles") = tri175._2
       linear("q175_degree_sum", tri175._3)
       // Zipf: the ×f-scaled count table must fit the same slope —
       // computed directly on the scaled top-k frame (no second
       // corpus write needed; the property under test is the fit's
       // invariance to uniform scaling)
-      val (zf, t177) = time {
+      val zf = out.measure("q177") {
         val top = CorpusOps.topNgrams(docs, "text", n = 1, k = 100)
         val s1 = graft.queries.StatQueries.zipfFit(top).head
         val sf = graft.queries.StatQueries.zipfFit(
@@ -404,7 +395,7 @@ object CorpusStress {
         s"Zipf slope not scale-invariant at $f: ${zf._2} vs ${zf._1}")
       require(math.abs(zf._4 - (zf._3 + math.log(f.toDouble))) < 0.02,
         s"Zipf intercept must shift by ln f at $f: ${zf._4}")
-      val (pk181, t181) = time {
+      val pk181 = out.measure("q181") {
         val packed = CorpusOps.packGreedy(withTok, "doc_id", "n_tok",
           budget = 256, nShards = shards, decreasing = true)
         val r = packed.groupBy(col("shard"))
@@ -415,6 +406,7 @@ object CorpusStress {
         (r.getLong(0), r.getLong(1))
       }
       val fill181 = pk181._2.toDouble / (pk181._1 * 256L)
+      out("q181_fill") = fill181
       if (f == 1) baseFill = fill181
       else require(math.abs(fill181 - baseFill) < 0.02,
         s"decreasing-pack fill ratio drifted at $f: $fill181 vs $baseFill")
@@ -427,7 +419,7 @@ object CorpusStress {
       // — the q177 slope-invariance pattern on the Heaps axes. The
       // cum frame itself is timed on the replicated corpus (the real
       // ×f token explode + first-occurrence exchange).
-      val (hb, t182) = time {
+      val hb = out.measure("q182") {
         val cum = graft.queries.StatQueries.heapsCum(spark, docs)
           .localCheckpoint(eager = false)
         val b1 = graft.queries.StatQueries.heapsFit(cum)
@@ -440,6 +432,7 @@ object CorpusStress {
       }
       require(math.abs(hb._2 - hb._1) < 0.01,
         s"Heaps beta not scale-invariant at $f: ${hb._2} vs ${hb._1}")
+      out("q182_beta") = hb._1
 
       // q183 funnel on a PURE-duplication corpus (identical payload
       // per copy, remapped ids): stages 0-2 are per-doc gates, so
@@ -449,12 +442,9 @@ object CorpusStress {
       // the collapsed set — stages 3-4 equal the base values at every
       // factor. This is the semantic point of a funnel at 100 TB: f×
       // duplicated input, base-sized curated output.
-      val pureDup: DataFrame =
-        if (f == 1) base
-        else base.crossJoin(spark.range(f).select(col("id").as("cp")))
-          .select((col("doc_id") + col("cp") * stride).as("doc_id") +:
-            base.columns.filterNot(_ == "doc_id").map(col).toSeq: _*)
-      val (fun, t183) = time(
+      val pureDup = StressData.replicateDocuments(base, f,
+        disjointTokens = false)
+      val fun = out.measure("q183")(
         graft.queries.StatQueries.curationFunnel(pureDup)
           .select(col("stage"), col("docs")).collect()
           .map(r => (r.getInt(0), r.getLong(1))).toMap)
@@ -466,12 +456,13 @@ object CorpusStress {
           require(fun(st) == b,
             s"funnel stage $st must collapse to base at $f: ${fun(st)} vs $b"))
       }
+      out("q183_survivors") = fun(4)
 
       // q194 lineage on the same pure-dup corpus: the per-doc reasons
       // must reproduce the funnel's stage deltas EXACTLY at every
       // factor — the partition identity is the operator's contract,
       // so it is the thing to stress, not just the base-scale gate.
-      val (rr, t194) = time(
+      val rr = out.measure("q194")(
         graft.queries.StatQueries.rejectionReasons(pureDup)
           .groupBy("reason").count().collect()
           .map(r => r.getString(0) -> r.getLong(1)).toMap)
@@ -482,12 +473,13 @@ object CorpusStress {
         rn("near_dup") == fun(3) - fun(4) &&
         rn("kept") == fun(4),
         s"q194 reasons must reproduce funnel deltas at $f: $rr vs $fun")
+      out("q194_kept") = rn("kept")
 
       // q196 manifest on the replicated corpus: the per-source
       // consumed-tokens bound (alloc ≤ consumed < alloc + max doc)
       // must hold at every factor — the water level and the
       // fractional prefix both move with ×f, the contract doesn't.
-      val (m196, t196) = time {
+      val m196 = out.measure("q196") {
         val dd = pureDup.select(col("doc_id"), col("source"),
           size(split(col("text"), " ")).cast("long").as("n_tok"))
         val tok = dd.groupBy(col("source"))
@@ -514,11 +506,12 @@ object CorpusStress {
       }
       require(m196._2 == 0,
         s"q196 consumed-token bound violated at $f")
+      out("q196_rows") = m196._1
 
       // q197 card on the replicated corpus: distinct fingerprints are
       // invariant under pure duplication, so the dup rate must equal
       // 1 − n_fp_base/(f·N) EXACTLY at every factor.
-      val (card, t197) = time {
+      val card = out.measure("q197") {
         val c = pureDup.select(
             graft.functions.TextFunctions
               .fingerprintMd5(col("text")).as("fp"))
@@ -533,6 +526,7 @@ object CorpusStress {
         require(card._2 == b,
           s"q197 distinct fingerprints must be duplication-invariant" +
             s" at $f: ${card._2} vs $b"))
+      out("q197_nfp") = card._2
 
       // q198/q199 policy tables on the pure-duplication corpus (r11
       // verdict #2): the REGISTERED plans run verbatim against the
@@ -551,12 +545,9 @@ object CorpusStress {
       //     alpha/unimax shares to 5e-6 (the 6-decimal ln/exp rounds
       //     and the integral τ division do not scale bit-exactly).
       val pureDirX = s"$outBase/puredup_x$f"
-      pureDup.repartition(Tables.cpus, org.apache.spark.sql.functions.col("doc_id"))
-        .write.mode("overwrite")
-        .parquet(s"$pureDirX/documents.parquet")
-      val nDup = Tables.read(spark, s"$pureDirX/documents.parquet")
-        .count()
-      val (mix, t198) = time(
+      val nDup = StressData.writeSplits(pureDup,
+        s"$pureDirX/documents.parquet", "doc_id").count()
+      val mix = out.measure("q198")(
         SparkEntry.queries("q198_mixture_compare")(spark, pureDirX)
           .collect()
           .map(r => r.getString(0) -> ((r.getLong(1), r.getDouble(2),
@@ -582,7 +573,7 @@ object CorpusStress {
               s"at $f: $v vs $b")
         }
       }
-      val (sav, t199) = time(
+      val sav = out.measure("q199")(
         SparkEntry.queries("q199_dedup_savings")(spark, pureDirX)
           .collect()
           .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2))))
@@ -602,6 +593,9 @@ object CorpusStress {
           s"q199 containment drops must vanish at f=$f " +
             s"(df window [2,5]): docs=$cd tokens=$ct")
       }
+      out("q199_exact_drops") = exD
+      out("q199_minhash_drops") = sav("minhash_0.8")._1
+      out("q199_containment_drops") = sav("containment_0.5")._1
 
       // q186/q187 segmentation under PAYLOAD replication: the base
       // corpus's WAV/Y4M payloads replicate per copy (ids remapped),
@@ -609,21 +603,19 @@ object CorpusStress {
       // payloads must yield identical per-doc segments — counts
       // exactly linear.
       def replicateMedia(m: DataFrame): DataFrame =
-        if (f == 1) m
-        else m.crossJoin(spark.range(f).select(col("id").as("cp")))
-          .select((col("doc_id") + col("cp") * stride).as("doc_id"),
-            col("modality"), col("payload"))
-      val (r186, t186) = time(
+        StressData.replicateDocuments(m, f, disjointTokens = false)
+      val audio = replicateMedia(graft.multimodal.Multimodal.audioFixture(base))
+      val r186 = out.measure("q186")(
         graft.multimodal.Segmentation.audioSegments(
-          graft.multimodal.Multimodal.audioFrameFeatures(
-            replicateMedia(graft.multimodal.Multimodal.audioFixture(base)),
+          graft.multimodal.Multimodal.audioFrameFeatures(audio,
             frameLen = 64).toDF()).count())
+      out("q186_segments") = r186
       linear("q186_segments", r186)
-      val (r187, t187) = time(
+      val video = replicateMedia(graft.multimodal.Multimodal.videoFixture(base))
+      val r187 = out.measure("q187")(
         graft.multimodal.Segmentation.videoScenes(
-          graft.multimodal.Multimodal.videoFrameStats(
-            replicateMedia(graft.multimodal.Multimodal.videoFixture(base)))
-            .toDF()).count())
+          graft.multimodal.Multimodal.videoFrameStats(video).toDF()).count())
+      out("q187_scenes") = r187
       linear("q187_scenes", r187)
 
       // q189 CDC at scale: apply ∘ diff = identity on the replicated
@@ -631,7 +623,7 @@ object CorpusStress {
       // content fingerprint (doc_id unique on both sides, so the
       // keyed join counting equal-(id, fp) rows IS the identity).
       import graft.operators.SnapshotDiff
-      val (cdc, t189) = time {
+      val cdc = out.measure("q189") {
         val d0 = docs.select(col("doc_id"), col("text"), col("lang"),
           col("source"))
         val v2 = d0.filter(col("doc_id") % 7 =!= 0)
@@ -663,11 +655,12 @@ object CorpusStress {
       require(cdc._1 == cdc._2 && cdc._2 == cdc._3,
         s"CDC round-trip broken at factor $f: v2=${cdc._1} " +
           s"rebuilt=${cdc._2} matched=${cdc._3}")
+      out("q189_rows") = cdc._1
 
       // q189 small-delta CDC: the contract's normal case (delta ≪
       // corpus — ~0.05% here) on the BROADCAST path: corpus text must
       // never hit a hash exchange while the round-trip identity holds.
-      val (cdcS, t189s) = time {
+      val cdcS = out.measure("q189_small") {
         val d0 = docs.select(col("doc_id"), col("text"), col("lang"),
           col("source"))
         val v2 = d0.filter(col("doc_id") % 9973 =!= 0)
@@ -687,12 +680,13 @@ object CorpusStress {
       require(cdcS._1 == cdcS._2 && cdcS._2 == cdcS._3,
         s"small-delta CDC round-trip broken at factor $f: " +
           s"v2=${cdcS._1} rebuilt=${cdcS._2} matched=${cdcS._3}")
+      out("q189_small_rows") = cdcS._1
 
       // q192 postings maintenance at scale: the updated inverted
       // index must equal a full re-tokenization of v2 row-for-row
       // ((doc_id, dl, term, tf) join-checked) — evictions, carried
       // rows and fresh postings all covered as the corpus grows.
-      val (p192, t192) = time {
+      val p192 = out.measure("q192") {
         val d0 = docs.select(col("doc_id"), col("text"))
         val v2 = d0.filter(col("doc_id") % 23 =!= 0)
           .withColumn("text", when(col("doc_id") % 9 === 0,
@@ -718,62 +712,8 @@ object CorpusStress {
         s"postings maintenance diverged from re-index at factor $f: " +
           s"upd=${p192._1} reb=${p192._2} match=${p192._3}")
 
-      println(s"""{"factor":$f,"docs":$n,""" +
-        s""""q164_sec":$t164,"q164_pairs":$r164,""" +
-        s""""q164_aqe_skew_splits":$sk164,""" +
-        s""""q164_cap_buckets":$cb164,"q164_cap_rows":$cr164,""" +
-        s""""q166_sec":$t166,""" +
-        s""""q166_dup_positions":${curve166.map(_._3).sum},""" +
-        s""""q170_sec":$t170,"q170_spans":$r170,""" +
-        s""""q161_sec":$t161,"q161_selected":${sel161._2},""" +
-        s""""q168_sec":$t168,"q168_adjacent_pairs":$adj168,""" +
-        s""""q174_sec":$t174,""" +
-        s""""q175_sec":$t175,"q175_triangles":${tri175._2},""" +
-        s""""q177_sec":$t177,""" +
-        s""""q181_sec":$t181,"q181_fill":$fill181,""" +
-        s""""q182_sec":$t182,"q182_beta":${hb._1},""" +
-        s""""q183_sec":$t183,"q183_survivors":${fun(4)},""" +
-        s""""q194_sec":$t194,"q194_kept":${rn("kept")},""" +
-        s""""q196_sec":$t196,"q196_rows":${m196._1},""" +
-        s""""q197_sec":$t197,"q197_nfp":${card._2},""" +
-        s""""q198_sec":$t198,"q199_sec":$t199,""" +
-        s""""q199_exact_drops":$exD,""" +
-        s""""q199_minhash_drops":${sav("minhash_0.8")._1},""" +
-        s""""q199_containment_drops":${sav("containment_0.5")._1},""" +
-        s""""q186_sec":$t186,"q186_segments":$r186,""" +
-        s""""q187_sec":$t187,"q187_scenes":$r187,""" +
-        s""""q189_sec":$t189,"q189_rows":${cdc._1},""" +
-        s""""q189_small_sec":$t189s,"q189_small_rows":${cdcS._1},""" +
-        s""""q192_sec":$t192,"q192_rows":${p192._1},""" +
-        s""""q67_sec":$t67,"q67_rows":$r67,""" +
-        s""""q71_sec":$t71,"q71_rows":$r71,""" +
-        s""""q74_sec":$t74,"q74_rows":$r74,""" +
-        s""""q70_sec":$t70,"q70_rows":$r70,"q70_shards":$shards,""" +
-        s""""q85_sec":$t85,"q85_rows":$r85,"q85_naive_sec":$tNaive,""" +
-        s""""q48_sec":$t48,"q48_rows":$r48,"q48_aqe_skew_splits":$sk48,""" +
-        s""""q48_cap_buckets":$cb48,"q48_cap_rows":$cr48,""" +
-        s""""q90_sec":$t90,"q90_rows":$r90,"q90_aqe_skew_splits":$sk90,""" +
-        s""""q90_cap_buckets":$cb90,"q90_cap_rows":$cr90,""" +
-        s""""q91_sec":$t91,"q91_rows":$r91,"q91_aqe_skew_splits":$sk91,""" +
-        s""""q91_cap_buckets":$cb91,"q91_cap_rows":$cr91,""" +
-        s""""q103_sec":$t103,"q103_rows":$r103,"q103_aqe_skew_splits":$sk103,""" +
-        s""""q103_cap_buckets":$cb103,"q103_cap_rows":$cr103,""" +
-        s""""q105_sec":$t105,"q105_rows":$r105,"q105_aqe_skew_splits":$sk105,""" +
-        s""""q105_cap_buckets":$cb105,"q105_cap_rows":$cr105,""" +
-        s""""q108_sec":$t108,"q108_rows":$r108,""" +
-        s""""q108_aqe_skew_splits":$sk108,""" +
-        s""""q108_cap_buckets":$cb108,"q108_cap_rows":$cr108,""" +
-        s""""cms_sec":$tCms,"cms_cells":$rCms,""" +
-        s""""hll_sec":$tHll,"hll_regs":${hll._1},"hll_est":${hll._2},""" +
-        s""""ngrams_exact":$nGrams,""" +
-        s""""q95_sec":$t95,"q95_naive_sec":$t95n,"q95_rows":$r95,""" +
-        s""""q119_sec":$t119,"q119_rows":$r119,""" +
-        s""""q119_aqe_skew_splits":$sk119,""" +
-        s""""q119_cap_buckets":$cb119,"q119_cap_rows":$cr119,""" +
-        s""""q127_sec":$t127,""" +
-        s""""pr_sec":$tPr,"pr_nodes":$rPr,""" +
-        s""""q136_sec":$t136,"q136_rows":$r136,""" +
-        s""""lp_sec":$tLp,"lp_labeled":${lp._1}}""")
+      out("q192_rows") = p192._1
+      println(out.json)
     }
     spark.stop()
   }

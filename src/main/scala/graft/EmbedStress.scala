@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
-import graft.Metrics.time
 
 /** Scale-stress for the embedding near-dup LSH path (q45's operator)
   * with MEASURABLE ground truth: replicate the sf0.1 embeddings N×
@@ -39,11 +38,9 @@ object EmbedStress {
       .select(col("vec_id").as("oid"), col("embedding").as("v"))
 
     factors.foreach { f =>
-      val copies = base.crossJoin(spark.range(f).toDF("cp"))
+      val copies = base.crossJoin(StressData.copies(spark, f))
       // per-copy ±1 diagonal: orthogonal, deterministic
-      val flip = transform(col("v"), (x, i) =>
-        (x * when(pmod(xxhash64(col("cp"), i), lit(2)) === 0, lit(1.0f))
-          .otherwise(lit(-1.0f))).cast("float"))
+      val flip = StressData.signFlip(col("v"), col("cp"))
       val srcs = copies.select(
         ((col("oid") * f + col("cp")) * 2).as("id"), flip.as("vec"))
       val twins = copies.filter(col("oid") % 25 === 0)
@@ -53,27 +50,27 @@ object EmbedStress {
               (pmod(xxhash64(col("oid"), col("cp"), i, lit(7)), lit(1000))
                 .cast("double") / 500.0 - 1.0).cast("float") * lit(0.4f)))
               .cast("float")).as("vec"))
-      val path = s"$outBase/emb_x$f"
-      // many splits, like a real ×N table (see TailStress note)
-      srcs.union(twins).repartition(Tables.cpus, org.apache.spark.sql.functions.col("id"))
-        .write.mode("overwrite").parquet(path)
-      val corpus = Tables.read(spark, path)
+      val corpus = StressData.writeSplits(srcs.union(twins),
+        s"$outBase/emb_x$f", "id")
       val n = corpus.count()
       val nTwins = corpus.filter(col("id") % 2 === 1).count()
+      val out = new Metrics.Report(spark, "factor" -> f, "vectors" -> n,
+        "planted" -> nTwins)
 
-      val (pairs, sec) = time {
-        Similarity.lshNearDupPairs(corpus, threshold = 0.9, dim = 64,
+      val ((pairs, found), lsh) = Metrics.measure(spark) {
+        val p = Similarity.lshNearDupPairs(corpus, threshold = 0.9, dim = 64,
           bitsPerTable = 14, numTables = 24, maxBucketSize = 2000)
           .cache()
+        (p, p.count())
       }
-      // trigger + stats inside the timed region would double-count the
-      // cache; count() here is the action the timer wraps via cache+count
-      val (found, secCount) = time(pairs.count())
       val planted = pairs
         .filter(col("id_b") === col("id_a") + 1 && col("id_a") % 2 === 0)
         .count()
       pairs.unpersist()
-      val recall = planted.toDouble / nTwins
+      out.sec("sec", lsh)
+      out("found") = found
+      out("planted_found") = planted
+      out("recall") = planted.toDouble / nTwins
 
       // q82 path at scale: int8-quantized candidate scan + exact
       // rescoring, 20 fixed twin-SOURCE queries (copy 0 of every 25th
@@ -84,7 +81,7 @@ object EmbedStress {
         pmod(col("id") / 2, lit(f)) === 0 &&
         pmod((col("id") / 2) / f, lit(25)) === 0)
       val nQ = twinSources.count()
-      val (qHits, qSec) = time {
+      val qHits = out.measure("q82") {
         Similarity.quantizedTopK(corpus, twinSources, k = 1)
           .filter(col("neighbor_id") === col("query_id") + 1)
           .count()
@@ -103,7 +100,7 @@ object EmbedStress {
         .localCheckpoint(eager = false)
       val qProj = projVecs
         .join(twinSources.select(col("id")), Seq("id"))
-      val (pHits, pSec) = time {
+      val pHits = out.measure("proj") {
         Similarity.bruteForceTopK(projVecs, qProj, k = 1)
           .filter(col("neighbor_id") === col("query_id") + 1)
           .count()
@@ -114,7 +111,7 @@ object EmbedStress {
       // with every cluster non-empty — the structural invariant the
       // fixed-point arithmetic must preserve under AQE/repartition as
       // the corpus grows.
-      val (km, kmSec) = time {
+      val km = out.measure("kmeans") {
         val sizes = graft.operators.KMeansExact
           .assign(corpus, "id", "vec", k = 8, iters = 3)
           .groupBy(col("cluster")).agg(count(lit(1)).as("c"))
@@ -135,7 +132,7 @@ object EmbedStress {
       // (the margin is what's under test, not codebook polish);
       // nProbe of 8/32 lists keeps the probe fraction constant as the
       // corpus grows.
-      val (ivfpqHits, ivfpqSec) = time {
+      val ivfpqHits = out.measure("ivfpq") {
         val pqCorpus = corpus.select(col("id"), col("vec"))
         val idx = Similarity.IvfIndex.build(pqCorpus, nLists = 32)
         val (codebook, codes) = graft.operators.ProductQuant.build(
@@ -159,7 +156,7 @@ object EmbedStress {
       // quantizer); v2 is the q191 re-crawl shape. Both paths are
       // timed so the delta-proportional claim is measured against the
       // rebuild it replaces.
-      val (cdcOk, cdcSec) = time {
+      val cdcOk = out.measure("ivfcdc") {
         val v1 = corpus.select(col("id"), col("vec"))
         val model = graft.operators.KMeansExact
           .fitModel(v1, "id", "vec", k = 8, iters = 2)
@@ -186,15 +183,13 @@ object EmbedStress {
       require(cdcOk._1,
         s"CDC index maintenance diverged from rebuild at factor $f")
 
-      println(s"""{"factor":$f,"vectors":$n,"planted":$nTwins,""" +
-        s""""sec":${sec + secCount},"found":$found,"planted_found":$planted,""" +
-        s""""recall":$recall,""" +
-        s""""q82_queries":$nQ,"q82_sec":$qSec,""" +
-        s""""q82_recall1":${qHits.toDouble / nQ},""" +
-        s""""proj_sec":$pSec,"proj_recall1":${pHits.toDouble / nQ},""" +
-        s""""kmeans_sec":$kmSec,"kmeans_rows":${km._1},""" +
-        s""""ivfpq_sec":$ivfpqSec,"ivfpq_recall1":${ivfpqHits.toDouble / nQ},""" +
-        s""""ivfcdc_sec":$cdcSec,"ivfcdc_rows":${cdcOk._2}}""")
+      out("q82_queries") = nQ
+      out("q82_recall1") = qHits.toDouble / nQ
+      out("proj_recall1") = pHits.toDouble / nQ
+      out("kmeans_rows") = km._1
+      out("ivfpq_recall1") = ivfpqHits.toDouble / nQ
+      out("ivfcdc_rows") = cdcOk._2
+      println(out.json)
     }
     spark.stop()
   }

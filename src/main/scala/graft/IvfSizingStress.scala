@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
-import graft.Metrics.time
 
 /** The nLists sizing lever, measured (round-12 follow-through on the
   * TailStress ×50 finding): q169's margin alignment probes a shared
@@ -95,11 +94,10 @@ object IvfSizingStress {
     // null-safe read of the exact-anchor aggregation (advisor r13:
     // on a corpus where the 1/101 sample is empty, avg() is NULL and
     // an unguarded getDouble dies with an NPE after the expensive
-    // build/probe work). Emits NaN → printed as "null" in the JSON.
+    // build/probe work), rounded to 4 decimals. A NULL reads as NaN,
+    // which the report prints as "null".
     def nsDouble(r: org.apache.spark.sql.Row, i: Int): Double =
-      if (r.isNullAt(i)) Double.NaN else r.getDouble(i)
-    def jnum(d: Double): String =
-      if (d.isNaN) "null" else (math.rint(d * 10000) / 10000).toString
+      if (r.isNullAt(i)) Double.NaN else math.rint(r.getDouble(i) * 10000) / 10000
 
     if (args.length > 2) {
       // ---- probe-sweep mode: fixed nLists (each entry of sizes —
@@ -126,7 +124,8 @@ object IvfSizingStress {
         .split(",").map(_.trim.toInt).toSeq
       import graft.functions.VectorFunctions.{cosineWithNorms, l2Norm, l2Sq}
       sizes.foreach { nLists =>
-        val (idx, tBuild) = time(Similarity.IvfIndex.build(emb, nLists))
+        val (idx, build) = Metrics.measure(spark)(
+          Similarity.IvfIndex.build(emb, nLists))
         def distStructs(v: org.apache.spark.sql.Column) =
           array(idx.centroids.zipWithIndex.map { case (c, i) =>
             struct(l2Sq(v, typedlit(c)).as("d"), lit(i).as("idx"))
@@ -147,7 +146,11 @@ object IvfSizingStress {
             p
           }
           probes.foreach { nProbe =>
-            val (leg, tProbe) = time {
+            val out = new Metrics.Report(spark, "harness" -> "ivf_nprobe",
+              "n" -> n, "n_lists" -> nLists, "n_probe" -> nProbe,
+              "assign_r" -> r, "cost_units" -> nProbe * r)
+            out.sec("build_sec", build)
+            val leg = out.measure("sample_probe") {
               val t = postings match {
                 case None =>
                   idx.topK(sampleQ, k = 1, nProbe,
@@ -180,14 +183,10 @@ object IvfSizingStress {
               .agg(avg(when(col("neighbor_id") === col("exact_id"), 1.0)
                   .otherwise(0.0)).as("r1"),
                 (avg(col("cosine")) / avg(col("exact_cos"))).as("cr")).head
-            println(s"""{"harness":"ivf_nprobe","n":$n,""" +
-              s""""n_lists":$nLists,"n_probe":$nProbe,"assign_r":$r,""" +
-              s""""cost_units":${nProbe * r},""" +
-              s""""build_sec":${math.rint(tBuild * 1000) / 1000},""" +
-              s""""sample_probe_sec":${math.rint(tProbe * 1000) / 1000},""" +
-              s""""sample_n":$nSample,""" +
-              s""""sample_recall1_vs_exact":${jnum(nsDouble(ex, 0))},""" +
-              s""""sample_cos_ratio_vs_exact":${jnum(nsDouble(ex, 1))}}""")
+            out("sample_n") = nSample
+            out("sample_recall1_vs_exact") = nsDouble(ex, 0)
+            out("sample_cos_ratio_vs_exact") = nsDouble(ex, 1)
+            println(out.json)
           }
         }
       }
@@ -199,9 +198,11 @@ object IvfSizingStress {
     // the first size in the list — registry order puts 16 first)
     var base: Option[DataFrame] = None
     sizes.foreach { nLists =>
-      val (idx, tBuild) = time(Similarity.IvfIndex.build(emb, nLists))
       val nProbe = Similarity.IvfIndex.nProbeLaw(nLists)
-      val (res, tProbe) = time {
+      val out = new Metrics.Report(spark, "harness" -> "ivf_sizing",
+        "n" -> n, "n_lists" -> nLists, "n_probe" -> nProbe)
+      val idx = out.measure("build")(Similarity.IvfIndex.build(emb, nLists))
+      val res = out.measure("probe") {
         val m = marginAlign(emb, idx, nProbe).localCheckpoint(eager = false)
         m.count()
         m
@@ -221,16 +222,13 @@ object IvfSizingStress {
         .agg(avg(when(col("match_id") === col("exact_id"), 1.0)
             .otherwise(0.0)).as("r1"),
           (avg(col("cosine")) / avg(col("exact_cos"))).as("cr")).head
-      println(s"""{"harness":"ivf_sizing","n":$n,"n_lists":$nLists,""" +
-        s""""n_probe":$nProbe,""" +
-        s""""build_sec":${math.rint(tBuild * 1000) / 1000},""" +
-        s""""probe_sec":${math.rint(tProbe * 1000) / 1000},""" +
-        s""""queries":${stats.getLong(0)},""" +
-        s""""mean_top1_cos":${math.rint(stats.getDouble(1) * 1e6) / 1e6},""" +
-        s""""top1_agreement_vs_first":${jnum(agree)},""" +
-        s""""sample_n":$nSample,""" +
-        s""""sample_recall1_vs_exact":${jnum(nsDouble(ex, 0))},""" +
-        s""""sample_cos_ratio_vs_exact":${jnum(nsDouble(ex, 1))}}""")
+      out("queries") = stats.getLong(0)
+      out("mean_top1_cos") = math.rint(stats.getDouble(1) * 1e6) / 1e6
+      out("top1_agreement_vs_first") = agree
+      out("sample_n") = nSample
+      out("sample_recall1_vs_exact") = nsDouble(ex, 0)
+      out("sample_cos_ratio_vs_exact") = nsDouble(ex, 1)
+      println(out.json)
     }
     spark.stop()
   }

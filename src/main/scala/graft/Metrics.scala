@@ -1,29 +1,38 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{PartialReducerPartitionSpec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.util.QueryExecutionListener
 
-/** Surfaces `Dataset.observe` metrics (e.g. LSH skew-guard dropped
-  * bucket counts) to stderr after each action — the "counters visible
-  * in logs" requirement, with zero extra jobs.
+/** The engine's one profiler. [[register]] (called by
+  * `Tables.localSession`) installs one [[Listener]], which keeps
+  * process-wide counters and logs to stderr:
+  *   - [[observedSums]]: every numeric field of every `Dataset.observe`
+  *     row, summed per `<metric>.<field>` key (the LshSkew caps'
+  *     `dropped_buckets`/`dropped_rows`), each row also logged as a
+  *     `[graft-metrics]` line;
+  *   - [[aqeSkewSplits]]: the `PartialReducerPartitionSpec`s in the
+  *     final adaptive plans, i.e. the skew-split sub-partitions AQE's
+  *     skew handling created at runtime;
+  *   - Spark jobs, stages and tasks;
+  *   - `[joblog]` jobs over 0.2 s with their first stage's callsite,
+  *     `[stagelog]` stages over 0.2 s with task metrics, and
+  *     `[planmetrics]` the executed-plan nodes that burned the most
+  *     time, so a slow query attributes to a job, a stage and an
+  *     operator.
   *
-  * Beyond logging, two process-wide accumulators let the stress mains
-  * attribute "did the guards actually fire?" to individual queries by
-  * snapshotting before/after:
-  *   - [[observedSums]]: every numeric field of every observed-metrics
-  *     row, summed per `<metric>.<field>` key (so the LshSkew caps'
-  *     `dropped_buckets`/`dropped_rows` are machine-readable, not just
-  *     stderr lines);
-  *   - [[aqeSkewSplits]]: the number of `PartialReducerPartitionSpec`s
-  *     in the final adaptive plans — i.e. how many skew-split
-  *     sub-partitions AQE's skew handling actually created at runtime.
+  * Every main reads them through [[measure]], which attributes the
+  * counters to one body and times it.
   */
 object Metrics {
 
@@ -33,52 +42,141 @@ object Metrics {
   /** `<metricName>.<field>` -> summed value across finished actions. */
   val observedSums: TrieMap[String, Long] = TrieMap.empty
 
-  /** Snapshot for delta-attribution in stress harnesses. */
-  def snapshot(): (Long, Map[String, Long]) =
-    (aqeSkewSplits.sum(), observedSums.toMap)
+  private val jobs = new LongAdder
+  private val stages = new LongAdder
+  private val tasks = new LongAdder
 
-  /** QueryExecutionListeners run async on the listener bus; poll until
-    * the counters stop moving so before/after deltas attribute cleanly.
+  /** What one [[measure]]d body cost: wall seconds, the Spark jobs,
+    * stages and tasks it ran, the AQE skew splits its plans made, the
+    * observed-metric sums it moved (keys whose sum changed, with the
+    * change) and the artifact (re)builds it triggered.
     */
-  def settle(timeoutMs: Long = 3000): (Long, Map[String, Long]) = {
-    var prev = snapshot()
-    val deadline = System.currentTimeMillis() + timeoutMs
-    while (System.currentTimeMillis() < deadline) {
-      Thread.sleep(100)
-      val cur = snapshot()
-      if (cur == prev) return cur
-      prev = cur
-    }
-    prev
+  final case class Profile(sec: Double, jobs: Long, stages: Long,
+      tasks: Long, skewSplits: Long, observed: Map[String, Long],
+      artifactBuilds: Long) {
+    /** Sum of the observed deltas whose key ends with `suffix`. */
+    def observedSum(suffix: String): Long =
+      observed.collect { case (k, v) if k.endsWith(suffix) => v }.sum
   }
 
-  /** Wall seconds of one evaluation of `f`, for the stress mains. */
-  def time[A](f: => A): (A, Double) = {
-    val t0 = System.nanoTime()
-    val a = f
-    (a, (System.nanoTime() - t0) / 1e9)
+  private def counters(): (Long, Long, Long, Long, Map[String, Long], Long) =
+    (jobs.sum, stages.sum, tasks.sum, aqeSkewSplits.sum, observedSums.toMap,
+      graft.sources.ArtifactGuard.buildEventCount.toLong)
+
+  /** Runs `body` once and returns its result with its [[Profile]].
+    * Listener events are async, so the bus is drained before and after
+    * the body; both drains fall outside the timed window. Exceptions
+    * from `body` propagate.
+    */
+  def measure[A](spark: SparkSession)(body: => A): (A, Profile) = {
+    GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    val (j0, s0, t0, k0, m0, b0) = counters()
+    val start = System.nanoTime()
+    val a = body
+    val sec = (System.nanoTime() - start) / 1e9
+    GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+    val (j1, s1, t1, k1, m1, b1) = counters()
+    val observed = m1.collect {
+      case (k, v) if v != m0.getOrElse(k, 0L) => k -> (v - m0.getOrElse(k, 0L))
+    }
+    (a, Profile(sec, j1 - j0, s1 - s0, t1 - t0, k1 - k0, observed, b1 - b0))
   }
 
-  private def countSkewSplits(p: SparkPlan): Long = {
-    val self = p match {
-      case r: AQEShuffleReadExec =>
-        r.partitionSpecs.count(_.isInstanceOf[PartialReducerPartitionSpec]).toLong
-      case _ => 0L
+  /** Ordered fields of one stress-main JSON line, starting with
+    * `init`. [[measure]] records an op's [[Profile]] as `<op>_sec` and,
+    * for `guarded` ops, as `<op>_aqe_skew_splits`, `<op>_cap_buckets`
+    * and `<op>_cap_rows` (the LshSkew cap drops it caused). Seconds are
+    * rounded to ms. Strings render quoted, a NaN as `null`, a nested
+    * Report as an object.
+    */
+  final class Report(spark: SparkSession, init: (String, Any)*) {
+    private val fields = mutable.LinkedHashMap[String, Any](init: _*)
+
+    def update(key: String, value: Any): Unit = fields(key) = value
+
+    def sec(key: String, p: Profile): Unit =
+      fields(key) = math.rint(p.sec * 1000) / 1000
+
+    def measure[A](op: String, guarded: Boolean = false)(body: => A): A = {
+      val (a, p) = Metrics.measure(spark)(body)
+      sec(s"${op}_sec", p)
+      if (guarded) {
+        fields(s"${op}_aqe_skew_splits") = p.skewSplits
+        fields(s"${op}_cap_buckets") = p.observedSum(".dropped_buckets")
+        fields(s"${op}_cap_rows") = p.observedSum(".dropped_rows")
+      }
+      a
     }
-    // AdaptiveSparkPlanExec and the QueryStageExec wrappers are leaf
-    // nodes — recurse into their wrapped plans explicitly (post-action
-    // they hold the final physical plan / materialized stage subtree).
-    val nested = p match {
-      case a: AdaptiveSparkPlanExec => countSkewSplits(a.executedPlan)
-      case q: QueryStageExec => countSkewSplits(q.plan)
+
+    def json: String = fields.map { case (k, v) =>
+      val s = v match {
+        case s: String => "\"" + s + "\""
+        case d: Double if d.isNaN => "null"
+        case r: Report => r.json
+        case other => other.toString
+      }
+      "\"" + k + "\":" + s
+    }.mkString("{", ",", "}")
+  }
+
+  /** Every node of an executed plan as it finally ran: AQE's final
+    * plan, each query stage's materialized subtree, children and
+    * subqueries (`AdaptiveSparkPlanExec` and `QueryStageExec` are leaf
+    * nodes, so their wrapped plans are entered explicitly).
+    */
+  def finalNodes(p: SparkPlan): Iterator[SparkPlan] =
+    Iterator.single(p) ++ (p match {
+      case a: AdaptiveSparkPlanExec => finalNodes(a.executedPlan)
+      case q: QueryStageExec => finalNodes(q.plan)
       case other =>
-        other.children.map(countSkewSplits).sum +
-          other.subqueries.map(countSkewSplits).sum
-    }
-    self + nested
-  }
+        (other.children.iterator ++ other.subqueries.iterator)
+          .flatMap(finalNodes)
+    })
 
-  final class LogListener extends QueryExecutionListener {
+  private val timeKeys = Seq("duration", "time in aggregation build",
+    "sort time", "build time", "collect time", "shuffle write time",
+    "time to build hash map", "scan time")
+
+  /** Both a `SparkListener` (jobs, stages, tasks, joblog, stagelog) and
+    * a `QueryExecutionListener` (observed metrics, skew splits,
+    * planmetrics). Both kinds of callback run on Spark's shared
+    * listener queue, so one drain settles them.
+    */
+  final class Listener extends SparkListener with QueryExecutionListener {
+    private val jobStarts = new ConcurrentHashMap[Int, (Long, String)]()
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.add(1)
+      val site = j.stageInfos.headOption.map(_.details.linesIterator
+        .find(_.contains("graft")).getOrElse("").trim).getOrElse("")
+      jobStarts.put(j.jobId, (j.time, site))
+    }
+
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      Option(jobStarts.remove(j.jobId)).foreach { case (t0, site) =>
+        val sec = (j.time - t0) / 1e3
+        if (sec > 0.2)
+          System.err.println(f"[joblog] job=${j.jobId}%4d sec=$sec%7.3f $site")
+      }
+
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      stages.add(1)
+      val i = s.stageInfo
+      val wall = (for {a <- i.completionTime; b <- i.submissionTime}
+        yield (a - b) / 1e3).getOrElse(-1.0)
+      if (wall > 0.2) {
+        val m = i.taskMetrics
+        System.err.println(f"[stagelog] stage=${i.stageId}%4d wall=$wall%7.3f " +
+          f"tasks=${i.numTasks}%4d run=${m.executorRunTime / 1e3}%7.3f " +
+          f"cpu=${m.executorCpuTime / 1e9}%7.3f gc=${m.jvmGCTime / 1e3}%6.3f " +
+          f"deser=${m.executorDeserializeTime / 1e3}%6.3f " +
+          f"fetchWait=${m.shuffleReadMetrics.fetchWaitTime / 1e3}%6.3f " +
+          i.name.take(70))
+      }
+    }
+
+    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = tasks.add(1)
+
     override def onSuccess(funcName: String, qe: QueryExecution,
         durationNs: Long): Unit = {
       qe.observedMetrics.foreach { case (name, row) =>
@@ -95,21 +193,41 @@ object Metrics {
           }
         }
       }
-      try aqeSkewSplits.add(countSkewSplits(qe.executedPlan))
-      catch { case NonFatal(_) => () } // diagnostics must never fail a job
+      try {
+        val nodes = finalNodes(qe.executedPlan).toSeq
+        aqeSkewSplits.add(nodes.collect { case r: AQEShuffleReadExec =>
+          r.partitionSpecs.count(_.isInstanceOf[PartialReducerPartitionSpec]).toLong
+        }.sum)
+        // the nodes that burned the most time (codegen `duration`,
+        // agg/join build and sort times)
+        val hot = nodes.flatMap { p =>
+          p.metrics.toSeq.collect {
+            case (k, m) if timeKeys.exists(
+                m.name.getOrElse("").toLowerCase.contains) && m.value > 500 =>
+              (m.value, s"${p.nodeName}#${p.id} ${m.name.getOrElse(k)}=${m.value}ms " +
+                s"rows=${p.metrics.get("numOutputRows").map(_.value).getOrElse(-1L)}")
+          }
+        }.sortBy(-_._1).take(8)
+        if (hot.nonEmpty)
+          System.err.println("[planmetrics]\n  " + hot.map(_._2).mkString("\n  "))
+      } catch { case NonFatal(_) => () } // diagnostics must never fail a job
     }
+
     override def onFailure(funcName: String, qe: QueryExecution,
         exception: Exception): Unit = ()
   }
 
   private val registered = java.util.Collections.newSetFromMap(
-    new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
+    new java.util.WeakHashMap[AnyRef, java.lang.Boolean]())
 
-  /** Adds one [[LogListener]] per session; later calls are no-ops, so
-    * a row is summed and logged once however often this is called.
+  /** Installs the [[Listener]]'s query callbacks once per session and
+    * its scheduler callbacks once per SparkContext (which sessions
+    * share); later calls are no-ops, so nothing is counted or logged
+    * twice however often this is called.
     */
   def register(spark: SparkSession): Unit = registered.synchronized {
-    if (registered.add(spark))
-      spark.listenerManager.register(new LogListener)
+    val l = new Listener
+    if (registered.add(spark)) spark.listenerManager.register(l)
+    if (registered.add(spark.sparkContext)) spark.sparkContext.addSparkListener(l)
   }
 }

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-
 /** Scale rehearsal of the slowest REGISTERED queries (r11 verdict #5):
   * the per-family stress harnesses (ScaleStress / CorpusStress /
   * EmbedStress) replicate inputs per operator family, but no single
@@ -12,16 +9,16 @@ import org.apache.spark.sql.functions._
   * re-planning and artifact builds interact exactly as they do in the
   * driver's sweep.
   *
-  * Inputs are replicated with the established disjointness schemes so
+  * Inputs are replicated with `StressData`'s disjointness schemes so
   * corpus statistics replicate instead of interfering:
   *   - documents: token-disjoint copies (every token suffixed `~cp`,
   *     ids remapped by a stride that preserves the structural modulo
-  *     splits — the CorpusStress scheme);
+  *     splits);
   *   - embeddings: per-copy ±1 diagonal sign flip (orthogonal, so
   *     each copy keeps its geometry but copies are far apart in
-  *     embedding space — the EmbedStress scheme), ids remapped by an
-  *     EVEN stride so the q162/q169 query/neighbor parity split is
-  *     identical in every copy.
+  *     embedding space), ids remapped by the same EVEN stride so the
+  *     q162/q169 query/neighbor parity split is identical in every
+  *     copy.
   *
   * Protocol per factor: write the two tables to a fresh dir, run each
   * query once UNTIMED (codegen + parquet footers + the learn-once
@@ -67,59 +64,32 @@ object TailStress {
 
     val docs = Tables.load(spark, sfDir, "documents")
     val emb = Tables.load(spark, sfDir, "embeddings")
-    val stride = StressData.Stride
-    val maxDocId = docs.agg(max(col("doc_id"))).head.getLong(0)
-    val maxVecId = emb.agg(max(col("vec_id"))).head.getLong(0)
-    require(maxDocId < stride && maxVecId < stride,
-      s"ids ($maxDocId/$maxVecId) >= stride $stride: copies collide")
 
     val timings =
       scala.collection.mutable.LinkedHashMap[(Int, String), Double]()
     factors.foreach { f =>
       val dirX = s"$outBase/x$f"
-      val docsX: DataFrame =
-        if (f == 1) docs
-        else docs.crossJoin(spark.range(f).select(col("id").as("cp")))
-          .select(
-            (col("doc_id") + col("cp") * stride).as("doc_id") +:
-            when(col("cp") === 0, col("text"))
-              .otherwise(concat_ws(" ", transform(split(col("text"), " "),
-                t => concat(t, lit("~"), col("cp"))))).as("text") +:
-            docs.columns.filterNot(c => c == "doc_id" || c == "text")
-              .map(col).toSeq: _*)
-      // shared definition with the suite's sized-corpus quality gate
-      // (IvfSizedRecallSpec): what the stress measures is what the
-      // gate gates
-      val embX: DataFrame = StressData.replicateEmbeddings(emb, f)
-      // write the replicated corpus as MANY splits: the crossJoin
-      // plan funnels everything into the handful of source-scan
-      // partitions, and a ×50 corpus written as one ~7 MB file gives
-      // every downstream query a 1-partition scan — the measured
-      // "ratio" is then the file count, not the engine (a real ×50
-      // table arrives as hundreds of splits). HASH-repartition on
-      // the key (advisor r13: keyless repartition(n) is round-robin,
-      // whose placement depends on input partition order) so the
-      // file layout is deterministic run-over-run, not just the
-      // table content.
-      docsX.repartition(Tables.cpus, col("doc_id"))
-        .write.mode("overwrite").parquet(s"$dirX/documents.parquet")
-      embX.repartition(Tables.cpus, col("vec_id"))
-        .write.mode("overwrite").parquet(s"$dirX/embeddings.parquet")
-      val nD = Tables.read(spark, s"$dirX/documents.parquet").count()
-      val nE = Tables.read(spark, s"$dirX/embeddings.parquet").count()
+      // the embeddings share their definition with the suite's
+      // sized-corpus quality gate (IvfSizedRecallSpec): what the
+      // stress measures is what the gate gates
+      val nD = StressData.writeSplits(StressData.replicateDocuments(docs, f),
+        s"$dirX/documents.parquet", "doc_id").count()
+      val nE = StressData.writeSplits(StressData.replicateEmbeddings(emb, f),
+        s"$dirX/embeddings.parquet", "vec_id").count()
 
       // untimed warmup sweep (includes the per-dir artifact builds)
       tailQueries.foreach(q =>
         Bench.force(SparkEntry.queries(q)(spark, dirX)))
-      val mins = tailQueries.map { q =>
-        val ts = (1 to reps).map(_ =>
-          Metrics.time(Bench.force(SparkEntry.queries(q)(spark, dirX)))._2)
-        timings((f, q)) = ts.min
-        s""""$q":${math.rint(ts.min * 1000) / 1000}"""
+      val mins = new Metrics.Report(spark)
+      tailQueries.foreach { q =>
+        val best = (1 to reps).map(_ => Metrics.measure(spark)(
+          Bench.force(SparkEntry.queries(q)(spark, dirX)))._2).minBy(_.sec)
+        timings((f, q)) = best.sec
+        mins.sec(q, best)
       }
-      println(s"""{"harness":"tail_stress","factor":$f,"docs":$nD,""" +
-        s""""vecs":$nE,"reps":$reps,""" +
-        s""""queries":${mins.mkString("{", ",", "}")}}""")
+      println(new Metrics.Report(spark, "harness" -> "tail_stress",
+        "factor" -> f, "docs" -> nD, "vecs" -> nE, "reps" -> reps,
+        "queries" -> mins).json)
     }
     // ratio table vs factor 1 (the archived PERF.md artifact), then
     // the gate on the LARGEST factor present (advisor r13: a run

@@ -61,6 +61,27 @@ class ArtifactHygieneSpec extends AnyFunSuite {
       s"session builders outside Tables.localSession: $offenders")
   }
 
+  /** `Metrics` is the engine's one profiler: its listener is the only
+    * one a main installs.
+    */
+  test("only Metrics registers listeners in src/main") {
+    val offenders = mainFilesMatching(
+      """addSparkListener|listenerManager\s*\.\s*register""".r)
+      .filterNot(_.endsWith("/Metrics.scala"))
+    assert(offenders.isEmpty,
+      s"listeners outside Metrics.register: $offenders")
+  }
+
+  /** Every main times through `Metrics.measure`, which drains the
+    * listener bus outside the timed window.
+    */
+  test("only Metrics reads System.nanoTime in src/main") {
+    val offenders = mainFilesMatching("""System\s*\.\s*nanoTime""".r)
+      .filterNot(_.endsWith("/Metrics.scala"))
+    assert(offenders.isEmpty,
+      s"clocks outside Metrics.measure: $offenders")
+  }
+
   /** Failures must be loud: a `Throwable` catch also swallows fatal
     * errors (OOM, interrupts). Catch `NonFatal` instead.
     */

@@ -16,12 +16,34 @@ class MetricsSpec extends SparkSpec {
     Metrics.register(spark)
     Metrics.register(spark)
     val n = 1000L
-    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    val (_, m0) = Metrics.settle()
-    spark.range(n).observe("probe", count(lit(1)).as("n")).collect()
-    org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    val (_, m1) = Metrics.settle()
-    assert(m1.getOrElse("probe.n", 0L) - m0.getOrElse("probe.n", 0L) == n)
+    val (_, p) = Metrics.measure(spark)(
+      spark.range(n).observe("probe", count(lit(1)).as("n")).collect())
+    assert(p.observed.get("probe.n").contains(n))
+  }
+
+  test("measure attributes an action's observed rows, jobs and tasks " +
+      "to its body, and nothing to a body without an action") {
+    Metrics.register(spark)
+    val independent = new java.util.concurrent.atomic.LongAdder
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(
+          t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        independent.add(1)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      val n0 = independent.sum
+      val (_, p) = Metrics.measure(spark)(spark.range(1000).repartition(4)
+        .observe("probe", count(lit(1)).as("n")).collect())
+      assert(p.observed.get("probe.n").contains(1000L))
+      assert(p.jobs > 0 && p.stages > 0 && p.tasks > 0)
+      assert(p.tasks == independent.sum - n0)
+      assert(p.sec > 0)
+
+      val (_, idle) = Metrics.measure(spark)(Seq(1, 2, 3).sum)
+      assert(idle.jobs == 0 && idle.tasks == 0 && idle.observed.isEmpty)
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 
   test("aqeSkewSplits counts AQE skew-join splits on a hot-keyed join") {
@@ -53,19 +75,17 @@ class MetricsSpec extends SparkSpec {
       val right = spark.range(2000).select(col("id").as("k"),
         md5(col("id").cast("string")).as("r"))
 
-      val (s0, _) = Metrics.settle()
       // aggregate over the payload so column pruning can't strip it
       // from the exchange (an all-identical-key partition of bare
       // longs compresses below any threshold)
       val df = left.join(right, "k")
         .agg(count(lit(1)).as("n"), max(col("payload")).as("p"))
-      val joined = df.collect()(0).getLong(0)
+      val (joined, p) = Metrics.measure(spark)(df.collect()(0).getLong(0))
       println("=== FINAL PLAN ===")
       println(df.queryExecution.executedPlan.toString)
       assert(joined > 0)
-      val (s1, _) = Metrics.settle()
-      assert(s1 - s0 > 0,
-        s"expected AQE to skew-split the hot key-0 partition; counter delta ${s1 - s0}")
+      assert(p.skewSplits > 0,
+        s"expected AQE to skew-split the hot key-0 partition; counter delta ${p.skewSplits}")
     } finally saved.foreach {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)

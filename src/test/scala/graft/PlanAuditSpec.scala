@@ -230,21 +230,6 @@ class PlanAuditSpec extends SparkSpec {
     "q119_bm25_topk", "q120_rrf_fusion", "q128_hard_negatives",
     "q130_bm25_dfcap")
 
-  /** Physical-plan traversal that descends into AQE wrappers and
-    * subqueries (the Metrics.countSkewSplits recursion).
-    */
-  private def physicalNodes(p: org.apache.spark.sql.execution.SparkPlan)
-      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    val nested = p match {
-      case a: AdaptiveSparkPlanExec => physicalNodes(a.executedPlan)
-      case q: QueryStageExec => physicalNodes(q.plan)
-      case other =>
-        (other.children ++ other.subqueries).flatMap(physicalNodes)
-    }
-    p +: nested
-  }
-
   /** EVERY shuffle exchange (hash, round-robin, range, single) whose
     * input carries a column matching `payload`, minus the one
     * justified widening shape: a RoundRobinPartitioning exchange in a
@@ -259,7 +244,7 @@ class PlanAuditSpec extends SparkSpec {
       : Seq[String] = {
     import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    physicalNodes(qe.executedPlan).collect {
+    Metrics.finalNodes(qe.executedPlan).toSeq.collect {
       case ex: ShuffleExchangeExec if ex.child.output.exists(payload) &&
           !(ex.outputPartitioning.isInstanceOf[RoundRobinPartitioning] &&
             wideningExchangeAllowed.contains(name)) =>
@@ -370,7 +355,7 @@ class PlanAuditSpec extends SparkSpec {
     var sawWidening = false
     val flagged = wideningExchangeAllowed.toSeq.sorted.flatMap { name =>
       val qe = SparkEntry.queries(name)(spark, sf01).queryExecution
-      val bad = physicalNodes(qe.executedPlan).collect {
+      val bad = Metrics.finalNodes(qe.executedPlan).toSeq.collect {
         case ex: ShuffleExchangeExec
             if ex.child.output.exists(a => isText(a) || isVector(a)) &&
               !ex.outputPartitioning.isInstanceOf[

@@ -120,14 +120,10 @@ class RetrievalSpec extends SparkSpec {
   test("df cap drops are METERED through the Metrics listener " +
       "(no silent caps)") {
     Metrics.register(spark) // once per session; the shared one may not have it
-    val (_, m0) = Metrics.settle()
-    Retrieval.bm25TopK(docs, "doc_id", "text", queries, k = 10,
-      maxDfFrac = 0.77).count()
-    val (_, m1) = Metrics.settle()
-    val dropped = m1.collect { case (k, v) if k.endsWith(".dropped_terms") =>
-      v - m0.getOrElse(k, 0L) }.sum
-    assert(dropped > 0,
-      s"engaged cap must surface dropped terms, metrics: ${m1.keys}")
+    val (_, p) = Metrics.measure(spark)(Retrieval.bm25TopK(docs, "doc_id",
+      "text", queries, k = 10, maxDfFrac = 0.77).count())
+    assert(p.observedSum(".dropped_terms") > 0,
+      s"engaged cap must surface dropped terms, metrics: ${p.observed.keys}")
   }
 
   test("projected-space ANN keeps useful recall vs full-dim exact " +
