@@ -421,7 +421,7 @@ object CorpusStress {
       // ×f token explode + first-occurrence exchange).
       val hb = out.measure("q182") {
         val cum = graft.queries.StatQueries.heapsCum(spark, docs)
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val b1 = graft.queries.StatQueries.heapsFit(cum)
           .select(col("beta")).head.getDouble(0)
         val bf = graft.queries.StatQueries.heapsFit(cum.select(col("chk"),
@@ -486,7 +486,7 @@ object CorpusStress {
           .agg(sum(col("n_tok")).as("n_tokens"))
         val alloc = graft.operators.Budgeting
           .waterFill(tok, "source", "n_tokens", 2L, 9L, 5L)
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val man = graft.operators.Budgeting
           .materializeSample(dd, "doc_id", "n_tok", "source",
             alloc, "n_tokens")
@@ -697,7 +697,7 @@ object CorpusStress {
               concat(lit("new arrival "), col("text")).as("text")))
         val v1post = graft.operators.Retrieval
           .postings(d0, "doc_id", "text")
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val updated = graft.operators.IndexMaintenance
           .updateTextPostings(v1post, d0, v2, "doc_id", "text")
         val rebuilt = graft.operators.Retrieval

@@ -97,7 +97,7 @@ object EmbedStress {
       val projVecs = graft.operators.Projections
         .signedProjectionVectors(corpus, "id", "vec",
           outDim = 16, inDim = 64)
-        .localCheckpoint(eager = false)
+        .transform(graft.Boundary.lazyLocal)
       val qProj = projVecs
         .join(twinSources.select(col("id")), Seq("id"))
       val pHits = out.measure("proj") {
@@ -163,7 +163,7 @@ object EmbedStress {
         val postings = graft.operators.KMeansExact
           .assignFitted(v1, "id", "vec", model)
           .select(col("id"), col("cluster"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val v2 = v1.filter(col("id") % 17 =!= 0)
           .withColumn("vec", when(col("id") % 13 === 0,
             transform(col("vec"), x => negative(x))).otherwise(col("vec")))

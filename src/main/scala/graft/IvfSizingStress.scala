@@ -41,7 +41,7 @@ object IvfSizingStress {
           / k.toDouble).as(out))
     val fwd = idx.topK(a, k, nProbe,
         neighborFilter = col("neighbor_id") % 2 === 1)
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val bwd = idx.topK(b, k, nProbe,
       neighborFilter = col("neighbor_id") % 2 === 0)
     val af = meanTopK(fwd, "af")
@@ -72,7 +72,7 @@ object IvfSizingStress {
     val emb = Tables.read(spark, embPath)
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
       .repartition(Tables.cpus, col("id"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val n = emb.count()
 
     // exact-anchor sample: brute-force top-1 for ~1/101 of the even-id
@@ -88,7 +88,7 @@ object IvfSizingStress {
         emb.filter(col("id") % 2 === 1), sampleQ, k = 1)
       .select(col("query_id"), col("neighbor_id").as("exact_id"),
         col("cosine").as("exact_cos"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val nSample = exact1.count()
 
     // null-safe read of the exact-anchor aggregation (advisor r13:
@@ -141,7 +141,7 @@ object IvfSizingStress {
                   .as("p"))
               .select(col("p.idx").as("list_id"), col("neighbor_id"),
                 col("cvec"), col("cn"))
-              .localCheckpoint(eager = false)
+              .transform(graft.Boundary.lazyLocal)
             p.count()
             p
           }
@@ -175,7 +175,7 @@ object IvfSizingStress {
                     .select(col("query_id"), col("neighbor_id"),
                       col("cosine"))
               }
-              val c = t.localCheckpoint(eager = false)
+              val c = t.transform(graft.Boundary.lazyLocal)
               c.count()
               c
             }
@@ -203,7 +203,7 @@ object IvfSizingStress {
         "n" -> n, "n_lists" -> nLists, "n_probe" -> nProbe)
       val idx = out.measure("build")(Similarity.IvfIndex.build(emb, nLists))
       val res = out.measure("probe") {
-        val m = marginAlign(emb, idx, nProbe).localCheckpoint(eager = false)
+        val m = marginAlign(emb, idx, nProbe).transform(graft.Boundary.lazyLocal)
         m.count()
         m
       }

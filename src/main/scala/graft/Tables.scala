@@ -203,7 +203,8 @@ object Tables {
   private def engages(spark: SparkSession, path: String,
       v: FileVersion): Boolean =
     v.parquetFiles < math.max(1, spark.sparkContext.defaultParallelism / 2) &&
-      graft.sources.Artifacts.parquetRowCount(path) >= 1000L
+      graft.sources.Artifacts.parquetRowCount(path,
+        spark.sparkContext.hadoopConfiguration) >= 1000L
 
   private val engageLogged =
     scala.collection.concurrent.TrieMap[String, Boolean]()

@@ -51,7 +51,7 @@ object Budgeting {
     // two more — checkpoint both so the corpus pays its scan ONCE
     // (the q67 multi-consumer discipline; without this the water-fill
     // plan re-derives the per-source reduce four times)
-    val cnts = counts.localCheckpoint(eager = false)
+    val cnts = counts.transform(graft.Boundary.lazyLocal)
     val tot = cnts.agg(sum(col(nCol)).as("t"), count(lit(1)).as("k"))
       .select(expr(s"cast(t as decimal(38,0)) * $budNum div $budDen")
         .as("budget"), col("k"))
@@ -71,7 +71,7 @@ object Budgeting {
           col("cap").cast("decimal(38,0)") *
           (col("k") - col("rn") + 1).cast("decimal(38,0)") <=
           col("budget"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val mf = c.agg(
       coalesce(sum(when(col("capped"), col("cap"))), lit(0L))
         .as("p_m"),
@@ -127,7 +127,7 @@ object Budgeting {
       // three consumers (whole epochs, fractional budgets, the epoch
       // index join) — checkpoint so the allocation pipeline above it
       // (and ITS corpus reduce) runs once
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val rows = d.select(col(idCol), col(groupCol),
       coalesce(col(tokCol).cast("long"), lit(0L)).as("tokens"))
     val whole = rows.join(broadcast(plan), Seq(groupCol))

@@ -242,7 +242,7 @@ object CorpusOps {
     // subtree (q93: the bigram cross-entropy joins) runs twice, once
     // inside the percentile head() and again at execution.
     val df0 = df.filter(col(valueCol).isNotNull)
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val cutsRow = df0.select(
       (0 until nb - 1).map(i =>
         round(expr(s"percentile($valueCol, ${qs(i)})"), 6)
@@ -587,7 +587,7 @@ object CorpusOps {
       .select(col(idCol), col("p.h1"), col("p.h12"))
       .groupBy(col(idCol), col("h1"), col("h12"))
       .agg(count(lit(1)).as("k"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val cb = docBi.groupBy(col("h12")).agg(sum(col("k")).as("cb"))
     val cu = docBi.groupBy(col("h1")).agg(sum(col("k")).as("cu"))
     val term = round(-log(col("cb").cast("double") / col("cu").cast("double")), 4)
@@ -725,7 +725,7 @@ object CorpusOps {
           === 0, 1L).otherwise(-1L).as("s"))
       .groupBy(col(idCol), col("term"), col("j"), col("s"))
       .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val dfTab = dt.groupBy(col("term")).agg(count(lit(1)).as("dfc"))
     val idf = round(log(lit(nDocs.toDouble) / col("dfc").cast("double")), 4)
       .cast("decimal(18,4)")
@@ -838,7 +838,7 @@ object CorpusOps {
       .withColumn("_th", th)
       .select(col(idCol), posexplode(winHashes).as(Seq("p0", "h")))
       .select(col(idCol), (col("p0") + 1).as("s"), col("h"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val dupH = wins.groupBy(col("h"))
       .agg(count(lit(1)).as("c"))
       .filter(col("c") >= minCount)

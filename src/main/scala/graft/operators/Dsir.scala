@@ -84,7 +84,7 @@ object Dsir {
     val dk = hashedGramCounts(
       docs.withColumn("_tgt", coalesce(isTarget, lit(false))),
       idCol, textCol, buckets, carry = Seq("_tgt"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     dk.join(broadcast(lwFromCounts(dk, buckets)), Seq("b"))
       .groupBy(col(idCol))
       .agg(sum(col("k").cast("decimal(18,0)") * col("lw")).as("logw"))

@@ -59,8 +59,8 @@ object GraphRank {
       iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 16, s"iters=$iters")
     import org.apache.spark.sql.expressions.Window
-    val e = edges.localCheckpoint(eager = false)
-    val s = seeds.localCheckpoint(eager = false)
+    val e = edges.transform(graft.Boundary.lazyLocal)
+    val s = seeds.transform(graft.Boundary.lazyLocal)
     var lab = s
     for (_ <- 1 to iters) {
       val win = e.join(lab, e("src") === lab("node"))
@@ -72,7 +72,7 @@ object GraphRank {
         .filter(col("rn") === 1)
         .select(col("dst").as("node"), col("label"))
       lab = s.unionByName(win.join(s, Seq("node"), "left_anti"))
-        .localCheckpoint(eager = false)
+        .transform(graft.Boundary.lazyLocal)
     }
     lab
   }
@@ -88,9 +88,9 @@ object GraphRank {
     // partition on the join key so all five edge⋈ranks joins and the
     // degree aggregation share ONE ReusedExchange instead of five
     // edge-side shuffles
-    val ed = edges.localCheckpoint(eager = false).repartition(col("src"))
+    val ed = edges.transform(graft.Boundary.lazyLocal).repartition(col("src"))
     val deg = ed.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     var ranks = ed.select(col("src").as("node")).distinct()
       .withColumn("r", lit(1000000L))
     for (i <- 1 to iters) {
@@ -101,7 +101,7 @@ object GraphRank {
         .groupBy("node")
         .agg(expr("cast(150000 + (850 * sum(c)) div 1000 as bigint)").as("r"))
       if (i % 8 == 0 && i < iters)
-        ranks = ranks.localCheckpoint(eager = false)
+        ranks = ranks.transform(graft.Boundary.lazyLocal)
     }
     ranks.select(col("node"), col("r").as("rank_m"))
   }

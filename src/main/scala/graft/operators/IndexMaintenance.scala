@@ -54,7 +54,7 @@ object IndexMaintenance {
     // multi-consumer argument; at 100 TB the fp scans are the
     // dominant cost of the incremental path)
     val d = SnapshotDiff.diff(fp(v1), fp(v2), idCol, Seq("_efp"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     def bc(df: DataFrame): DataFrame =
       if (broadcastDelta) broadcast(df) else df
     val gone = d.filter(col("status").isin("removed", "changed"))
@@ -89,7 +89,7 @@ object IndexMaintenance {
     // two consumers of the diff — checkpoint so the text-fingerprint
     // scans run once (same argument as updatePostings)
     val d = SnapshotDiff.diff(v1, v2, idCol, Seq(textCol))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     def bc(df: DataFrame): DataFrame =
       if (broadcastDelta) broadcast(df) else df
     val gone = d.filter(col("status").isin("removed", "changed"))

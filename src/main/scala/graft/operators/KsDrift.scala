@@ -111,7 +111,7 @@ object KsDrift {
           (col("cumtot") - col("cum_grp")).cast(d38) *
             col("n_grp").cast(d38)))
       // feeds the max reduce AND the argmin-value join below
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val dmax = grid.groupBy(col(groupCol), col("n_grp"), col("n_rest"))
       .agg(max(col("d_num")).as("d_max"))
     dmax.join(grid.select(col(groupCol), col("v"),

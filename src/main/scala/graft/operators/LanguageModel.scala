@@ -86,7 +86,7 @@ object LanguageModel {
       // Unlike the ≥5-fan-out query-level frames, the four count
       // tables sit in ONE plan whose AQE stages reuse the exchange;
       // the eager barrier only serialized construction.
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val c1 = tTok.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
     val c2 = tTok.filter(col("h12").isNotNull)
       .groupBy(col("h12")).agg(count(lit(1)).as("c2"))

@@ -124,7 +124,7 @@ object MinHashDedup {
     // computation, the Containment.pairs discipline (guide §2.4:
     // remove repeated passes before tuning anything else).
     val sh = withShingleHashes(docs, idCol, textCol, shingleSize, "shingles")
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val sigs = sh.select(col("id"),
       signatureCol(col("shingles"), numHashes).as("sig"))
     val cands = candidatePairs(sigs, numBands, numHashes / numBands, maxBucketSize)
@@ -189,9 +189,9 @@ object MinHashDedup {
     // verification-join side — same compute-once checkpoint as
     // nearDuplicatePairs (one scan per corpus instead of two)
     val shC = withShingleHashes(corpus, idCol, textCol, shingleSize, "sh")
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val shR = withShingleHashes(reference, idCol, textCol, shingleSize, "sh")
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     def sideSigs(sh: DataFrame, side: Int): DataFrame =
       sh.select(col("id"), signatureCol(col("sh"), numHashes).as("sig"),
         lit(side).as("side"))

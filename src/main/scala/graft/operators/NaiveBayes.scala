@@ -95,7 +95,7 @@ object NaiveBayes {
       .select(col(labelCol).as("label"),
         explode(split(col(textCol), " ")).as("token"))
     val lt = tok.groupBy("label", "token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val tot = lt.groupBy("label").agg(sum("cnt").as("tot"))
     val v = lt.select("token").distinct().count()
     lt.join(broadcast(tot), "label")
@@ -192,7 +192,7 @@ object NaiveBayes {
       .select(col("label"), xxhash64(col("_t")).as("h"))
       .groupBy(col("h"))
       .agg(cntCols.head, cntCols.tail: _*)
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
 
     // Fused model stats in ONE action (r16, guide §1.2): v = number of
     // distinct token hashes = row count of the pivot; tot_l = Σ over
@@ -273,7 +273,7 @@ object NaiveBayes {
     val tok = trainDf.select(col(labelCol).cast("string").as("label"),
       explode(split(col(textCol), " ")).as("token"))
     val lt = tok.groupBy("label", "token").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val nPairs = lt.count()
     require(nPairs <= maxEntries,
       s"NB model boundary: $nPairs observed (label, token) pairs exceed " +

@@ -81,7 +81,7 @@ object Pca {
     require(iters >= 1 && iters <= 32, s"iters=$iters")
     val spark = cov.sparkSession
     import spark.implicits._
-    val covCk = cov.localCheckpoint(eager = false)
+    val covCk = cov.transform(graft.Boundary.lazyLocal)
     val v0 = round(lit(1.0) / sqrt(lit(dim.toDouble)), 6)
     var v: DataFrame = spark.range(dim)
       .select(col("id").cast("int").as("j"),

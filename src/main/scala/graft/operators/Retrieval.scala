@@ -165,7 +165,7 @@ object Retrieval {
       queries: DataFrame, k: Int, maxDfFrac: Double = 1.0,
       widen: DataFrame => DataFrame = identity): DataFrame =
     bm25FromPostings(
-      widen(postings(docs, idCol, textCol)).localCheckpoint(eager = false),
+      widen(postings(docs, idCol, textCol)).transform(graft.Boundary.lazyLocal),
       queries, k, maxDfFrac)
 
   /** Top-`k` token-set-Jaccard hits per query — the second,
@@ -206,7 +206,7 @@ object Retrieval {
       queries: DataFrame, k: Int,
       widen: DataFrame => DataFrame = identity): DataFrame =
     jaccardFromPostings(
-      widen(postings(docs, idCol, textCol)).localCheckpoint(eager = false),
+      widen(postings(docs, idCol, textCol)).transform(graft.Boundary.lazyLocal),
       queries, k)
 
   /** Fit the per-query-term BM25 model from a postings table: each

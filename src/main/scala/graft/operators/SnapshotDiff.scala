@@ -102,7 +102,7 @@ object SnapshotDiff {
     require(fpCols.nonEmpty, "need at least one fingerprint column")
     // the diff feeds two consumers (payload fetch + removed rows) —
     // the stage boundary keeps the fingerprint scans single-pass
-    val d = diff(v1, v2, idCol, fpCols).localCheckpoint(eager = false)
+    val d = diff(v1, v2, idCol, fpCols).transform(graft.Boundary.lazyLocal)
     val keep = d.filter(col("status").isin("added", "changed"))
     val withPayload = v2
       .join(if (broadcastDelta) broadcast(keep) else keep, Seq(idCol))

@@ -72,7 +72,7 @@ object SuffixArray {
     require(nBuckets == 0 || (nBuckets >= 2 && nBuckets <= 65536),
       s"nBuckets=$nBuckets")
     val tok = tokens(docs, idCol, textCol)
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val nb = if (nBuckets > 0) nBuckets else nBucketsFor(tok.count())
     // round 1: vocabulary rank, bucketed by the first two chars
     // (order-compatible: (c1, c2) is a prefix of the string order;
@@ -84,7 +84,7 @@ object SuffixArray {
       Seq(col("tok")), "r")
     var s = tok.join(v, Seq("tok"))
       .select(col(idCol), col("pos"), col("r").cast("long").as("r"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     var level = 1
     var out = Map(level -> s)
     while (level < maxLen) {
@@ -113,7 +113,7 @@ object SuffixArray {
         .select(col("r"), col("r2"), col("rn"))
       s = withB.join(ranked, Seq("r", "r2"))
         .select(col(idCol), col("pos"), col("rn").cast("long").as("r"))
-        .localCheckpoint(eager = false)
+        .transform(graft.Boundary.lazyLocal)
       level = 2 * k
       out += level -> s
     }

@@ -26,7 +26,7 @@ object Triangles {
     */
   def perNode(edges: DataFrame): DataFrame = {
     val e = edges.select(col("a"), col("b"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val e2 = e.select(col("a").as("a2"), col("b").as("b2"))
     val e3 = e.select(col("a").as("a3"), col("b").as("b3"))
     val tri = e.join(e2, col("b") === col("a2"))

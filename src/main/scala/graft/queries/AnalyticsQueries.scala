@@ -170,7 +170,7 @@ object AnalyticsQueries {
         // the union of fresh payloads) — checkpoint it once
         val changes = graft.operators.SnapshotDiff
           .changeSet(d0, v2, "doc_id", cols)
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         graft.operators.SnapshotDiff
           .applyChanges(d0, changes, "doc_id", cols)
           .select(col("doc_id"),

@@ -34,7 +34,7 @@ object CurationQueries {
         val w = Dsir.importanceWeights(d, "doc_id", "text",
           col("lang") === "en", DsirBuckets)
           .select(col("doc_id"), col("logw").cast("double").as("logw"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val thr = w.agg(
           round(expr("percentile(logw, 0.8)"), 6).as("thr"))
         w.crossJoin(broadcast(thr))
@@ -108,7 +108,7 @@ object CurationQueries {
             .agg((sum(col("cosine").cast("decimal(12,9)")).cast("double")
               / k.toDouble).as(out))
         val fwd = Similarity.bruteForceTopK(b, a, k)
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val bwd = Similarity.bruteForceTopK(a, b, k)
         val af = meanTopK(fwd, "af")
         val ab = meanTopK(bwd, "ab")
@@ -191,7 +191,7 @@ object CurationQueries {
         val nProbe = DedupQueries.ivfNProbe(dir)
         val fwd = idx.topK(a, k, nProbe,
             neighborFilter = col("neighbor_id") % 2 === 1)
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val bwd = idx.topK(b, k, nProbe,
           neighborFilter = col("neighbor_id") % 2 === 0)
         val af = meanTopK(fwd, "af")
@@ -343,7 +343,7 @@ object CurationQueries {
           .agg(count(lit(1)).as("n_docs"),
             round(sum(col("ce6")).cast("double") / count(lit(1)), 6)
               .as("loss"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val u = ls.select(col("source"), col("n_docs"), col("loss"),
           (round(exp(lit(0.1) * col("loss")), 6).cast("decimal(18,6)")
             * 1000000).cast("long").as("ui"))
@@ -650,7 +650,7 @@ object CurationQueries {
           .groupBy(col("source"))
           .agg(sum(size(split(col("text"), " "))).cast("long")
             .as("n_tokens"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val tot = tok.agg(sum(col("n_tokens")).as("t"))
           .select(col("t"),
             expr("cast(t as decimal(38,0)) * 9 div 5").as("b"))

@@ -199,7 +199,7 @@ object DedupQueries {
       "q25_minhash_neardup",
       (s, dir) => {
         MinHashDedup.nearDuplicatePairs(
-          Tables.load(s, dir, "documents"), "doc_id", "text", threshold = 0.8)
+          Tables.loadWide(s, dir, "documents"), "doc_id", "text", threshold = 0.8)
           .orderBy(col("doc_a"), col("doc_b"))
       },
       Some(s"""
@@ -292,7 +292,7 @@ object DedupQueries {
     QueryDef(
       "q59_dup_clusters",
       (s, dir) => {
-        val docs = Tables.load(s, dir, "documents")
+        val docs = Tables.loadWide(s, dir, "documents")
         val pairs = MinHashDedup.nearDuplicatePairs(
           docs, "doc_id", "text", threshold = 0.8)
         DupClusters.resolve(docs, "doc_id", pairs)
@@ -334,7 +334,7 @@ object DedupQueries {
     QueryDef(
       "q60_leak_safe_split",
       (s, dir) => {
-        val docs = Tables.load(s, dir, "documents")
+        val docs = Tables.loadWide(s, dir, "documents")
         val pairs = MinHashDedup.nearDuplicatePairs(
           docs, "doc_id", "text", threshold = 0.8)
         DupClusters.leakageSafeSplit(docs, "doc_id", pairs, trainPct = 80)
@@ -874,7 +874,7 @@ object DedupQueries {
     QueryDef(
       "q91_crosscorpus_neardup",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
+        val d = Tables.loadWide(s, dir, "documents")
         val refSrc = Seq("src0", "src1", "src2", "src3")
         graft.operators.MinHashDedup.crossCorpusNearDupPairs(
             corpus = d.filter(!col("source").isin(refSrc: _*)),
@@ -1076,7 +1076,7 @@ object DedupQueries {
     QueryDef(
       "q159_dup_degree",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
+        val d = Tables.loadWide(s, dir, "documents")
         val pairs = graft.operators.MinHashDedup.nearDuplicatePairs(
           d, "doc_id", "text", threshold = 0.8)
         val deg = pairs.select(col("doc_a").as("doc_id"))
@@ -1122,7 +1122,7 @@ object DedupQueries {
       "q188_cluster_survivors",
       (s, dir) => {
         import graft.functions.TextFunctions.qualityScore
-        val docs = Tables.load(s, dir, "documents")
+        val docs = Tables.loadWide(s, dir, "documents")
         val pairs = MinHashDedup.nearDuplicatePairs(
           docs, "doc_id", "text", threshold = 0.8)
         val scored = docs.select(col("doc_id"),

@@ -106,7 +106,7 @@ object ModelQueries {
           Some(fp))) {
         val d = Tables.load(s, dir, "documents")
         val feats = LogReg.features(d, "doc_id", "text",
-          col("lang") === "en", LrDim).localCheckpoint(eager = false)
+          col("lang") === "en", LrDim).transform(graft.Boundary.lazyLocal)
         LogReg.train(feats, "doc_id", LrDim, LrRounds, LrLr)
           .repartition(1)
           .write.mode("overwrite").parquet(s"$path/weights")
@@ -119,7 +119,7 @@ object ModelQueries {
   private def lrScored(s: org.apache.spark.sql.SparkSession, dir: String) = {
     val d = Tables.load(s, dir, "documents")
     val feats = LogReg.features(d, "doc_id", "text",
-      col("lang") === "en", LrDim).localCheckpoint(eager = false)
+      col("lang") === "en", LrDim).transform(graft.Boundary.lazyLocal)
     LogReg.score(feats, "doc_id", lrWeights(s, dir))
   }
 
@@ -415,7 +415,7 @@ object ModelQueries {
           .select(col("doc_id"),
             round(qualityScore(col("text")), 6).as("q"),
             (col("doc_id") % 2 === 0).as("is_ref"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val edgeCols = (1 to 9).map(i =>
           round(expr(s"percentile(q, 0.${i})"), 6).as(s"e$i"))
         val edges = scored.filter(col("is_ref"))
@@ -494,14 +494,14 @@ object ModelQueries {
         import org.apache.spark.sql.expressions.Window
         val d = Tables.load(s, dir, "documents")
         val feats = LogReg.features(d, "doc_id", "text",
-          col("lang") === "en", LrDim).localCheckpoint(eager = false)
+          col("lang") === "en", LrDim).transform(graft.Boundary.lazyLocal)
         val w = lrWeights(s, dir)
         val margins = feats
           .join(broadcast(w.select(col("feat"),
             col("weight").as("w"))), Seq("feat"))
           .groupBy(col("doc_id"), col("y"))
           .agg(sum(col("w") * col("x")).as("z"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val lo = lit(0.000001).cast("decimal(18,6)")
         val hi = lit(0.999999).cast("decimal(18,6)")
         val perT = Seq(0.25, 0.5, 1.0, 2.0, 4.0, 8.0).map { t =>
@@ -813,7 +813,7 @@ object ModelQueries {
           .select(col("doc_id"), col("pred_label").as("p1"))
           .join(d.select(col("doc_id"), langId(col("text")).as("p2")),
             Seq("doc_id"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val base = both.agg(count(lit(1)).as("n"),
           sum(when(col("p1") === col("p2"), 1L).otherwise(0L)).as("agree"))
         val pe = both.groupBy(col("p1")).agg(count(lit(1)).as("c1"))
@@ -995,12 +995,12 @@ object ModelQueries {
         // LM — measured 26 jobs for this query).
         val lm = LanguageModel.stupidBackoff(
           d.filter(col("source") =!= "src1"), d, "doc_id", "text")
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val med = lm.filter(col("avg_sb").isNotNull)
           .agg(round(expr("percentile(avg_sb, 0.5)"), 6).as("med"))
         val lr = lrScored(s, dir)
           .select(col("doc_id"), col("p"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val pmed = lr.agg(
           round(expr("percentile(p, 0.5)"), 6).as("pmed"))
         lm.join(lr, Seq("doc_id"))
@@ -1091,7 +1091,7 @@ object ModelQueries {
         val scored = Tables.load(s, dir, "documents")
           .select(col("doc_id"),
             round(qualityScore(col("text")), 6).as("q"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val bands = scored.agg(
           round(expr("percentile(q, 0.75)"), 6).as("p75"),
           round(expr("percentile(q, 0.5)"), 6).as("p50"),

@@ -72,7 +72,7 @@ object ProjectionQueries {
         val vecs = Projections
           .signedProjectionVectors(e, "id", "embedding",
             outDim = K, inDim = 64)
-          .localCheckpoint(eager = false) // corpus + queries branches
+          .transform(graft.Boundary.lazyLocal) // corpus + queries branches
         Similarity.bruteForceTopK(vecs, vecs.filter(col("id") % 50 === 3),
             k = 10)
           .orderBy(col("query_id"), col("rnk"))
@@ -111,7 +111,7 @@ object ProjectionQueries {
         val e = Tables.loadWide(s, dir, "embeddings")
           .select(col("vec_id").as("id"), col("embedding").as("vec"),
             col("label"))
-          .localCheckpoint(eager = false) // corpus + queries + label faces
+          .transform(graft.Boundary.lazyLocal) // corpus + queries + label faces
         val nn = Similarity.bruteForceTopK(
           e.select(col("id"), col("vec")),
           e.filter(col("id") % 5 === 0).select(col("id"), col("vec")),

@@ -101,7 +101,7 @@ object RetrievalQueries {
         // (r16) so both rankers' joins inherit real parallelism
         val post = Tables.stageWidener(s, dir, "documents",
             col("doc_id"))(Retrieval.postings(d, "doc_id", "text"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         Retrieval.rrfTopK(
           Retrieval.bm25FromPostings(post, qs, k = 50),
           Retrieval.jaccardFromPostings(post, qs, k = 50),
@@ -162,7 +162,7 @@ object RetrievalQueries {
         val ranked = Retrieval
           .bm25TopK(d, "doc_id", "text", querySet(d), k = 50,
             widen = Tables.stageWidener(s, dir, "documents", col("doc_id")))
-          .localCheckpoint(eager = false) // positives + negatives faces
+          .transform(graft.Boundary.lazyLocal) // positives + negatives faces
         val pos = ranked.filter(col("rank") === 1)
           .select(col("qid"), col("doc_id").as("pos_id"))
         ranked.filter(col("rank") > 40)
@@ -231,14 +231,14 @@ object RetrievalQueries {
           .unionByName(d.filter(col("doc_id") % 31 === 0)
             .select((col("doc_id") + lit(10000000L)).as("doc_id"),
               concat(lit("new arrival "), col("text")).as("text")))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         // NOT checkpointed (r16): updateTextPostings reads the v1
         // postings exactly once (the eviction anti-join), so a stage
         // boundary here is a pure materialization barrier
         val v1post = Retrieval.postings(d, "doc_id", "text")
         val updated = graft.operators.IndexMaintenance
           .updateTextPostings(v1post, d, v2, "doc_id", "text")
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         Retrieval.bm25FromPostings(updated, querySet(v2), k = 10)
           .orderBy(col("qid"), col("rank"))
       },

@@ -172,14 +172,14 @@ object StatQueries {
         qualityScore(col("text")).as("quality"),
         langId(col("text")).as("lang_pred"),
         fingerprintMd5(col("text")).as("fp"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val s2 = scored.filter(col("quality") >= 0.5 &&
       col("lang_pred") === col("lang"))
     val s3 = s2.withColumn("min_id",
         min(col("doc_id")).over(Window.partitionBy("fp")))
       .filter(col("doc_id") === col("min_id"))
       .select(col("doc_id"), col("text"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val drops = MinHashDedup.nearDuplicatePairs(
         s3, "doc_id", "text", threshold = 0.8)
       .select(col("doc_b").as("doc_id")).distinct()
@@ -267,7 +267,7 @@ object StatQueries {
       "q175_dup_triangles",
       (s, dir) => {
         Triangles.perNode(MinHashDedup.nearDuplicatePairs(
-            Tables.load(s, dir, "documents"), "doc_id", "text",
+            Tables.loadWide(s, dir, "documents"), "doc_id", "text",
             threshold = 0.8)
             .select(col("doc_a").as("a"), col("doc_b").as("b")))
           .orderBy(col("doc_id"))
@@ -580,7 +580,7 @@ object StatQueries {
             qualityScore(col("text")).as("quality"),
             langId(col("text")).as("lang_pred"),
             fingerprintMd5(col("text")).as("fp"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val agg = scored.agg(
             count(lit(1)).as("n_docs"),
             coalesce(sum(col("n_tok")), lit(0L)).as("n_tokens"),
@@ -591,7 +591,7 @@ object StatQueries {
               .otherwise(lit(0L))).as("n_agree"),
             sum(round(col("quality"), 6).cast("decimal(12,6)"))
               .as("q_sum"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         def ratio(num: Column) = when(col("n_docs") > 0,
           round(num.cast("double") / col("n_docs").cast("double"), 6))
           .otherwise(0.0)

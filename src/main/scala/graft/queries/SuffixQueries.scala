@@ -284,7 +284,7 @@ object SuffixQueries {
           .join(lens, Seq("doc_id"))
           .filter(col("pos") + MaxLen <= col("n"))
           .select(col("doc_id"), col("r")).distinct()
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val shared = dg.groupBy(col("r"))
           .agg(count(lit(1)).as("cnt"))
           .filter(col("cnt") >= 2 && col("cnt") <= 8)

@@ -297,7 +297,7 @@ object TextQueries {
           .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy("fp")))
           .filter(col("doc_id") === col("min_id"))
           .select(col("doc_id"), col("text"), col("quality"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         // near-dup removal: greedy drop of the higher id of each pair
         val drops = MinHashDedup.nearDuplicatePairs(
           exactDeduped.select(col("doc_id"), col("text")),
@@ -359,7 +359,7 @@ object TextQueries {
           .withColumn("min_id", min(col("doc_id")).over(Window.partitionBy("fp")))
           .filter(col("doc_id") === col("min_id"))
           .select(col("doc_id"), col("text"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val pairs = MinHashDedup.nearDuplicatePairs(
           exactDeduped, "doc_id", "text", threshold = 0.8)
         val reps = DupClusters.resolve(exactDeduped, "doc_id", pairs)
@@ -525,7 +525,7 @@ object TextQueries {
         val nPairs = n * (n - 1) / 2
         val terms = samp.select(col("doc_id"),
           explode(array_distinct(split(col("text"), " "))).as("term"))
-          .localCheckpoint(eager = false) // sizes + self-join faces
+          .transform(graft.Boundary.lazyLocal) // sizes + self-join faces
         val sizes = terms.groupBy("doc_id").agg(count(lit(1)).as("dn"))
         val inter = terms.as("a")
           .join(terms.as("b"), col("a.term") === col("b.term") &&

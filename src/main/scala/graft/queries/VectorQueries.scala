@@ -131,7 +131,7 @@ object VectorQueries {
         val full = Similarity.bruteForceTopK(
             emb, emb.filter(col("id") < 20), k = 5)
           .select(col("query_id"), col("neighbor_id"))
-          .localCheckpoint(eager = false)
+          .transform(graft.Boundary.lazyLocal)
         val denom = full.agg(count(lit(1)).as("total"))
         val perDim = MrlDims.map { m =>
           val t = emb.select(col("id"), slice(col("vec"), 1, m).as("vec"))

@@ -8,8 +8,9 @@ import org.apache.spark.sql.SparkSession
   * marker exists AND the `_fingerprint` stored beside it matches the
   * caller's fingerprint of the CURRENT input data — regenerating the
   * data at the same path retrains instead of silently serving a stale
-  * model (advisor r5). One implementation for every artifact so a fix
-  * here (e.g. atomic stamping) reaches them all.
+  * model (advisor r5). One implementation for every artifact, so
+  * every artifact's stamps are written atomically (temp file, then
+  * rename).
   */
 object ArtifactGuard {
 
@@ -81,11 +82,30 @@ object ArtifactGuard {
   def stamp(spark: SparkSession, path: String,
       fingerprint: Option[String]): Unit = {
     stamped.add(path)
-    fingerprint.foreach { fp =>
-      val fpFile = new Path(s"$path/_fingerprint")
-      val fs = fpFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(fpFile, true)
-      try out.write(fp.getBytes("UTF-8")) finally out.close()
+    fingerprint.foreach(fp =>
+      writeAtomically(spark, new Path(s"$path/_fingerprint"), fp))
+  }
+
+  /** Write `body` to `file` through a hidden temp file in the same
+    * directory, then rename it into place, so a reader sees either the
+    * old stamp or the whole new one, never a torn write. A crash leaves
+    * only the temp file, whose name no reader looks up: the artifact
+    * reads as not fresh and is rebuilt. Where rename does not replace
+    * an existing target (HDFS semantics), the old file is deleted
+    * first; in that window the stamp reads as absent, which is also
+    * "not fresh", never a stale match.
+    */
+  private def writeAtomically(spark: SparkSession, file: Path,
+      body: String): Unit = {
+    val fs = file.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tmp = new Path(file.getParent,
+      s".${file.getName}.${java.util.UUID.randomUUID}.tmp")
+    val out = fs.create(tmp, false)
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, file) &&
+        !(fs.delete(file, false) && fs.rename(tmp, file))) {
+      fs.delete(tmp, false)
+      throw new java.io.IOException(s"could not rename $tmp to $file")
     }
   }
 
@@ -99,16 +119,13 @@ object ArtifactGuard {
   def writeMeta(spark: SparkSession, path: String,
       meta: Map[String, String]): Unit =
     if (meta.nonEmpty) {
-      val mFile = new Path(s"$path/_meta")
-      val fs = mFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val out = fs.create(mFile, true)
       val body = meta.toSeq.sortBy(_._1)
         .map { case (k, v) =>
           require(!k.contains("=") && !k.contains("\n") &&
             !v.contains("\n"), s"unencodable meta entry $k=$v")
           s"$k=$v"
         }.mkString("\n")
-      try out.write(body.getBytes("UTF-8")) finally out.close()
+      writeAtomically(spark, new Path(s"$path/_meta"), body)
     }
 
   /** Read back `_meta` (empty map when absent — artifacts written

@@ -571,13 +571,13 @@ object StreamDedup {
     // 60-bit md5-prefix keys as the batch operator; checkpointed — the
     // distinct-shingle table feeds three readers at fit)
     val sh = Containment.shingles(corpus, "doc_id", "text", w)
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= dfMin && col("df") <= dfMax)
       .select(col("s"))
     val postings = sh.join(rare, Seq("s"))
       .select(col("s"), col("doc_id").as("corpus_id"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     val docTab = postings
       .groupBy(col("corpus_id"))
       .agg(sort_array(collect_list(col("s"))).as("rare_b"))
@@ -585,7 +585,7 @@ object StreamDedup {
           .agg(sort_array(collect_list(col("s"))).as("sh_b"),
             count(lit(1)).as("n_b")),
         Seq("corpus_id"))
-      .localCheckpoint(eager = false)
+      .transform(graft.Boundary.lazyLocal)
     // budget gate: the fitted frames must stay broadcast-sized (the
     // fitBm25Queries maxTerms convention) — counted ONCE at fit time.
     // Row counts alone are not enough: each docTab row carries the

@@ -228,7 +228,17 @@ class PlanAuditSpec extends SparkSpec {
     // multi-stage pipelines: per-stage task overhead exceeded the
     // parallel-scan win — the r13 "opt-in per query" lesson holding).
     "q119_bm25_topk", "q120_rrf_fusion", "q128_hard_negatives",
-    "q130_bm25_dfcap")
+    "q130_bm25_dfcap",
+    // q25 and the MinHash-pair family: tokenize → shingle-hash →
+    // MinHashSig is fused into the scan stage and feeds a lazy
+    // checkpoint that kept the scan's single partition. q25's signature
+    // stage at sf0.1 on a 4-core box: 1 task, 0.82–1.24 s wall, widened
+    // 4 tasks, 0.25–0.64 s; same-JVM median 2.06 → 1.49 s. The six
+    // consumers below each won a per-query QueryTime A/B at sf0.1
+    // (PERF.md "q25's signature stage widened").
+    "q25_minhash_neardup", "q59_dup_clusters", "q60_leak_safe_split",
+    "q91_crosscorpus_neardup", "q159_dup_degree", "q175_dup_triangles",
+    "q188_cluster_survivors")
 
   /** EVERY shuffle exchange (hash, round-robin, range, single) whose
     * input carries a column matching `payload`, minus the one
@@ -343,8 +353,12 @@ class PlanAuditSpec extends SparkSpec {
   test("at a scale where loadWide engages, the widening exchange is " +
       "the ONLY non-hash exchange carrying text/vectors — and only " +
       "in the opted-in queries (the r13 by-type carve-out, closed)") {
-    import org.apache.spark.sql.catalyst.plans.physical.RoundRobinPartitioning
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.GraftListenerBridge
+    import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RoundRobinPartitioning}
+    import org.apache.spark.sql.execution.QueryExecution
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
     val sf01 = "/root/testdata/sf0.1"
     assume(new java.io.File(s"$sf01/documents.parquet").exists())
     // widening must actually engage at this layout, else the audit
@@ -352,19 +366,36 @@ class PlanAuditSpec extends SparkSpec {
     assert(Tables.wideningEngages(spark, sf01, "documents"),
       "sf0.1 layout no longer engages loadWide; move this audit to a " +
         "dir that does")
-    var sawWidening = false
-    val flagged = wideningExchangeAllowed.toSeq.sorted.flatMap { name =>
-      val qe = SparkEntry.queries(name)(spark, sf01).queryExecution
-      val bad = Metrics.finalNodes(qe.executedPlan).toSeq.collect {
+    // A checkpoint (lazy or eager) runs its source plan as its own
+    // execution while the query is built, and the final plan only
+    // scans the result, so a widening exchange under a checkpoint
+    // shows in those executions, not in the final plan.
+    val construction =
+      new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        construction.add(qe)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def nonHashCarriers(qe: QueryExecution): Seq[ShuffleExchangeExec] =
+      Metrics.finalNodes(qe.executedPlan).toSeq.collect {
         case ex: ShuffleExchangeExec
             if ex.child.output.exists(a => isText(a) || isVector(a)) &&
-              !ex.outputPartitioning.isInstanceOf[
-                org.apache.spark.sql.catalyst.plans.physical.HashPartitioning] =>
-          if (ex.outputPartitioning.isInstanceOf[RoundRobinPartitioning])
-            { sawWidening = true; None }
-          else Some(s"$name: ${ex.outputPartitioning}" +
-            ex.child.output.map(_.name).mkString("[", ",", "]"))
-      }.flatten
+              !ex.outputPartitioning.isInstanceOf[HashPartitioning] => ex
+      }
+    def isWidening(ex: ShuffleExchangeExec): Boolean =
+      ex.outputPartitioning.isInstanceOf[RoundRobinPartitioning]
+    spark.listenerManager.register(listener)
+    val audited = try wideningExchangeAllowed.toSeq.sorted.map { name =>
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      construction.clear()
+      val qe = SparkEntry.queries(name)(spark, sf01).queryExecution
+      GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
+      val widens = (qe +: construction.asScala.toSeq)
+        .exists(c => nonHashCarriers(c).exists(isWidening))
+      val bad = nonHashCarriers(qe).filterNot(isWidening).map(ex =>
+        s"$name: ${ex.outputPartitioning}" +
+          ex.child.output.map(_.name).mkString("[", ",", "]"))
       // the hash-exchange audits hold at this scale too (same
       // allowlists as the sf0.001 sweep)
       val hashBad =
@@ -372,14 +403,16 @@ class PlanAuditSpec extends SparkSpec {
           .filterNot(_ => textExchangeAllowed.contains(name) ||
             vectorExchangeAllowed.contains(name))
           .map(c => s"$name: $c")
-      bad ++ hashBad
-    }
+      (name, widens, bad ++ hashBad)
+    } finally spark.listenerManager.unregister(listener)
+    val flagged = audited.flatMap(_._3)
     assert(flagged.isEmpty,
       s"non-widening exchanges carrying text/vectors at the engaged " +
         s"scale:\n${flagged.mkString("\n")}")
-    assert(sawWidening,
-      "no widening exchange found in any opted-in query at sf0.1 — " +
-        "the wideningExchangeAllowed list is dead weight; prune it")
+    val unwidened = audited.collect { case (name, false, _) => name }
+    assert(unwidened.isEmpty,
+      s"opted-in queries with no widening exchange at sf0.1 (prune " +
+        s"them from wideningExchangeAllowed): ${unwidened.mkString(", ")}")
   }
 
   /** r15's biggest per-row CPU defect class, made a standing gate
