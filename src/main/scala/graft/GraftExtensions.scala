@@ -17,6 +17,14 @@ import graft.functions.expr.{JsonChildStep, JsonDescStep, TryExcept, VariantChil
   *   try_except(e, fallback)                 — general try-except
   *
   * so SQL users get the operators too, not just the Column API.
+  *
+  * It also registers two plan rules:
+  *
+  *   [[graft.rules.NestAggRewrite]] (optimizer) — collect-then-reduce
+  *     → native partial+final aggregates
+  *   [[graft.rules.SmallGlobalSort]] (AQE query-stage preparation) —
+  *     a global sort whose input AQE has measured as small sorts in
+  *     one task instead of through a sampled range exchange
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
@@ -52,5 +60,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => TryExcept(args(0), args(1))))
     // collect-then-reduce → native partial+final aggregates
     ext.injectOptimizerRule(_ => graft.rules.NestAggRewrite)
+    // measured-small sort input → no range exchange, no sampling job
+    ext.injectQueryStagePrepRule(graft.rules.SmallGlobalSort)
   }
 }

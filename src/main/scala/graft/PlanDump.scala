@@ -1,6 +1,22 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.SQLExecution
 object PlanDump {
+  /** Prints `df`'s final adaptive plan (`isFinalPlan=true`), the plan
+    * that actually ran after AQE's runtime re-planning (coalesced
+    * reads, joins switched to broadcast, range exchanges dropped by
+    * `SmallGlobalSort`). The explain before execution is only AQE's
+    * initial plan. The query runs once on its own execution, its rows
+    * dropped on the executors as the `noop` sink would; a `noop` write
+    * would plan a separate execution and leave this one unexecuted.
+    */
+  private def explainFinal(df: DataFrame): Unit = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("plandump"))(
+      qe.toRdd.foreach(_ => ()))
+    df.explain("formatted")
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = Tables.localSession("plandump", 8)
     // override with SPARK_GRAFT_SF_DIR to read plans at another scale
@@ -23,9 +39,8 @@ object PlanDump {
         val t = n.stripPrefix("_rawscan:")
         val df = Tables.loadWide(spark, dir, t)
         println(s"-- loadWide engaged: ${Tables.wideningEngages(spark, dir, t)}")
-        df.filter(col("lang") === "en").select("doc_id", "lang")
-          .explain("formatted")
-      } else SparkEntry.queries(n)(spark, dir).explain("formatted")
+        explainFinal(df.filter(col("lang") === "en").select("doc_id", "lang"))
+      } else explainFinal(SparkEntry.queries(n)(spark, dir))
     }
     spark.stop()
   }

@@ -70,26 +70,41 @@ object Layout {
     }.reduce(_.bitwiseOR(_))
   }
 
-  /** Write `df` clustered by the Z-order of (`xCol`, `yCol`): range-
-    * partition on the z-value into `numFiles` files, sorted within
-    * each. Every file then covers a compact z-interval — a roughly
-    * square region of the (x, y) plane — so min/max column statistics
-    * are TIGHT ON BOTH dimensions and a selective predicate on either
-    * column touches a small fraction of files. (A linear sort makes
-    * one column's stats tight and leaves the other's spanning the
-    * whole domain — every file matches.) Plain parquet prunes at
-    * row-group granularity from these stats; file-granularity
-    * skipping is the table format's job (manifest min/max) — the
-    * layout below is what makes either effective. LayoutSpec measures
-    * the clustering directly: matching rows for a one-column box
-    * predicate land in ≤¼ of the z-ordered files vs ALL files under
-    * the wrong-column linear sort.
+  /** Write `df` clustered by the Z-order of (`xCol`, `yCol`): rows
+    * are routed by z-value into `numFiles` files of consecutive
+    * z-ranges, sorted within each. Every file then covers a compact
+    * z-interval — a roughly square region of the (x, y) plane — so
+    * min/max column statistics are TIGHT ON BOTH dimensions and a
+    * selective predicate on either column touches a small fraction of
+    * files. (A linear sort makes one column's stats tight and leaves
+    * the other's spanning the whole domain — every file matches.)
+    * Plain parquet prunes at row-group granularity from these stats;
+    * file-granularity skipping is the table format's job (manifest
+    * min/max) — the layout below is what makes either effective.
+    * LayoutSpec measures the clustering directly: matching rows for a
+    * one-column box predicate land in ≤¼ of the z-ordered files vs ALL
+    * files under the wrong-column linear sort.
+    *
+    * The file boundaries are the exact `numFiles`-quantiles of the
+    * z-values, computed in one pass before the write, and file `i`
+    * takes the rows above `i` of them. The same input therefore always
+    * gives the same files. (`repartitionByRange` would sample its
+    * boundaries with a seed drawn from the plan's RDD ids, so the
+    * files would depend on how many jobs the session ran before.) The
+    * exact quantile pass keeps one summary entry per row on the
+    * driver, and the boundaries are compared as doubles, which is
+    * exact for `bits` ≤ 26 and merely rounded, still deterministic and
+    * order-preserving, above.
     */
   def writeZOrdered(df: DataFrame, path: String, xCol: String,
       yCol: String, bits: Int, numFiles: Int): Unit = {
     import org.apache.spark.sql.functions._
-    df.withColumn("_z", zValue(col(xCol), col(yCol), bits))
-      .repartitionByRange(numFiles, col("_z"))
+    val z = df.withColumn("_z", zValue(col(xCol), col(yCol), bits))
+    val bounds = z.stat.approxQuantile("_z",
+      Array.tabulate(numFiles - 1)(i => (i + 1).toDouble / numFiles), 0.0)
+    val fileId = bounds.map(b => when(col("_z") > b, 1).otherwise(0))
+      .foldLeft(lit(0))(_ + _)
+    z.repartitionById(numFiles, fileId)
       .sortWithinPartitions(col("_z"))
       .drop("_z")
       .write.mode("overwrite").parquet(path)
