@@ -23,8 +23,12 @@ import graft.functions.expr.{JsonChildStep, JsonDescStep, TryExcept, VariantChil
   *   [[graft.rules.NestAggRewrite]] (optimizer) — collect-then-reduce
   *     → native partial+final aggregates
   *   [[graft.rules.SmallGlobalSort]] (AQE query-stage preparation) —
-  *     a global sort whose input AQE has measured as small sorts in
-  *     one task instead of through a sampled range exchange
+  *     a global sort sorts in one task instead of through a sampled
+  *     range exchange when AQE has measured its input as small, or
+  *     when its input provably runs as one partition. The second case
+  *     holds at any scale: the input already ran as one task, is now
+  *     computed once instead of twice, and only the n-way sort (which
+  *     spills) gives up parallelism.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
@@ -60,7 +64,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => TryExcept(args(0), args(1))))
     // collect-then-reduce → native partial+final aggregates
     ext.injectOptimizerRule(_ => graft.rules.NestAggRewrite)
-    // measured-small sort input → no range exchange, no sampling job
+    // small or one-partition sort input → no range exchange, no sampling job
     ext.injectQueryStagePrepRule(graft.rules.SmallGlobalSort)
   }
 }

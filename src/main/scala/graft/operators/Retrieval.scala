@@ -157,9 +157,10 @@ object Retrieval {
     * `Tables.stageWidener` so the checkpoint is not frozen at the
     * degenerate layout's single partition — the scoring join reads
     * the checkpoint directly (broadcast build side), so its
-    * parallelism IS the checkpoint's. A doc_id-keyed widen also
-    * hands the stats `groupBy(doc_id)` its required distribution,
-    * removing that exchange outright (guide §2.4).
+    * parallelism IS the checkpoint's. The widen's doc_id key does
+    * not reach the stats `groupBy(doc_id)`: the checkpoint scan
+    * reports `UnknownPartitioning(0)`, so that aggregate keeps its
+    * own hash exchange (`plans/q119_bm25_stats_head.txt`, sf0.1).
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, k: Int, maxDfFrac: Double = 1.0,

@@ -1,44 +1,60 @@
 package graft.rules
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.PlanExpression
+import org.apache.spark.sql.catalyst.optimizer.{BuildLeft, BuildRight}
+import org.apache.spark.sql.catalyst.plans.{InnerLike, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.{CoalesceExec, FilterExec, ProjectExec, SortExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.{CoalesceExec, CollectMetricsExec, DeserializeToObjectExec, FileSourceScanExec, FilterExec, GenerateExec, MapPartitionsExec, ProjectExec, RDDScanExec, SerializeFromObjectExec, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, CoalesceShufflePartitions, ShuffleQueryStageExec}
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.exchange.{ENSURE_REQUIREMENTS, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNestedLoopJoinExec}
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.internal.SQLConf
 
-/** AQE query-stage preparation rule: a total `orderBy` whose input AQE
-  * has already measured as small sorts in one task instead of going
-  * through a range exchange.
+/** AQE query-stage preparation rule: a total `orderBy` whose input is
+  * small, or already runs as one task, sorts in one task instead of
+  * going through a range exchange.
   *
   * A global sort plans as `Sort(global) ← Exchange(RangePartitioning)`.
   * Running that exchange costs a `RangePartitioner` sampling job (one
   * pass over the sort's child) and a shuffle map stage (a second
   * pass), after which AQE's coalescer often folds the exchange back
-  * into a single partition. When the child's input is already known
-  * to fit in that single partition, this rule plans
-  * `Sort(global) ← Coalesce(1)` instead: same rows, same order, one
-  * pass, no sampling job, one stage fewer.
+  * into a single partition. This rule plans `Sort(global) ← Coalesce(1)`
+  * instead (same rows, same order, one pass, no sampling job, one stage
+  * fewer) when either of two triggers holds:
   *
-  * Known input bytes are the summed map output of materialized shuffle
-  * stages, reached from the exchange's child through shuffle reads and
-  * operators that never add rows (project, filter, aggregates, windows,
-  * local sorts). Anything else on the way (a scan, a join, a generator,
-  * a stage still running) leaves the size unknown and the exchange in
-  * place. The bound is the one AQE's coalescer applies to the range
-  * exchange it would otherwise plan ([[singlePartitionBytes]]). The
-  * measured input estimates the sort's input (a project or window can
-  * widen rows), so a misjudged sort runs as one task on an input near
-  * that bound; its rows are the same either way. It does nothing with
-  * partition coalescing off, and leaves `repartitionByRange` (a
-  * user-requested exchange, not `ENSURE_REQUIREMENTS`) alone.
+  *  1. '''Measured small input.''' The child's input is the summed map
+  *     output of materialized shuffle stages, reached through shuffle
+  *     reads and operators that never add rows (project, filter,
+  *     aggregates, windows, local sorts), and is at most what AQE's
+  *     coalescer keeps in one partition ([[singlePartitionBytes]]).
+  *     The measured input estimates the sort's input (a project or
+  *     window can widen rows), so a misjudged sort runs as one task on
+  *     an input near that bound.
+  *  2. '''One-partition input.''' The child provably produces exactly
+  *     one partition ([[onePartition]]): a structural walk through
+  *     narrow operators down to a one-partition read.
+  *
+  * Safety of trigger 2: the child's work already runs in one task. The
+  * rewrite computes it once instead of twice (sampling pass and map
+  * stage) and drops a shuffle write and read. The only parallelism it
+  * gives up is the n-way sort after the shuffle, and
+  * `UnsafeExternalSorter` spills, so memory stays bounded. This holds
+  * at any scale, unlike a size estimate: a one-row input a generator
+  * explodes into millions of rows still ran in one task before.
+  *
+  * Either way the rows are the same. It does nothing with partition
+  * coalescing off, and leaves `repartitionByRange` (a user-requested
+  * exchange, not `ENSURE_REQUIREMENTS`) alone.
   *
   * AQE applies it, after `EnsureRequirements`, when it first plans a
-  * query and each time it re-plans after a stage materializes; only
-  * the re-plans see measured stages. With AQE off it never runs.
+  * query (trigger 2 can fire there, over scans) and each time it
+  * re-plans after a stage materializes (both triggers can fire over
+  * measured stages). With AQE off it never runs.
   */
 case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
 
@@ -48,7 +64,7 @@ case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
     plan.transformUp {
       case s @ SortExec(_, true, ShuffleExchangeExec(
           _: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
-          if knownBytes(child).exists(_ <= limit) =>
+          if knownBytes(child).exists(_ <= limit) || onePartition(child, limit) =>
         s.withNewChildren(Seq(CoalesceExec(1, child)))
     }
   }
@@ -88,4 +104,63 @@ case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
       }
     case _ => None
   }
+
+  /** Whether `p` provably produces exactly one partition, computed
+    * without running anything. The walk passes only through operators
+    * that keep their input's partitions (project, filter, generate,
+    * local sort, aggregates and windows, which sit above a shuffle read,
+    * `CollectMetrics`, object (de)serialization, `MapPartitions`, and
+    * the streamed side of a broadcast join) and ends at one of:
+    *  - a shuffle read with one partition spec;
+    *  - a materialized shuffle stage with one partition, or one AQE's
+    *    coalescer will read as one: it may coalesce the shuffle and the
+    *    map output fits in `limit` (the bound of trigger 1);
+    *  - a file scan with one file split (static file listing only: a
+    *    scan with a dynamic-pruning filter, whose subquery would have
+    *    to run, or a bucketed scan is not counted);
+    *  - an RDD scan (a checkpoint) whose RDD has one partition.
+    * Anything else leaves the count unknown.
+    */
+  private def onePartition(p: SparkPlan, limit: => Long): Boolean = p match {
+    case r: AQEShuffleReadExec => r.partitionSpecs.size == 1
+    case s: ShuffleQueryStageExec =>
+      s.isMaterialized && (s.shuffle.numPartitions == 1 ||
+        coalescer.isSupported(s.shuffle) &&
+          s.mapStats.exists(_.bytesByPartitionId.sum <= limit))
+    case f: FileSourceScanExec => oneFileSplit(f)
+    case r: RDDScanExec => r.rdd.getNumPartitions == 1
+    case j: BroadcastHashJoinExec =>
+      onePartition(if (j.buildSide == BuildRight) j.left else j.right, limit)
+    // only the join types whose output is the streamed side's
+    // partitions; the others add a partition for unmatched build rows
+    case j: BroadcastNestedLoopJoinExec => (j.joinType, j.buildSide) match {
+      case (_: InnerLike | LeftOuter | LeftSemi | LeftAnti, BuildRight) =>
+        onePartition(j.left, limit)
+      case (_: InnerLike | RightOuter, BuildLeft) => onePartition(j.right, limit)
+      case _ => false
+    }
+    case _: ProjectExec | _: FilterExec | _: GenerateExec |
+        SortExec(_, false, _, _) | _: BaseAggregateExec | _: WindowExec |
+        _: WindowGroupLimitExec | _: CollectMetricsExec |
+        _: DeserializeToObjectExec | _: SerializeFromObjectExec |
+        _: MapPartitionsExec =>
+      onePartition(p.children.head, limit)
+    case _ => false
+  }
+
+  /** The coalescer whose `isSupported` says which shuffles it may
+    * coalesce (not, for one, a user's `repartition(n)`).
+    */
+  private lazy val coalescer = CoalesceShufflePartitions(session)
+
+  /** One file, no longer than the split size the scan itself will use,
+    * so it reads as one split in one partition.
+    */
+  private def oneFileSplit(f: FileSourceScanExec): Boolean =
+    !f.bucketedScan &&
+      !f.partitionFilters.exists(_.exists(_.isInstanceOf[PlanExpression[_]])) && {
+        val files = f.selectedPartitions
+        files.totalNumberOfFiles == 1 &&
+          files.totalFileSize <= FilePartition.maxSplitBytes(f.relation.sparkSession, files)
+      }
 }
