@@ -23,12 +23,13 @@ import graft.functions.expr.{JsonChildStep, JsonDescStep, TryExcept, VariantChil
   *   [[graft.rules.NestAggRewrite]] (optimizer) — collect-then-reduce
   *     → native partial+final aggregates
   *   [[graft.rules.SmallGlobalSort]] (AQE query-stage preparation) —
-  *     a global sort sorts in one task instead of through a sampled
-  *     range exchange when AQE has measured its input as small, or
-  *     when its input provably runs as one partition. The second case
-  *     holds at any scale: the input already ran as one task, is now
-  *     computed once instead of twice, and only the n-way sort (which
-  *     spills) gives up parallelism.
+  *     a global sort whose input provably runs as one partition (a
+  *     one-file scan, a one-partition checkpoint, or a stage AQE has
+  *     measured as small enough to read as one partition) sorts in one
+  *     task instead of through a sampled range exchange. The input
+  *     already ran as one task and is now computed once instead of
+  *     twice; the sort, and any operator above it up to the next
+  *     exchange, give up the exchange's parallelism.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   private def info(name: String, usage: String) =
@@ -64,7 +65,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       (args: Seq[Expression]) => TryExcept(args(0), args(1))))
     // collect-then-reduce → native partial+final aggregates
     ext.injectOptimizerRule(_ => graft.rules.NestAggRewrite)
-    // small or one-partition sort input → no range exchange, no sampling job
+    // one-partition sort input → no range exchange, no sampling job
     ext.injectQueryStagePrepRule(graft.rules.SmallGlobalSort)
   }
 }

@@ -15,46 +15,42 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, BroadcastNes
 import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 import org.apache.spark.sql.internal.SQLConf
 
-/** AQE query-stage preparation rule: a total `orderBy` whose input is
-  * small, or already runs as one task, sorts in one task instead of
-  * going through a range exchange.
+/** AQE query-stage preparation rule: a total `orderBy` whose input
+  * already runs as one task sorts in that task instead of going through
+  * a range exchange.
   *
   * A global sort plans as `Sort(global) ← Exchange(RangePartitioning)`.
   * Running that exchange costs a `RangePartitioner` sampling job (one
   * pass over the sort's child) and a shuffle map stage (a second
   * pass), after which AQE's coalescer often folds the exchange back
-  * into a single partition. This rule plans `Sort(global) ← Coalesce(1)`
-  * instead (same rows, same order, one pass, no sampling job, one stage
-  * fewer) when either of two triggers holds:
+  * into a single partition. When the child provably produces exactly
+  * one partition ([[onePartition]]: a structural walk through narrow
+  * operators down to a one-partition read, which includes a measured
+  * stage small enough for the coalescer to read as one partition),
+  * this rule plans `Sort(global) ← Coalesce(1)` instead: same rows,
+  * same order, one pass, no sampling job, one stage fewer.
   *
-  *  1. '''Measured small input.''' The child's input is the summed map
-  *     output of materialized shuffle stages, reached through shuffle
-  *     reads and operators that never add rows (project, filter,
-  *     aggregates, windows, local sorts), and is at most what AQE's
-  *     coalescer keeps in one partition ([[singlePartitionBytes]]).
-  *     The measured input estimates the sort's input (a project or
-  *     window can widen rows), so a misjudged sort runs as one task on
-  *     an input near that bound.
-  *  2. '''One-partition input.''' The child provably produces exactly
-  *     one partition ([[onePartition]]): a structural walk through
-  *     narrow operators down to a one-partition read.
-  *
-  * Safety of trigger 2: the child's work already runs in one task. The
+  * Why that is safe: the child's work already runs in one task. The
   * rewrite computes it once instead of twice (sampling pass and map
-  * stage) and drops a shuffle write and read. The only parallelism it
-  * gives up is the n-way sort after the shuffle, and
-  * `UnsafeExternalSorter` spills, so memory stays bounded. This holds
-  * at any scale, unlike a size estimate: a one-row input a generator
-  * explodes into millions of rows still ran in one task before.
+  * stage) and drops a shuffle write and read. What it gives up is the
+  * parallelism after the exchange: the sort itself, and every operator
+  * above it up to the next exchange (a narrow UDF, or a write, which
+  * then writes one file), now run in one task instead of in the
+  * exchange's coalesced partition count. `UnsafeExternalSorter`
+  * spills, so the sort's memory stays bounded. On the registered
+  * queries at most a project runs above a rewritten sort before the
+  * plan's root or the next exchange (PERF.md). Timings cover sf0.01
+  * and sf0.1; a one-row input exploded to 200k rows
+  * (`SmallGlobalSortSpec`) is the largest input checked.
   *
-  * Either way the rows are the same. It does nothing with partition
-  * coalescing off, and leaves `repartitionByRange` (a user-requested
-  * exchange, not `ENSURE_REQUIREMENTS`) alone.
+  * It does nothing with partition coalescing off, and leaves
+  * `repartitionByRange` (a user-requested exchange, not
+  * `ENSURE_REQUIREMENTS`) alone.
   *
   * AQE applies it, after `EnsureRequirements`, when it first plans a
-  * query (trigger 2 can fire there, over scans) and each time it
-  * re-plans after a stage materializes (both triggers can fire over
-  * measured stages). With AQE off it never runs.
+  * query (it can fire there, over scans and checkpoints) and each time
+  * it re-plans after a stage materializes (it can fire over the
+  * measured stages too). With AQE off it never runs.
   */
 case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
 
@@ -64,7 +60,7 @@ case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
     plan.transformUp {
       case s @ SortExec(_, true, ShuffleExchangeExec(
           _: RangePartitioning, child, ENSURE_REQUIREMENTS, _), _)
-          if knownBytes(child).exists(_ <= limit) || onePartition(child, limit) =>
+          if onePartition(child, limit) =>
         s.withNewChildren(Seq(CoalesceExec(1, child)))
     }
   }
@@ -88,23 +84,6 @@ case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
     else math.max(minSize, conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES))
   }
 
-  /** Summed map-output bytes under `p`, if every path from `p` down
-    * ends at a materialized shuffle stage through operators that add
-    * no rows.
-    */
-  private def knownBytes(p: SparkPlan): Option[Long] = p match {
-    case s: ShuffleQueryStageExec if s.isMaterialized =>
-      s.mapStats.map(_.bytesByPartitionId.sum)
-    case r: AQEShuffleReadExec => knownBytes(r.child)
-    case _: ProjectExec | _: FilterExec | _: BaseAggregateExec |
-        _: WindowExec | _: WindowGroupLimitExec |
-        SortExec(_, false, _, _) =>
-      p.children.foldLeft(Option(0L)) { (acc, c) =>
-        acc.flatMap(a => knownBytes(c).map(a + _))
-      }
-    case _ => None
-  }
-
   /** Whether `p` provably produces exactly one partition, computed
     * without running anything. The walk passes only through operators
     * that keep their input's partitions (project, filter, generate,
@@ -114,7 +93,8 @@ case class SmallGlobalSort(session: SparkSession) extends Rule[SparkPlan] {
     *  - a shuffle read with one partition spec;
     *  - a materialized shuffle stage with one partition, or one AQE's
     *    coalescer will read as one: it may coalesce the shuffle and the
-    *    map output fits in `limit` (the bound of trigger 1);
+    *    map output fits in `limit`, what the coalescer keeps in one
+    *    partition;
     *  - a file scan with one file split (static file listing only: a
     *    scan with a dynamic-pruning filter, whose subquery would have
     *    to run, or a bucketed scan is not counted);

@@ -8,10 +8,10 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Plan shape of `graft.rules.SmallGlobalSort`: a total `orderBy` over
-  * an input AQE has measured as small, or over an input that provably
-  * runs as one partition, runs as one sort task (no range exchange, no
-  * sampling job); a sort over anything else, or a user-requested
-  * `repartitionByRange`, keeps its exchange.
+  * an input that provably runs as one partition (among them a stage AQE
+  * has measured as small enough to read as one) runs as one sort task
+  * (no range exchange, no sampling job); a sort over anything else, or
+  * a user-requested `repartitionByRange`, keeps its exchange.
   *
   * The job counts are exact: none of these queries checkpoints, so
   * they repeat from run to run.
