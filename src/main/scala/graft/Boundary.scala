@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Compute-once stage boundaries. */
@@ -33,10 +33,23 @@ object Boundary {
     val cp = df.localCheckpoint(eager = false)
     val accumulators = Metrics.finalNodes(df.queryExecution.executedPlan)
       .flatMap(_.metrics.values).toVector
-    cp.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
+    checkpointRdd(cp)
       .foreach(rdd => retained.synchronized(retained.put(rdd, accumulators)))
     cp
   }
+
+  /** Frees the blocks of a local checkpoint (`localCheckpoint` or
+    * [[lazyLocal]]) that no plan will read again, without waiting.
+    * `Dataset.unpersist` only drops cache-manager entries, and a
+    * checkpoint has none, so without this the blocks of every
+    * superseded round of an iterative loop stay until the
+    * ContextCleaner sees the RDD collected.
+    */
+  def release(cp: Dataset[_]): Unit =
+    checkpointRdd(cp).foreach(_.unpersist(blocking = false))
+
+  private def checkpointRdd(cp: Dataset[_]) =
+    cp.queryExecution.logical.collectFirst { case l: LogicalRDD => l.rdd }
 
   private val retained = new java.util.WeakHashMap[AnyRef, AnyRef]()
 }

@@ -25,9 +25,9 @@ import graft.operators.Similarity
   */
 object IvfSizingStress {
   /** q169's margin body (CurationQueries.scala) over an arbitrary
-    * index: forward/backward IVF top-k, mean-top-4 normalizers,
-    * margin = cos / ((af+ab)/2). nProbe is a parameter since r14 —
-    * the probe-sweep mode measures the recall/cost trade the nProbe
+    * index: forward/backward IVF top-4 between the even and odd ids,
+    * then [[Similarity.marginAlign]]. nProbe is a parameter since r14
+    * — the probe-sweep mode measures the recall/cost trade the nProbe
     * law (SCALE.md §4b) is derived from.
     */
   private def marginAlign(emb: DataFrame, idx: Similarity.IvfIndex,
@@ -35,25 +35,12 @@ object IvfSizingStress {
     val a = emb.filter(col("id") % 2 === 0)
     val b = emb.filter(col("id") % 2 === 1)
     val k = 4
-    def meanTopK(df: DataFrame, out: String) =
-      df.groupBy(col("query_id"))
-        .agg((sum(col("cosine").cast("decimal(12,9)")).cast("double")
-          / k.toDouble).as(out))
     val fwd = idx.topK(a, k, nProbe,
         neighborFilter = col("neighbor_id") % 2 === 1)
       .transform(graft.Boundary.lazyLocal)
     val bwd = idx.topK(b, k, nProbe,
       neighborFilter = col("neighbor_id") % 2 === 0)
-    val af = meanTopK(fwd, "af")
-    val ab = meanTopK(bwd, "ab").withColumnRenamed("query_id", "match_id")
-    fwd.filter(col("rnk") === 1)
-      .select(col("query_id"), col("neighbor_id").as("match_id"),
-        col("cosine"))
-      .join(af, Seq("query_id"))
-      .join(ab, Seq("match_id"))
-      .select(col("query_id"), col("match_id"), col("cosine"),
-        round(col("cosine") / ((col("af") + col("ab")) / 2.0), 6)
-          .as("margin"))
+    Similarity.marginAlign(fwd, bwd, k)
   }
 
   def main(args: Array[String]): Unit = {

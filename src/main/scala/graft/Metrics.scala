@@ -24,7 +24,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - [[aqeSkewSplits]]: the `PartialReducerPartitionSpec`s in the
   *     final adaptive plans, i.e. the skew-split sub-partitions AQE's
   *     skew handling created at runtime;
-  *   - Spark jobs, stages and tasks;
+  *   - Spark jobs and tasks (no stage count: under AQE each job
+  *     completes one stage, so it would equal the job count);
   *   - `[joblog]` jobs over 0.2 s with their first stage's callsite,
   *     `[stagelog]` stages over 0.2 s with task metrics, and
   *     `[planmetrics]` the executed-plan nodes that burned the most
@@ -43,24 +44,23 @@ object Metrics {
   val observedSums: TrieMap[String, Long] = TrieMap.empty
 
   private val jobs = new LongAdder
-  private val stages = new LongAdder
   private val tasks = new LongAdder
 
-  /** What one [[measure]]d body cost: wall seconds, the Spark jobs,
-    * stages and tasks it ran, the AQE skew splits its plans made, the
+  /** What one [[measure]]d body cost: wall seconds, the Spark jobs
+    * and tasks it ran, the AQE skew splits its plans made, the
     * observed-metric sums it moved (keys whose sum changed, with the
     * change) and the artifact (re)builds it triggered.
     */
-  final case class Profile(sec: Double, jobs: Long, stages: Long,
-      tasks: Long, skewSplits: Long, observed: Map[String, Long],
+  final case class Profile(sec: Double, jobs: Long, tasks: Long,
+      skewSplits: Long, observed: Map[String, Long],
       artifactBuilds: Long) {
     /** Sum of the observed deltas whose key ends with `suffix`. */
     def observedSum(suffix: String): Long =
       observed.collect { case (k, v) if k.endsWith(suffix) => v }.sum
   }
 
-  private def counters(): (Long, Long, Long, Long, Map[String, Long], Long) =
-    (jobs.sum, stages.sum, tasks.sum, aqeSkewSplits.sum, observedSums.toMap,
+  private def counters(): (Long, Long, Long, Map[String, Long], Long) =
+    (jobs.sum, tasks.sum, aqeSkewSplits.sum, observedSums.toMap,
       graft.sources.ArtifactGuard.buildEventCount.toLong)
 
   /** Runs `body` once and returns its result with its [[Profile]].
@@ -70,16 +70,16 @@ object Metrics {
     */
   def measure[A](spark: SparkSession)(body: => A): (A, Profile) = {
     GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    val (j0, s0, t0, k0, m0, b0) = counters()
+    val (j0, t0, k0, m0, b0) = counters()
     val start = System.nanoTime()
     val a = body
     val sec = (System.nanoTime() - start) / 1e9
     GraftListenerBridge.waitUntilEmpty(spark.sparkContext)
-    val (j1, s1, t1, k1, m1, b1) = counters()
+    val (j1, t1, k1, m1, b1) = counters()
     val observed = m1.collect {
       case (k, v) if v != m0.getOrElse(k, 0L) => k -> (v - m0.getOrElse(k, 0L))
     }
-    (a, Profile(sec, j1 - j0, s1 - s0, t1 - t0, k1 - k0, observed, b1 - b0))
+    (a, Profile(sec, j1 - j0, t1 - t0, k1 - k0, observed, b1 - b0))
   }
 
   /** Ordered fields of one stress-main JSON line, starting with
@@ -137,7 +137,7 @@ object Metrics {
     "sort time", "build time", "collect time", "shuffle write time",
     "time to build hash map", "scan time")
 
-  /** Both a `SparkListener` (jobs, stages, tasks, joblog, stagelog) and
+  /** Both a `SparkListener` (jobs, tasks, joblog, stagelog) and
     * a `QueryExecutionListener` (observed metrics, skew splits,
     * planmetrics). Both kinds of callback run on Spark's shared
     * listener queue, so one drain settles them.
@@ -160,7 +160,6 @@ object Metrics {
       }
 
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      stages.add(1)
       val i = s.stageInfo
       val wall = (for {a <- i.completionTime; b <- i.submissionTime}
         yield (a - b) / 1e3).getOrElse(-1.0)

@@ -6,11 +6,12 @@ package graft
   * forcing as Bench, one untimed warmup per query, N timed repeats
   * (SPARK_GRAFT_REPS, default 3; 1 gives one warm and one timed run).
   *
-  * Each `[qtime]` line also carries the Spark jobs, stages and tasks of
-  * the last timed rep. At sf0.1 the tables are tiny, so wall-clock is
+  * Each `[qtime]` line also carries the Spark jobs and tasks of the
+  * last timed rep. At sf0.1 the tables are tiny, so wall-clock is
   * dominated by driver round-trips (job submissions, AQE stage
-  * materializations): jobs/stages ARE the cost model, and they are
-  * also what a 100 TB run pays as synchronization barriers.
+  * materializations): jobs ARE the cost model (under AQE each job runs
+  * one stage), and they are also what a 100 TB run pays as
+  * synchronization barriers.
   *
   * stderr carries the session's `Metrics` listener logs (`[joblog]`,
   * `[stagelog]`, `[planmetrics]`), so a slow rep attributes to a job,
@@ -34,8 +35,7 @@ object QueryTime {
       val all = ps.map(_.sec).sorted
       val last = ps.last
       println(f"[qtime] $name%-28s min=${all.head}%.2f med=${all(reps / 2)}%.2f " +
-        f"max=${all.last}%.2f jobs=${last.jobs}%3d " +
-        f"stages=${last.stages}%3d tasks=${last.tasks}%5d")
+        f"max=${all.last}%.2f jobs=${last.jobs}%3d tasks=${last.tasks}%5d")
     }
     spark.stop()
   }

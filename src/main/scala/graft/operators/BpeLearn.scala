@@ -335,11 +335,11 @@ object BpeLearn {
           }
           .filter(_._1.lengthCompare(2) >= 0)
           .localCheckpoint()
-        seqs.unpersist()
+        graft.Boundary.release(seqs)
         seqs = next
       }
     }
-    seqs.unpersist()
+    graft.Boundary.release(seqs)
     (merges.toSeq.toDF("rank", "left", "right", "merged", "pair_count"),
       rounds)
   }

@@ -64,6 +64,7 @@ object DupClusters {
       .localCheckpoint()
     if (edges.count() <= driverEdgeBudget) {
       val es = edges.as[(Long, Long)].collect()
+      graft.Boundary.release(edges)
       val uf = new MinUnionFind
       es.foreach { case (a, b) => uf.union(a, b) }
       // touched nodes → their component min; everyone else is a
@@ -99,9 +100,11 @@ object DupClusters {
       val s = labelSum(next)
       converged = s == prevSum // labels are monotone non-increasing
       prevSum = s
+      graft.Boundary.release(labels)
       labels = next
       iter += 1
     }
+    graft.Boundary.release(edges)
     if (converged) labels
     else {
       // diameter exceeded the propagation budget: not silent — log and
@@ -178,6 +181,7 @@ object DupClusters {
       converged = s == sig &&
         next.exceptAll(edges).isEmpty
       sig = s
+      graft.Boundary.release(edges)
       edges = next
       iter += 1
     }

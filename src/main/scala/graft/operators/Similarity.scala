@@ -130,6 +130,32 @@ object Similarity {
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rnk"))
   }
 
+  /** Margin-criterion alignment (Artetxe & Schwenk 2019) from two
+    * top-`k` neighbor frames (query_id, neighbor_id, cosine, rnk): `fwd`
+    * from side A into side B, `bwd` from B into A. Each A query keeps
+    * its best B match, scored margin = cos / ((af + ab) / 2), where af
+    * and ab are the mean top-k cosines of the query and of the match
+    * (each summed as DECIMAL(12,9), so order-free), rounded to 6.
+    * Output: (query_id, match_id, cosine, margin). `fwd` feeds two
+    * branches, so a caller with a heavy `fwd` checkpoints it.
+    */
+  def marginAlign(fwd: DataFrame, bwd: DataFrame, k: Int): DataFrame = {
+    def meanTopK(df: DataFrame, out: String) =
+      df.groupBy(col("query_id"))
+        .agg((sum(col("cosine").cast("decimal(12,9)")).cast("double")
+          / k.toDouble).as(out))
+    val af = meanTopK(fwd, "af")
+    val ab = meanTopK(bwd, "ab").withColumnRenamed("query_id", "match_id")
+    fwd.filter(col("rnk") === 1)
+      .select(col("query_id"), col("neighbor_id").as("match_id"),
+        col("cosine"))
+      .join(af, Seq("query_id"))
+      .join(ab, Seq("match_id"))
+      .select(col("query_id"), col("match_id"), col("cosine"),
+        round(col("cosine") / ((col("af") + col("ab")) / 2.0), 6)
+          .as("margin"))
+  }
+
   /** Filtered (metadata-constrained) similarity search: top-k among
     * only the corpus vectors satisfying a per-query attribute
     * constraint — here label-equality ("nearest docs in the SAME

@@ -243,14 +243,7 @@ object AnalyticsQueries {
       Some(s"""
         WITH tok AS (
           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         dup AS (
           SELECT a AS doc_a, b AS doc_b FROM pairs WHERE jaccard >= 0.8),
         cands AS (

@@ -58,43 +58,8 @@ object ClassifierQueries {
         NaiveBayes.classify(d, "doc_id", "text", d, "lang")
           .orderBy(col("doc_id"))
       },
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-          FROM documents),
-        dt AS (SELECT doc_id, w, count(*) AS k FROM tok GROUP BY ALL),
-        lt AS (SELECT lang AS label, w, count(*) AS cnt
-               FROM tok GROUP BY ALL),
-        tot AS (SELECT label, sum(cnt) AS tot FROM lt GROUP BY 1),
-        v AS (SELECT count(DISTINCT w) AS v FROM lt),
-        n AS (SELECT count(*) AS n FROM documents),
-        consts AS (
-          SELECT d.lang AS label,
-                 CAST(round(ln(count(*) * 1.0 / any_value(n.n)), 6)
-                      AS DECIMAL(18,6)) AS prior,
-                 CAST(round(ln(1.0 / (any_value(tot.tot) + any_value(v.v))), 6)
-                      AS DECIMAL(18,6)) AS smooth
-          FROM documents d CROSS JOIN n CROSS JOIN v
-          JOIN tot ON tot.label = d.lang
-          GROUP BY 1),
-        lp AS (
-          SELECT lt.label, lt.w,
-                 CAST(round(ln((lt.cnt + 1.0) / (tot.tot + v.v)), 6)
-                      AS DECIMAL(18,6)) AS lp
-          FROM lt JOIN tot USING (label) CROSS JOIN v),
-        obs AS (
-          SELECT dt.doc_id, lp.label,
-                 sum(dt.k * (lp.lp - c.smooth)) AS obs_sum
-          FROM dt JOIN lp ON dt.w = lp.w
-          JOIN consts c ON c.label = lp.label
-          GROUP BY 1, 2),
-        dl AS (SELECT doc_id, sum(k) AS n_tok FROM dt GROUP BY 1),
-        scored AS (
-          SELECT dl.doc_id, c.label,
-                 c.prior + dl.n_tok * c.smooth + coalesce(obs.obs_sum, 0)
-                   AS score
-          FROM dl CROSS JOIN consts c
-          LEFT JOIN obs ON obs.doc_id = dl.doc_id AND obs.label = c.label),
+      Some(s"""
+        WITH ${ModelOracleSql.nbScored},
         ranked AS (
           SELECT doc_id, label, score,
                  row_number() OVER (PARTITION BY doc_id
@@ -122,43 +87,8 @@ object ClassifierQueries {
           .agg(count(lit(1)).as("n"))
           .orderBy(col("true_label"), col("pred_label"))
       },
-      Some("""
-        WITH tok AS (
-          SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-          FROM documents),
-        dt AS (SELECT doc_id, w, count(*) AS k FROM tok GROUP BY ALL),
-        lt AS (SELECT lang AS label, w, count(*) AS cnt
-               FROM tok GROUP BY ALL),
-        tot AS (SELECT label, sum(cnt) AS tot FROM lt GROUP BY 1),
-        v AS (SELECT count(DISTINCT w) AS v FROM lt),
-        n AS (SELECT count(*) AS n FROM documents),
-        consts AS (
-          SELECT d.lang AS label,
-                 CAST(round(ln(count(*) * 1.0 / any_value(n.n)), 6)
-                      AS DECIMAL(18,6)) AS prior,
-                 CAST(round(ln(1.0 / (any_value(tot.tot) + any_value(v.v))), 6)
-                      AS DECIMAL(18,6)) AS smooth
-          FROM documents d CROSS JOIN n CROSS JOIN v
-          JOIN tot ON tot.label = d.lang
-          GROUP BY 1),
-        lp AS (
-          SELECT lt.label, lt.w,
-                 CAST(round(ln((lt.cnt + 1.0) / (tot.tot + v.v)), 6)
-                      AS DECIMAL(18,6)) AS lp
-          FROM lt JOIN tot USING (label) CROSS JOIN v),
-        obs AS (
-          SELECT dt.doc_id, lp.label,
-                 sum(dt.k * (lp.lp - c.smooth)) AS obs_sum
-          FROM dt JOIN lp ON dt.w = lp.w
-          JOIN consts c ON c.label = lp.label
-          GROUP BY 1, 2),
-        dl AS (SELECT doc_id, sum(k) AS n_tok FROM dt GROUP BY 1),
-        scored AS (
-          SELECT dl.doc_id, c.label,
-                 c.prior + dl.n_tok * c.smooth + coalesce(obs.obs_sum, 0)
-                   AS score
-          FROM dl CROSS JOIN consts c
-          LEFT JOIN obs ON obs.doc_id = dl.doc_id AND obs.label = c.label),
+      Some(s"""
+        WITH ${ModelOracleSql.nbScored},
         ranked AS (
           SELECT doc_id, label, score,
                  row_number() OVER (PARTITION BY doc_id

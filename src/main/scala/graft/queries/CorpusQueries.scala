@@ -20,6 +20,71 @@ object CorpusQueries {
   private def piiSql(label: String): String =
     graft.functions.TextFunctions.piiPatterns.find(_._1 == label).get._2
 
+  /** `enc(w, ntok)`: each word's token count after the last merge in
+    * `m`, read off the replayed segmentation `rec(w, s, r)` (one
+    * chr(1) opens each token of `s`).
+    */
+  private val bpeEnc: String = """enc AS (
+          SELECT w, CAST(length(s) - length(replace(s, chr(1), ''))
+                         AS BIGINT) AS ntok
+          FROM rec
+          WHERE r = coalesce((SELECT max(rank) FROM m), 0))"""
+
+  /** BPE encoding replay over the merge table saved at `merges`
+    * (`BpeLearn.encodeTokenCounts`): defines `m(rank, l, r)`, the
+    * non-empty whitespace tokens `tok(doc_id, w)`, and `enc(w, ntok)`
+    * for every distinct token (recursive; follows `WITH RECURSIVE`).
+    */
+  private def bpeEncode(merges: String): String = s"""m AS (SELECT rank, "left" AS l, "right" AS r
+              FROM '$merges/*.parquet'),
+        tok AS (
+          SELECT doc_id, w FROM (
+            SELECT doc_id, unnest(string_split(text, ' ')) AS w
+            FROM documents)
+          WHERE w <> ''),
+        words AS (SELECT DISTINCT w FROM tok),
+        rec AS (
+          SELECT w,
+                 array_to_string(list_transform(string_split(w, ''),
+                                 c -> chr(1) || c || chr(2)), '') AS s,
+                 CAST(0 AS BIGINT) AS r
+          FROM words
+          UNION ALL
+          SELECT rec.w,
+                 replace(rec.s,
+                         chr(1) || m.l || chr(2) || chr(1) || m.r || chr(2),
+                         chr(1) || m.l || m.r || chr(2)),
+                 rec.r + 1
+          FROM rec JOIN m ON m.rank = rec.r + 1),
+        $bpeEnc"""
+
+  /** BPE merge-learning replay, closing a `WITH RECURSIVE` chain whose
+    * `rec(…, c, s, r)` holds each word (count `c`) segmented after the
+    * first `r` saved merges: the most frequent adjacent pair at each
+    * rank (ties on the pair, counts ≥ 2), which must equal the saved
+    * merge at rank r + 1, as the rows of the first 12 ranks.
+    */
+  private val bpeBestPairs: String = """seg AS (
+          SELECT r, c,
+                 string_split(substr(s, 2, length(s) - 2),
+                              chr(2) || chr(1)) AS lst
+          FROM rec),
+        pairs AS (
+          SELECT r, lst[i] AS a, lst[i + 1] AS b,
+                 CAST(sum(c) AS BIGINT) AS cnt
+          FROM seg, LATERAL unnest(range(1, len(lst))) AS u(i)
+          GROUP BY r, a, b),
+        best AS (
+          SELECT r, a, b, cnt,
+                 ROW_NUMBER() OVER (PARTITION BY r
+                   ORDER BY cnt DESC, a, b) AS rn
+          FROM pairs)
+        SELECT CAST(r + 1 AS BIGINT) AS rank, a AS "left", b AS "right",
+               a || b AS merged, cnt AS pair_count
+        FROM best
+        WHERE rn = 1 AND cnt >= 2 AND r < 12
+        ORDER BY rank"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- q63: Gopher-style repetition quality filters ----
@@ -448,26 +513,8 @@ object CorpusQueries {
         CorpusOps.bigramCrossEntropy(d, "doc_id", "text")
           .orderBy(col("doc_id"))
       },
-      Some("""
-        WITH t AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-          FROM t, LATERAL unnest(range(1, greatest(len(tk), 1))) AS u(i)),
-        db AS (
-          SELECT doc_id, w1, w2, count(*) AS k FROM pos GROUP BY ALL),
-        cb AS (
-          SELECT w1, w2, CAST(sum(k) AS BIGINT) AS cb FROM db GROUP BY ALL),
-        cu AS (
-          SELECT w1, CAST(sum(k) AS BIGINT) AS cu FROM db GROUP BY 1),
-        per AS (
-          SELECT db.doc_id,
-                 CAST(sum(db.k) AS BIGINT) AS n_bigrams,
-                 sum(CAST(round(-ln(cb.cb / cu.cu), 4) AS DECIMAL(18,4)) * db.k) AS ce
-          FROM db
-          JOIN cb ON db.w1 = cb.w1 AND db.w2 = cb.w2
-          JOIN cu ON db.w1 = cu.w1
-          GROUP BY 1)
+      Some(s"""
+        WITH ${ModelOracleSql.bigramCe}
         SELECT d.doc_id, per.n_bigrams,
                CAST(per.ce AS DOUBLE) / per.n_bigrams AS avg_ce
         FROM documents d LEFT JOIN per ON d.doc_id = per.doc_id
@@ -733,26 +780,7 @@ object CorpusQueries {
                          chr(1) || m.l || m.r || chr(2)),
                  rec.r + 1
           FROM rec JOIN m ON m.rank = rec.r + 1),
-        seg AS (
-          SELECT r, c,
-                 string_split(substr(s, 2, length(s) - 2),
-                              chr(2) || chr(1)) AS lst
-          FROM rec),
-        pairs AS (
-          SELECT r, lst[i] AS a, lst[i + 1] AS b,
-                 CAST(sum(c) AS BIGINT) AS cnt
-          FROM seg, LATERAL unnest(range(1, len(lst))) AS u(i)
-          GROUP BY r, a, b),
-        best AS (
-          SELECT r, a, b, cnt,
-                 ROW_NUMBER() OVER (PARTITION BY r
-                   ORDER BY cnt DESC, a, b) AS rn
-          FROM pairs)
-        SELECT CAST(r + 1 AS BIGINT) AS rank, a AS "left", b AS "right",
-               a || b AS merged, cnt AS pair_count
-        FROM best
-        WHERE rn = 1 AND cnt >= 2 AND r < 12
-        ORDER BY rank""")),
+        $bpeBestPairs""")),
 
     // ---- q80: duplicated-span removal (ExactSubstr-style) ----
     // Splice every corpus-duplicated 5-token span out of the corpus
@@ -859,32 +887,7 @@ object CorpusQueries {
       },
       None, oracleFn = Some(dir => s"""
         WITH RECURSIVE
-        m AS (SELECT rank, "left" AS l, "right" AS r
-              FROM '${graft.operators.BpeLearn.artifactPath(dir, 24)}/*.parquet'),
-        tok AS (
-          SELECT doc_id, w FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM documents)
-          WHERE w <> ''),
-        words AS (SELECT DISTINCT w FROM tok),
-        rec AS (
-          SELECT w,
-                 array_to_string(list_transform(string_split(w, ''),
-                                 c -> chr(1) || c || chr(2)), '') AS s,
-                 CAST(0 AS BIGINT) AS r
-          FROM words
-          UNION ALL
-          SELECT rec.w,
-                 replace(rec.s,
-                         chr(1) || m.l || chr(2) || chr(1) || m.r || chr(2),
-                         chr(1) || m.l || m.r || chr(2)),
-                 rec.r + 1
-          FROM rec JOIN m ON m.rank = rec.r + 1),
-        enc AS (
-          SELECT w, CAST(length(s) - length(replace(s, chr(1), ''))
-                         AS BIGINT) AS ntok
-          FROM rec
-          WHERE r = coalesce((SELECT max(rank) FROM m), 0)),
+        ${bpeEncode(graft.operators.BpeLearn.artifactPath(dir, 24))},
         perdoc AS (
           SELECT t.doc_id,
                  CAST(count(*) AS BIGINT) AS n_words,
@@ -931,32 +934,7 @@ object CorpusQueries {
       },
       None, oracleFn = Some(dir => s"""
         WITH RECURSIVE
-        m AS (SELECT rank, "left" AS l, "right" AS r
-              FROM '${graft.operators.BpeLearn.artifactPath(dir, 24)}/*.parquet'),
-        tok AS (
-          SELECT doc_id, w FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM documents)
-          WHERE w <> ''),
-        words AS (SELECT DISTINCT w FROM tok),
-        rec AS (
-          SELECT w,
-                 array_to_string(list_transform(string_split(w, ''),
-                                 c -> chr(1) || c || chr(2)), '') AS s,
-                 CAST(0 AS BIGINT) AS r
-          FROM words
-          UNION ALL
-          SELECT rec.w,
-                 replace(rec.s,
-                         chr(1) || m.l || chr(2) || chr(1) || m.r || chr(2),
-                         chr(1) || m.l || m.r || chr(2)),
-                 rec.r + 1
-          FROM rec JOIN m ON m.rank = rec.r + 1),
-        enc AS (
-          SELECT w, CAST(length(s) - length(replace(s, chr(1), ''))
-                         AS BIGINT) AS ntok
-          FROM rec
-          WHERE r = coalesce((SELECT max(rank) FROM m), 0)),
+        ${bpeEncode(graft.operators.BpeLearn.artifactPath(dir, 24))},
         perdoc AS (
           SELECT t.doc_id,
                  CAST(count(*) AS BIGINT) AS n_words,
@@ -1027,26 +1005,7 @@ object CorpusQueries {
                          chr(1) || m.l || m.r || chr(2)),
                  rec.r + 1
           FROM rec JOIN m ON m.rank = rec.r + 1),
-        seg AS (
-          SELECT r, c,
-                 string_split(substr(s, 2, length(s) - 2),
-                              chr(2) || chr(1)) AS lst
-          FROM rec),
-        pairs AS (
-          SELECT r, lst[i] AS a, lst[i + 1] AS b,
-                 CAST(sum(c) AS BIGINT) AS cnt
-          FROM seg, LATERAL unnest(range(1, len(lst))) AS u(i)
-          GROUP BY r, a, b),
-        best AS (
-          SELECT r, a, b, cnt,
-                 ROW_NUMBER() OVER (PARTITION BY r
-                   ORDER BY cnt DESC, a, b) AS rn
-          FROM pairs)
-        SELECT CAST(r + 1 AS BIGINT) AS rank, a AS "left", b AS "right",
-               a || b AS merged, cnt AS pair_count
-        FROM best
-        WHERE rn = 1 AND cnt >= 2 AND r < 12
-        ORDER BY rank""")),
+        $bpeBestPairs""")),
 
     // ---- q102: BYTE-LEVEL BPE encoding with special tokens ----
     // q86's dual for the byte-level tokenizer: load the q101 artifact
@@ -1100,11 +1059,7 @@ object CorpusQueries {
                          chr(1) || m.l || m.r || chr(2)),
                  rec.r + 1
           FROM rec JOIN m ON m.rank = rec.r + 1),
-        enc AS (
-          SELECT w, CAST(length(s) - length(replace(s, chr(1), ''))
-                         AS BIGINT) AS ntok
-          FROM rec
-          WHERE r = coalesce((SELECT max(rank) FROM m), 0)),
+        $bpeEnc,
         perdoc AS (
           SELECT t.doc_id,
                  CAST(count(*) AS BIGINT) AS n_words,
@@ -1144,26 +1099,8 @@ object CorpusQueries {
             col("avg_ce"))
           .orderBy(col("doc_id"))
       },
-      Some("""
-        WITH t AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-          FROM t, LATERAL unnest(range(1, greatest(len(tk), 1))) AS u(i)),
-        db AS (
-          SELECT doc_id, w1, w2, count(*) AS k FROM pos GROUP BY ALL),
-        cb AS (
-          SELECT w1, w2, CAST(sum(k) AS BIGINT) AS cb FROM db GROUP BY ALL),
-        cu AS (
-          SELECT w1, CAST(sum(k) AS BIGINT) AS cu FROM db GROUP BY 1),
-        per AS (
-          SELECT db.doc_id,
-                 CAST(sum(db.k) AS BIGINT) AS n_bigrams,
-                 sum(CAST(round(-ln(cb.cb / cu.cu), 4) AS DECIMAL(18,4)) * db.k) AS ce
-          FROM db
-          JOIN cb ON db.w1 = cb.w1 AND db.w2 = cb.w2
-          JOIN cu ON db.w1 = cu.w1
-          GROUP BY 1),
+      Some(s"""
+        WITH ${ModelOracleSql.bigramCe},
         scored AS (
           SELECT doc_id, CAST(ce AS DOUBLE) / n_bigrams AS avg_ce
           FROM per WHERE n_bigrams >= 1),
@@ -1287,32 +1224,7 @@ object CorpusQueries {
       },
       None, oracleFn = Some(dir => s"""
         WITH RECURSIVE
-        m AS (SELECT rank, "left" AS l, "right" AS r
-              FROM '${graft.operators.BpeLearn.bytesArtifactPath(dir, 16)}/*.parquet'),
-        tok AS (
-          SELECT doc_id, w FROM (
-            SELECT doc_id, unnest(string_split(text, ' ')) AS w
-            FROM documents)
-          WHERE w <> ''),
-        words AS (SELECT DISTINCT w FROM tok),
-        rec AS (
-          SELECT w,
-                 array_to_string(list_transform(string_split(w, ''),
-                                 c -> chr(1) || c || chr(2)), '') AS s,
-                 CAST(0 AS BIGINT) AS r
-          FROM words
-          UNION ALL
-          SELECT rec.w,
-                 replace(rec.s,
-                         chr(1) || m.l || chr(2) || chr(1) || m.r || chr(2),
-                         chr(1) || m.l || m.r || chr(2)),
-                 rec.r + 1
-          FROM rec JOIN m ON m.rank = rec.r + 1),
-        enc AS (
-          SELECT w, CAST(length(s) - length(replace(s, chr(1), ''))
-                         AS BIGINT) AS ntok
-          FROM rec
-          WHERE r = coalesce((SELECT max(rank) FROM m), 0)),
+        ${bpeEncode(graft.operators.BpeLearn.bytesArtifactPath(dir, 16))},
         perdoc AS (
           SELECT t.doc_id,
                  CAST(count(*) AS BIGINT) AS n_words,

@@ -15,6 +15,44 @@ object CurationQueries {
 
   private val DsirBuckets = 512
 
+  /** `tok(source, n_tokens)`: whitespace tokens per source. */
+  private val sourceTokens: String = """tok AS (
+          SELECT source,
+                 CAST(sum(len(string_split(text, ' '))) AS BIGINT)
+                   AS n_tokens
+          FROM documents GROUP BY 1)"""
+
+  /** UniMax water-fill over `tok` with epoch cap E = 2 and budget
+    * B = ⌊1.8·Σn⌋ (`Budgeting.waterFill`): `cc` holds each source's
+    * cap, rank and `capped` flag, `mf(p_m, m)` the capped prefix's
+    * token sum and size.
+    */
+  private val unimaxCapped: String = s"""$sourceTokens,
+        tot AS (
+          SELECT sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS budget,
+                 CAST(count(*) AS BIGINT) AS k
+          FROM tok),
+        c AS (
+          SELECT source, n_tokens, n_tokens * 2 AS cap, budget, k,
+                 ROW_NUMBER() OVER
+                   (ORDER BY n_tokens * 2, source) AS rn,
+                 coalesce(sum(n_tokens * 2) OVER
+                   (ORDER BY n_tokens * 2, source
+                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+                   0) AS pprev
+          FROM tok CROSS JOIN tot),
+        cc AS (
+          SELECT *,
+                 (CAST(pprev AS HUGEINT) +
+                  CAST(cap AS HUGEINT) * (k - rn + 1)) <= budget
+                   AS capped
+          FROM c),
+        mf AS (
+          SELECT coalesce(sum(CASE WHEN capped THEN cap END), 0)
+                   AS p_m,
+                 coalesce(sum(CASE WHEN capped THEN 1 END), 0) AS m
+          FROM cc)"""
+
   def defs: Seq[QueryDef] = Seq(
 
     // ---- q161: DSIR importance-weighted selection ----
@@ -103,24 +141,10 @@ object CurationQueries {
         val a = emb.filter(col("id") % 2 === 0)
         val b = emb.filter(col("id") % 2 === 1)
         val k = 4
-        def meanTopK(df: org.apache.spark.sql.DataFrame, out: String) =
-          df.groupBy(col("query_id"))
-            .agg((sum(col("cosine").cast("decimal(12,9)")).cast("double")
-              / k.toDouble).as(out))
         val fwd = Similarity.bruteForceTopK(b, a, k)
           .transform(graft.Boundary.lazyLocal)
         val bwd = Similarity.bruteForceTopK(a, b, k)
-        val af = meanTopK(fwd, "af")
-        val ab = meanTopK(bwd, "ab")
-          .withColumnRenamed("query_id", "match_id")
-        fwd.filter(col("rnk") === 1)
-          .select(col("query_id"), col("neighbor_id").as("match_id"),
-            col("cosine"))
-          .join(af, Seq("query_id"))
-          .join(ab, Seq("match_id"))
-          .select(col("query_id"), col("match_id"), col("cosine"),
-            round(col("cosine") / ((col("af") + col("ab")) / 2.0), 6)
-              .as("margin"))
+        Similarity.marginAlign(fwd, bwd, k)
           .withColumn("accepted", col("margin") >= 1.0)
           .orderBy(col("query_id"))
       },
@@ -184,27 +208,13 @@ object CurationQueries {
         val a = emb.filter(col("id") % 2 === 0)
         val b = emb.filter(col("id") % 2 === 1)
         val k = 4
-        def meanTopK(df: org.apache.spark.sql.DataFrame, out: String) =
-          df.groupBy(col("query_id"))
-            .agg((sum(col("cosine").cast("decimal(12,9)")).cast("double")
-              / k.toDouble).as(out))
         val nProbe = DedupQueries.ivfNProbe(dir)
         val fwd = idx.topK(a, k, nProbe,
             neighborFilter = col("neighbor_id") % 2 === 1)
           .transform(graft.Boundary.lazyLocal)
         val bwd = idx.topK(b, k, nProbe,
           neighborFilter = col("neighbor_id") % 2 === 0)
-        val af = meanTopK(fwd, "af")
-        val ab = meanTopK(bwd, "ab")
-          .withColumnRenamed("query_id", "match_id")
-        fwd.filter(col("rnk") === 1)
-          .select(col("query_id"), col("neighbor_id").as("match_id"),
-            col("cosine"))
-          .join(af, Seq("query_id"))
-          .join(ab, Seq("match_id"))
-          .select(col("query_id"), col("match_id"), col("cosine"),
-            round(col("cosine") / ((col("af") + col("ab")) / 2.0), 6)
-              .as("margin"))
+        Similarity.marginAlign(fwd, bwd, k)
           .withColumn("accepted", col("margin") >= 1.0)
           .orderBy(col("query_id"))
       },
@@ -291,12 +301,8 @@ object CurationQueries {
                     div cast(z as decimal(38,0))""").as("draws"))
           .orderBy(col("source"))
       },
-      Some("""
-        WITH tok AS (
-          SELECT source,
-                 CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                   AS n_tokens
-          FROM documents GROUP BY 1),
+      Some(s"""
+        WITH $sourceTokens,
         u AS (
           SELECT source, n_tokens,
                  CAST(CAST(round(exp(0.3 *
@@ -354,27 +360,8 @@ object CurationQueries {
               .as("weight"))
           .orderBy(col("source"))
       },
-      Some("""
-        WITH t AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2
-          FROM t, LATERAL unnest(range(1, greatest(len(tk), 1))) AS u(i)),
-        db AS (
-          SELECT doc_id, w1, w2, count(*) AS k FROM pos GROUP BY ALL),
-        cb AS (
-          SELECT w1, w2, CAST(sum(k) AS BIGINT) AS cb FROM db GROUP BY ALL),
-        cu AS (
-          SELECT w1, CAST(sum(k) AS BIGINT) AS cu FROM db GROUP BY 1),
-        per AS (
-          SELECT db.doc_id,
-                 CAST(sum(db.k) AS BIGINT) AS n_bigrams,
-                 sum(CAST(round(-ln(cb.cb / cu.cu), 4) AS DECIMAL(18,4))
-                   * db.k) AS ce
-          FROM db
-          JOIN cb ON db.w1 = cb.w1 AND db.w2 = cb.w2
-          JOIN cu ON db.w1 = cu.w1
-          GROUP BY 1),
+      Some(s"""
+        WITH ${ModelOracleSql.bigramCe},
         pd AS (
           SELECT s.source,
                  CAST(round(CAST(per.ce AS DOUBLE) / per.n_bigrams, 6)
@@ -484,36 +471,8 @@ object CurationQueries {
             epochCap = 2L, budNum = 9L, budDen = 5L)
           .orderBy(col("source"))
       },
-      Some("""
-        WITH tok AS (
-          SELECT source,
-                 CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                   AS n_tokens
-          FROM documents GROUP BY 1),
-        tot AS (
-          SELECT sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS budget,
-                 CAST(count(*) AS BIGINT) AS k
-          FROM tok),
-        c AS (
-          SELECT source, n_tokens, n_tokens * 2 AS cap, budget, k,
-                 ROW_NUMBER() OVER
-                   (ORDER BY n_tokens * 2, source) AS rn,
-                 coalesce(sum(n_tokens * 2) OVER
-                   (ORDER BY n_tokens * 2, source
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS pprev
-          FROM tok CROSS JOIN tot),
-        cc AS (
-          SELECT *,
-                 (CAST(pprev AS HUGEINT) +
-                  CAST(cap AS HUGEINT) * (k - rn + 1)) <= budget
-                   AS capped
-          FROM c),
-        mf AS (
-          SELECT coalesce(sum(CASE WHEN capped THEN cap END), 0)
-                   AS p_m,
-                 coalesce(sum(CASE WHEN capped THEN 1 END), 0) AS m
-          FROM cc),
+      Some(s"""
+        WITH $unimaxCapped,
         alloc AS (
           SELECT cc.source, cc.n_tokens, cc.cap AS cap_tokens,
                  cc.capped,
@@ -558,36 +517,8 @@ object CurationQueries {
             alloc, "n_tokens")
           .orderBy(col("doc_id"), col("epoch"))
       },
-      Some("""
-        WITH tok AS (
-          SELECT source,
-                 CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                   AS n_tokens
-          FROM documents GROUP BY 1),
-        tot AS (
-          SELECT sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS budget,
-                 CAST(count(*) AS BIGINT) AS k
-          FROM tok),
-        c AS (
-          SELECT source, n_tokens, n_tokens * 2 AS cap, budget, k,
-                 ROW_NUMBER() OVER
-                   (ORDER BY n_tokens * 2, source) AS rn,
-                 coalesce(sum(n_tokens * 2) OVER
-                   (ORDER BY n_tokens * 2, source
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS pprev
-          FROM tok CROSS JOIN tot),
-        cc AS (
-          SELECT *,
-                 (CAST(pprev AS HUGEINT) +
-                  CAST(cap AS HUGEINT) * (k - rn + 1)) <= budget
-                   AS capped
-          FROM c),
-        mf AS (
-          SELECT coalesce(sum(CASE WHEN capped THEN cap END), 0)
-                   AS p_m,
-                 coalesce(sum(CASE WHEN capped THEN 1 END), 0) AS m
-          FROM cc),
+      Some(s"""
+        WITH $unimaxCapped,
         alloc AS (
           SELECT cc.source, cc.n_tokens,
                  CAST(CASE WHEN cc.capped
@@ -679,12 +610,8 @@ object CurationQueries {
             round(col("unimax_share") - col("alpha_share"), 6))
           .orderBy(col("source"))
       },
-      Some("""
-        WITH tok AS (
-          SELECT source,
-                 CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-                   AS n_tokens
-          FROM documents GROUP BY 1),
+      Some(s"""
+        WITH $sourceTokens,
         tot AS (
           SELECT sum(CAST(n_tokens AS HUGEINT)) AS t,
                  sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS b,

@@ -1,7 +1,8 @@
 package graft.queries
 
-/** Shared DuckDB oracle fragment for exact trigram-shingle Jaccard
-  * pairs — the SPARSE formulation. The textbook form
+/** Shared DuckDB oracle fragments of the near-dup family.
+  * [[sparsePairs]] is exact trigram-shingle Jaccard pairs — the SPARSE
+  * formulation. The textbook form
   * (`sh a JOIN sh b ON a.doc_id < b.doc_id` + `list_intersect` per
   * pair) is exact but quadratic in documents: at sf0.1 it is 12.5M
   * pairs × a ~200-element list intersection EACH, which turned the
@@ -40,4 +41,34 @@ object DedupOracleSql {
           FROM inter
           JOIN cnt ca ON ca.doc_id = inter.a
           JOIN cnt cb ON cb.doc_id = inter.b)"""
+
+  /** `sh(doc_id, shingles)` over an in-scope `tok(doc_id, w)` of token
+    * lists, mirroring `MinHashDedup.shingles` incl. the <3-token
+    * fallback (the whole text as the single shingle), then
+    * [[sparsePairs]] over it.
+    */
+  val shinglePairs: String = s"""sh AS (
+          SELECT doc_id,
+                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
+                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
+                                          for i in generate_series(1, len(w) - 2)])
+                 END AS shingles
+          FROM tok),
+        $sparsePairs"""
+
+  /** The near-duplicate graph (pairs with jaccard ≥ 0.8) and its
+    * transitive closure: CTEs `p(doc_a, doc_b)`, the symmetric
+    * `edges(a, b)` and `reach(a, b)`, so each doc's cluster id is the
+    * least of itself and its `reach`. Recursive: follows
+    * `WITH RECURSIVE`.
+    */
+  val nearDupReach: String = """p AS (SELECT a AS doc_a, b AS doc_b FROM pairs
+              WHERE jaccard >= 0.8),
+        edges AS (
+          SELECT doc_a AS a, doc_b AS b FROM p
+          UNION SELECT doc_b, doc_a FROM p),
+        reach AS (
+          SELECT a, b FROM edges
+          UNION
+          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)"""
 }

@@ -192,6 +192,43 @@ object DedupQueries {
         ORDER BY doc_a, doc_b"""
   }
 
+  /** q59's connected components: CTEs through
+    * `comp(doc_id, cluster_id)`, every document's least reachable id
+    * in the near-dup graph over `documents`. Recursive: follows
+    * `WITH RECURSIVE`.
+    */
+  private val docClusters: String = s"""tok AS (
+          SELECT doc_id, string_split(text, ' ') AS w FROM documents),
+        ${DedupOracleSql.shinglePairs},
+        ${DedupOracleSql.nearDupReach},
+        comp AS (
+          SELECT d.doc_id,
+                 LEAST(d.doc_id, coalesce(MIN(r.b), d.doc_id)) AS cluster_id
+          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
+          GROUP BY d.doc_id)"""
+
+  /** The q94 centroid model over `embeddings`: per-label mean vectors
+    * (DECIMAL-exact) and `scored(vec_id, clabel, cos)`, each vector's
+    * 9-decimal cosine to every centroid.
+    */
+  private val centroidScored: String = """e AS (
+          SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
+        x AS (
+          SELECT label, u.j AS j, v[u.j] AS val
+          FROM e, LATERAL unnest(range(1, len(v) + 1)) AS u(j)),
+        cent AS (
+          SELECT label, j,
+                 CAST(sum(CAST(round(val, 6) AS DECIMAL(24,6))) AS DOUBLE)
+                   / count(*) AS cj
+          FROM x GROUP BY 1, 2),
+        carr AS (SELECT label, list(cj ORDER BY j) AS c FROM cent GROUP BY 1),
+        scored AS (
+          SELECT e.vec_id, ca.label AS clabel,
+                 round(list_dot_product(e.v, ca.c) /
+                   (sqrt(list_dot_product(e.v, e.v)) *
+                    sqrt(list_dot_product(ca.c, ca.c))), 9) AS cos
+          FROM e CROSS JOIN carr ca)"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- q25: MinHash+LSH near-dup pairs, exact-Jaccard verified ----
@@ -233,14 +270,7 @@ object DedupQueries {
       Some(s"""
         WITH tok AS (
           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs}
+        ${DedupOracleSql.shinglePairs}
         -- sparse pairs omit jaccard = 0; safe for the top-10 because
         -- this corpus has >>10 positive-Jaccard pairs (same argument
         -- as the LSH recall note above: the top-10 are all >= 0.8)
@@ -299,30 +329,7 @@ object DedupQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE tok AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
-        p AS (SELECT a AS doc_a, b AS doc_b FROM pairs
-              WHERE jaccard >= 0.8),
-        edges AS (
-          SELECT doc_a AS a, doc_b AS b FROM p
-          UNION SELECT doc_b, doc_a FROM p),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        comp AS (
-          SELECT d.doc_id,
-                 LEAST(d.doc_id, coalesce(MIN(r.b), d.doc_id)) AS cluster_id
-          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-          GROUP BY d.doc_id)
+        WITH RECURSIVE $docClusters
         SELECT doc_id, cluster_id, (doc_id = cluster_id) AS is_rep
         FROM comp ORDER BY doc_id""")),
 
@@ -341,30 +348,7 @@ object DedupQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE tok AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
-        p AS (SELECT a AS doc_a, b AS doc_b FROM pairs
-              WHERE jaccard >= 0.8),
-        edges AS (
-          SELECT doc_a AS a, doc_b AS b FROM p
-          UNION SELECT doc_b, doc_a FROM p),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        comp AS (
-          SELECT d.doc_id,
-                 LEAST(d.doc_id, coalesce(MIN(r.b), d.doc_id)) AS cluster_id
-          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-          GROUP BY d.doc_id)
+        WITH RECURSIVE $docClusters
         SELECT doc_id, cluster_id,
                CASE WHEN ((cluster_id * 2654435761) % 2147483647) % 100 < 80
                     THEN 'train' ELSE 'test' END AS split
@@ -976,24 +960,8 @@ object DedupQueries {
             col("cosine"))
           .orderBy(col("vec_id"))
       },
-      Some("""
-        WITH e AS (
-          SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        x AS (
-          SELECT label, u.j AS j, v[u.j] AS val
-          FROM e, LATERAL unnest(range(1, len(v) + 1)) AS u(j)),
-        cent AS (
-          SELECT label, j,
-                 CAST(sum(CAST(round(val, 6) AS DECIMAL(24,6))) AS DOUBLE)
-                   / count(*) AS cj
-          FROM x GROUP BY 1, 2),
-        carr AS (SELECT label, list(cj ORDER BY j) AS c FROM cent GROUP BY 1),
-        scored AS (
-          SELECT e.vec_id, ca.label AS clabel,
-                 round(list_dot_product(e.v, ca.c) /
-                   (sqrt(list_dot_product(e.v, e.v)) *
-                    sqrt(list_dot_product(ca.c, ca.c))), 9) AS cos
-          FROM e CROSS JOIN carr ca),
+      Some(s"""
+        WITH $centroidScored,
         ranked AS (
           SELECT vec_id, clabel, cos,
                  ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1031,24 +999,8 @@ object DedupQueries {
             (col("r") + 1).cast("long").as("rank_in_class"), col("vec_id"))
           .orderBy(col("pred_label"), col("rank_in_class"))
       },
-      Some("""
-        WITH e AS (
-          SELECT vec_id, label, embedding::DOUBLE[] AS v FROM embeddings),
-        x AS (
-          SELECT label, u.j AS j, v[u.j] AS val
-          FROM e, LATERAL unnest(range(1, len(v) + 1)) AS u(j)),
-        cent AS (
-          SELECT label, j,
-                 CAST(sum(CAST(round(val, 6) AS DECIMAL(24,6))) AS DOUBLE)
-                   / count(*) AS cj
-          FROM x GROUP BY 1, 2),
-        carr AS (SELECT label, list(cj ORDER BY j) AS c FROM cent GROUP BY 1),
-        scored AS (
-          SELECT e.vec_id, ca.label AS clabel,
-                 round(list_dot_product(e.v, ca.c) /
-                   (sqrt(list_dot_product(e.v, e.v)) *
-                    sqrt(list_dot_product(ca.c, ca.c))), 9) AS cos
-          FROM e CROSS JOIN carr ca),
+      Some(s"""
+        WITH $centroidScored,
         pred AS (
           SELECT vec_id, clabel AS pred_label,
                  ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -1091,14 +1043,7 @@ object DedupQueries {
       Some(s"""
         WITH tok AS (
           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         dup AS (SELECT a, b FROM pairs WHERE jaccard >= 0.8),
         deg AS (
           SELECT doc_id, count(*) AS degree FROM (
@@ -1131,30 +1076,7 @@ object DedupQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE tok AS (
-          SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
-        p AS (SELECT a AS doc_a, b AS doc_b FROM pairs
-              WHERE jaccard >= 0.8),
-        edges AS (
-          SELECT doc_a AS a, doc_b AS b FROM p
-          UNION SELECT doc_b, doc_a FROM p),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-        comp AS (
-          SELECT d.doc_id,
-                 LEAST(d.doc_id, coalesce(MIN(r.b), d.doc_id)) AS cluster_id
-          FROM documents d LEFT JOIN reach r ON r.a = d.doc_id
-          GROUP BY d.doc_id),
+        WITH RECURSIVE $docClusters,
         q AS (
           SELECT doc_id, round(${TextQueries.qualitySql}, 6) AS quality
           FROM documents),
@@ -1237,14 +1159,7 @@ object DedupQueries {
           SELECT d.doc_id, d.n_tok FROM d
           JOIN keep ON keep.fp = d.fp AND d.doc_id <> keep.keep_id),
         tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM d),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         near_d AS (
           SELECT n.doc_id, d.n_tok FROM (
             SELECT DISTINCT b AS doc_id FROM pairs

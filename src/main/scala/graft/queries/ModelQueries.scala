@@ -123,25 +123,12 @@ object ModelQueries {
     LogReg.score(feats, "doc_id", lrWeights(s, dir))
   }
 
-  def defs: Seq[QueryDef] = Seq(
-
-    // ---- q136: Stupid Backoff trigram LM scoring ----
-    // Brants et al. 2007 — the LM design built FOR distributed count
-    // tables (score = raw count ratios with α-backoff, no
-    // normalization), which is why it was THE web-scale LM. Trained
-    // on the corpus minus src1, scored over everything: positions
-    // unseen in training back off to bigram/unigram evidence, OOV
-    // words floor at 0. Linear-space scores, 6-decimal fixed point.
-    QueryDef(
-      "q136_stupid_backoff",
-      (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        LanguageModel.stupidBackoff(
-          d.filter(col("source") =!= "src1"), d, "doc_id", "text")
-          .orderBy(col("doc_id"))
-      },
-      Some("""
-        WITH tr AS (
+  /** Stupid Backoff trigram scoring (`LanguageModel.stupidBackoff`),
+    * trained on documents outside src1 and scored over all of them:
+    * defines `per(doc_id, n_trigrams, sb)`, sb the DECIMAL sum of
+    * 6-decimal-rounded backoff scores (α = 0.4).
+    */
+  private val stupidBackoff: String = """tr AS (
           SELECT string_split(text, ' ') AS tk FROM documents
           WHERE source <> 'src1'),
         uni AS (
@@ -184,7 +171,27 @@ object ModelQueries {
                      THEN CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
                           * cu3 / CAST(n AS DOUBLE)
                    ELSE 0 END, 6) AS DECIMAL(18,6)) * k) AS sb
-          FROM j GROUP BY 1)
+          FROM j GROUP BY 1)"""
+
+  def defs: Seq[QueryDef] = Seq(
+
+    // ---- q136: Stupid Backoff trigram LM scoring ----
+    // Brants et al. 2007 — the LM design built FOR distributed count
+    // tables (score = raw count ratios with α-backoff, no
+    // normalization), which is why it was THE web-scale LM. Trained
+    // on the corpus minus src1, scored over everything: positions
+    // unseen in training back off to bigram/unigram evidence, OOV
+    // words floor at 0. Linear-space scores, 6-decimal fixed point.
+    QueryDef(
+      "q136_stupid_backoff",
+      (s, dir) => {
+        val d = Tables.load(s, dir, "documents")
+        LanguageModel.stupidBackoff(
+          d.filter(col("source") =!= "src1"), d, "doc_id", "text")
+          .orderBy(col("doc_id"))
+      },
+      Some(s"""
+        WITH $stupidBackoff
         SELECT d.doc_id, per.n_trigrams,
                CAST(per.sb AS DOUBLE) / per.n_trigrams AS avg_sb
         FROM documents d LEFT JOIN per USING (doc_id)
@@ -216,51 +223,8 @@ object ModelQueries {
             Window.orderBy(col("mean_sb"), col("source"))))
           .orderBy(col("rank"))
       },
-      Some("""
-        WITH tr AS (
-          SELECT string_split(text, ' ') AS tk FROM documents
-          WHERE source <> 'src1'),
-        uni AS (
-          SELECT tk[i] AS w, count(*) AS c
-          FROM tr, LATERAL unnest(range(1, len(tk) + 1)) AS u(i)
-          GROUP BY 1),
-        n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uni),
-        big AS (
-          SELECT tk[i] AS w1, tk[i+1] AS w2, count(*) AS c
-          FROM tr, LATERAL unnest(range(1, greatest(len(tk), 1))) AS u(i)
-          GROUP BY 1, 2),
-        tri AS (
-          SELECT tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3, count(*) AS c
-          FROM tr, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)
-          GROUP BY 1, 2, 3),
-        sd AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
-          FROM sd, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
-        dt AS (
-          SELECT doc_id, w1, w2, w3, count(*) AS k FROM pos GROUP BY ALL),
-        j AS (
-          SELECT dt.doc_id, dt.k,
-                 t.c AS c3, b12.c AS c2, b23.c AS c23,
-                 u2.c AS cu2, u3.c AS cu3, n.n
-          FROM dt
-          LEFT JOIN tri t ON dt.w1 = t.w1 AND dt.w2 = t.w2 AND dt.w3 = t.w3
-          LEFT JOIN big b12 ON dt.w1 = b12.w1 AND dt.w2 = b12.w2
-          LEFT JOIN big b23 ON dt.w2 = b23.w1 AND dt.w3 = b23.w2
-          LEFT JOIN uni u2 ON dt.w2 = u2.w
-          LEFT JOIN uni u3 ON dt.w3 = u3.w
-          CROSS JOIN n),
-        per AS (
-          SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_trigrams,
-                 sum(CAST(round(CASE
-                   WHEN c3 IS NOT NULL THEN c3 / CAST(c2 AS DOUBLE)
-                   WHEN c23 IS NOT NULL
-                     THEN CAST(0.4 AS DOUBLE) * c23 / CAST(cu2 AS DOUBLE)
-                   WHEN cu3 IS NOT NULL
-                     THEN CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
-                          * cu3 / CAST(n AS DOUBLE)
-                   ELSE 0 END, 6) AS DECIMAL(18,6)) * k) AS sb
-          FROM j GROUP BY 1),
+      Some(s"""
+        WITH $stupidBackoff,
         docsb AS (
           SELECT d.doc_id, d.source,
                  CAST(per.sb AS DOUBLE) / per.n_trigrams AS avg_sb
@@ -833,42 +797,7 @@ object ModelQueries {
               .as("kappa"))
       },
       Some(s"""
-        WITH tok AS (
-          SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-          FROM documents),
-        dt AS (SELECT doc_id, w, count(*) AS k FROM tok GROUP BY ALL),
-        lt AS (SELECT lang AS label, w, count(*) AS cnt
-               FROM tok GROUP BY ALL),
-        tot AS (SELECT label, sum(cnt) AS tot FROM lt GROUP BY 1),
-        v AS (SELECT count(DISTINCT w) AS v FROM lt),
-        n AS (SELECT count(*) AS n FROM documents),
-        consts AS (
-          SELECT d.lang AS label,
-                 CAST(round(ln(count(*) * 1.0 / any_value(n.n)), 6)
-                      AS DECIMAL(18,6)) AS prior,
-                 CAST(round(ln(1.0 / (any_value(tot.tot) + any_value(v.v))), 6)
-                      AS DECIMAL(18,6)) AS smooth
-          FROM documents d CROSS JOIN n CROSS JOIN v
-          JOIN tot ON tot.label = d.lang
-          GROUP BY 1),
-        lp AS (
-          SELECT lt.label, lt.w,
-                 CAST(round(ln((lt.cnt + 1.0) / (tot.tot + v.v)), 6)
-                      AS DECIMAL(18,6)) AS lp
-          FROM lt JOIN tot USING (label) CROSS JOIN v),
-        obs AS (
-          SELECT dt.doc_id, lp.label,
-                 sum(dt.k * (lp.lp - c.smooth)) AS obs_sum
-          FROM dt JOIN lp ON dt.w = lp.w
-          JOIN consts c ON c.label = lp.label
-          GROUP BY 1, 2),
-        dl AS (SELECT doc_id, sum(k) AS n_tok FROM dt GROUP BY 1),
-        scored AS (
-          SELECT dl.doc_id, c.label,
-                 c.prior + dl.n_tok * c.smooth + coalesce(obs.obs_sum, 0)
-                   AS score
-          FROM dl CROSS JOIN consts c
-          LEFT JOIN obs ON obs.doc_id = dl.doc_id AND obs.label = c.label),
+        WITH ${ModelOracleSql.nbScored},
         nbpred AS (
           SELECT doc_id, label AS p1
           FROM (SELECT doc_id, label,

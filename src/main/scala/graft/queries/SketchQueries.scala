@@ -35,6 +35,29 @@ object SketchQueries {
       .groupBy("gram").agg(count(lit(1)).as("cnt"))
   }
 
+  /** Per-source HLL registers of the distinct token trigrams (256
+    * registers, 15-hex-digit md5 hash): defines `g(source, gram)` and
+    * `regs(source, reg, rmax)`.
+    */
+  private val sourceTrigramRegs: String = """t AS (
+          SELECT source, string_split(text, ' ') AS tk FROM documents),
+        g AS (
+          SELECT DISTINCT source,
+                 tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
+          FROM t, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
+        h AS (
+          SELECT source,
+                 CAST(CAST(concat('0x', substr(md5(gram), 1, 15))
+                 AS UBIGINT) AS BIGINT) AS h
+          FROM g),
+        rr AS (
+          SELECT source, h & 255 AS reg,
+                 CASE WHEN h >> 8 = 0 THEN 53
+                      ELSE 53 - length(bin(h >> 8)) END AS rho
+          FROM h),
+        regs AS (
+          SELECT source, reg, max(rho) AS rmax FROM rr GROUP BY 1, 2)"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- q109: Count-Min heavy hitters ----
@@ -223,24 +246,7 @@ object SketchQueries {
           .orderBy("source")
       },
       Some(s"""
-        WITH t AS (
-          SELECT source, string_split(text, ' ') AS tk FROM documents),
-        g AS (
-          SELECT DISTINCT source,
-                 tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
-          FROM t, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
-        h AS (
-          SELECT source,
-                 CAST(CAST(concat('0x', substr(md5(gram), 1, 15))
-                 AS UBIGINT) AS BIGINT) AS h
-          FROM g),
-        rr AS (
-          SELECT source, h & 255 AS reg,
-                 CASE WHEN h >> 8 = 0 THEN 53
-                      ELSE 53 - length(bin(h >> 8)) END AS rho
-          FROM h),
-        regs AS (
-          SELECT source, reg, max(rho) AS rmax FROM rr GROUP BY 1, 2),
+        WITH $sourceTrigramRegs,
         agg AS (
           SELECT source, CAST(count(*) AS BIGINT) AS registers_used,
                  CAST(sum(CAST(power(2, 53 - rmax) AS BIGINT)) AS BIGINT)
@@ -328,24 +334,7 @@ object SketchQueries {
                                         THEN bin END)) AS BIGINT)
                    AS p500_lower
           FROM cumt GROUP BY 1),
-        t AS (
-          SELECT source, string_split(text, ' ') AS tk FROM documents),
-        g AS (
-          SELECT DISTINCT source,
-                 tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2] AS gram
-          FROM t, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
-        h AS (
-          SELECT source,
-                 CAST(CAST(concat('0x', substr(md5(gram), 1, 15))
-                 AS UBIGINT) AS BIGINT) AS h
-          FROM g),
-        rr AS (
-          SELECT source, h & 255 AS reg,
-                 CASE WHEN h >> 8 = 0 THEN 53
-                      ELSE 53 - length(bin(h >> 8)) END AS rho
-          FROM h),
-        regs AS (
-          SELECT source, reg, max(rho) AS rmax FROM rr GROUP BY 1, 2),
+        $sourceTrigramRegs,
         agg AS (
           SELECT source, CAST(count(*) AS BIGINT) AS ru,
                  CAST(sum(CAST(power(2, 53 - rmax) AS BIGINT)) AS BIGINT)

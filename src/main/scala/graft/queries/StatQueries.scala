@@ -198,6 +198,26 @@ object StatQueries {
           .otherwise("kept").as("reason"))
   }
 
+  /** Zipf log-log fit inputs over the top-100 unigrams of `documents`
+    * (ties on the gram): `sums(r, sx, sy, sxx, sxy)` of
+    * x = ln rank and y = ln count, each a 4-decimal DECIMAL.
+    */
+  private val zipfSums: String = """g AS (
+          SELECT unnest(string_split(text, ' ')) AS gram FROM documents),
+        c AS (SELECT gram, count(*) AS cnt FROM g GROUP BY 1),
+        topk AS (
+          SELECT cnt,
+                 row_number() OVER (ORDER BY cnt DESC, gram) AS rank
+          FROM c ORDER BY cnt DESC, gram LIMIT 100),
+        xy AS (
+          SELECT CAST(round(ln(rank::DOUBLE), 4) AS DECIMAL(8,4)) AS x,
+                 CAST(round(ln(cnt::DOUBLE), 4) AS DECIMAL(12,4)) AS y
+          FROM topk),
+        sums AS (
+          SELECT count(*) AS r, sum(x) AS sx, sum(y) AS sy,
+                 sum(x * x) AS sxx, sum(x * y) AS sxy
+          FROM xy)"""
+
   def defs: Seq[QueryDef] = Seq(
 
     // ---- q174: per-source exact two-sample KS drift ----
@@ -275,14 +295,7 @@ object StatQueries {
       Some(s"""
         WITH tok AS (
           SELECT doc_id, string_split(text, ' ') AS w FROM documents),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         e AS (SELECT a, b FROM pairs WHERE jaccard >= 0.8),
         tri AS (
           SELECT e1.a, e1.b, e2.b AS c
@@ -367,22 +380,8 @@ object StatQueries {
         zipfFit(CorpusOps.topNgrams(
           Tables.load(s, dir, "documents"), "text", n = 1, k = 100))
       },
-      Some("""
-        WITH g AS (
-          SELECT unnest(string_split(text, ' ')) AS gram FROM documents),
-        c AS (SELECT gram, count(*) AS cnt FROM g GROUP BY 1),
-        topk AS (
-          SELECT cnt,
-                 row_number() OVER (ORDER BY cnt DESC, gram) AS rank
-          FROM c ORDER BY cnt DESC, gram LIMIT 100),
-        xy AS (
-          SELECT CAST(round(ln(rank::DOUBLE), 4) AS DECIMAL(8,4)) AS x,
-                 CAST(round(ln(cnt::DOUBLE), 4) AS DECIMAL(12,4)) AS y
-          FROM topk),
-        sums AS (
-          SELECT count(*) AS r, sum(x) AS sx, sum(y) AS sy,
-                 sum(x * x) AS sxx, sum(x * y) AS sxy
-          FROM xy),
+      Some(s"""
+        WITH $zipfSums,
         sl AS (
           SELECT r AS n_ranks, sx, sy, r,
                  round((r * sxy - sx * sy)::DOUBLE /
@@ -482,14 +481,7 @@ object StatQueries {
         s3 AS (SELECT * FROM s2
                WHERE doc_id IN (SELECT doc_id FROM keepers)),
         tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM s3),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         drops AS (
           SELECT DISTINCT b AS doc_id FROM pairs WHERE jaccard >= 0.8),
         s4 AS (SELECT * FROM s3
@@ -535,14 +527,7 @@ object StatQueries {
         s3 AS (SELECT * FROM s2
                WHERE doc_id IN (SELECT doc_id FROM keepers)),
         tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM s3),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         drops AS (
           SELECT DISTINCT b AS doc_id FROM pairs WHERE jaccard >= 0.8)
         SELECT s.doc_id, s.n_tok,
@@ -635,21 +620,7 @@ object StatQueries {
                  coalesce(sum(CAST(round(quality, 6) AS DECIMAL(12,6))),
                    0) AS q_sum
           FROM scored),
-        g AS (
-          SELECT unnest(string_split(text, ' ')) AS gram FROM documents),
-        c AS (SELECT gram, count(*) AS cnt FROM g GROUP BY 1),
-        topk AS (
-          SELECT cnt,
-                 row_number() OVER (ORDER BY cnt DESC, gram) AS rank
-          FROM c ORDER BY cnt DESC, gram LIMIT 100),
-        xy AS (
-          SELECT CAST(round(ln(rank::DOUBLE), 4) AS DECIMAL(8,4)) AS x,
-                 CAST(round(ln(cnt::DOUBLE), 4) AS DECIMAL(12,4)) AS y
-          FROM topk),
-        sums AS (
-          SELECT count(*) AS r, sum(x) AS sx, sum(y) AS sy,
-                 sum(x * x) AS sxx, sum(x * y) AS sxy
-          FROM xy),
+        $zipfSums,
         zipf AS (
           SELECT round((r * sxy - sx * sy)::DOUBLE /
                        (r * sxx - sx * sx)::DOUBLE, 6) AS slope

@@ -86,6 +86,30 @@ object SuffixQueries {
         (col("span_end") - col("span_start")).as("span_len"))
   }
 
+  /** Repeated 16-token spans of `documents` as islands: `isl(doc_id,
+    * pos, island)` numbers each doc's runs of duplicated window starts,
+    * a new island wherever the gap to the previous start exceeds 16.
+    */
+  private val dupSpanIslands: String = """tk AS (
+          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+        g AS (
+          SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
+                 array_to_string(tk[i:i+15], ' ') AS g
+          FROM tk, LATERAL unnest(range(1, len(tk) - 14)) AS u(i)),
+        dup AS (SELECT g FROM g GROUP BY g HAVING count(*) >= 2),
+        p AS (SELECT doc_id, pos FROM g JOIN dup USING (g)),
+        m AS (
+          SELECT doc_id, pos,
+                 CASE WHEN lag(pos) OVER w IS NULL
+                        OR pos > lag(pos) OVER w + 16
+                      THEN 1 ELSE 0 END AS brk
+          FROM p WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
+        isl AS (
+          SELECT doc_id, pos,
+                 sum(brk) OVER (PARTITION BY doc_id ORDER BY pos)
+                   AS island
+          FROM m)"""
+
   def defs: Seq[QueryDef] = Seq(
 
     // ---- q165: suffix-array ranks by prefix doubling ----
@@ -175,26 +199,8 @@ object SuffixQueries {
       "q170_exact_substr_spans",
       (s, dir) => exactSubstrSpans(s, dir)
         .orderBy(col("doc_id"), col("span_start")),
-      Some("""
-        WITH tk AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        g AS (
-          SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                 array_to_string(tk[i:i+15], ' ') AS g
-          FROM tk, LATERAL unnest(range(1, len(tk) - 14)) AS u(i)),
-        dup AS (SELECT g FROM g GROUP BY g HAVING count(*) >= 2),
-        p AS (SELECT doc_id, pos FROM g JOIN dup USING (g)),
-        m AS (
-          SELECT doc_id, pos,
-                 CASE WHEN lag(pos) OVER w IS NULL
-                        OR pos > lag(pos) OVER w + 16
-                      THEN 1 ELSE 0 END AS brk
-          FROM p WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        isl AS (
-          SELECT doc_id, pos,
-                 sum(brk) OVER (PARTITION BY doc_id ORDER BY pos)
-                   AS island
-          FROM m)
+      Some(s"""
+        WITH $dupSpanIslands
         SELECT doc_id,
                min(pos) AS span_start,
                max(pos) + 16 AS span_end,
@@ -226,26 +232,8 @@ object SuffixQueries {
               col("n_tokens").cast("double"), 6))
           .orderBy(col("doc_id"))
       },
-      Some("""
-        WITH tk AS (
-          SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        g AS (
-          SELECT doc_id, CAST(i - 1 AS BIGINT) AS pos,
-                 array_to_string(tk[i:i+15], ' ') AS g
-          FROM tk, LATERAL unnest(range(1, len(tk) - 14)) AS u(i)),
-        dup AS (SELECT g FROM g GROUP BY g HAVING count(*) >= 2),
-        p AS (SELECT doc_id, pos FROM g JOIN dup USING (g)),
-        m AS (
-          SELECT doc_id, pos,
-                 CASE WHEN lag(pos) OVER w IS NULL
-                        OR pos > lag(pos) OVER w + 16
-                      THEN 1 ELSE 0 END AS brk
-          FROM p WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-        isl AS (
-          SELECT doc_id, pos,
-                 sum(brk) OVER (PARTITION BY doc_id ORDER BY pos)
-                   AS island
-          FROM m),
+      Some(s"""
+        WITH $dupSpanIslands,
         spans AS (
           SELECT doc_id, max(pos) + 16 - min(pos) AS span_len
           FROM isl GROUP BY doc_id, island),

@@ -45,6 +45,21 @@ object TextQueries {
   private[queries] val fpSql =
     "md5(trim(regexp_replace(lower(nfc_normalize(text)), '\\s+', ' ', 'g')))"
 
+  /** q48's cleaning front half over `documents`: `scored` (quality,
+    * lang_pred and fingerprint per doc), `filtered` by the quality and
+    * language gates, and `exact`, the least doc_id of each fingerprint.
+    */
+  private val cleanedExact: String = s"""scored AS (
+          SELECT doc_id, text, lang, $qualitySql AS quality,
+                 $langIdSql AS lang_pred, $fpSql AS fp
+          FROM documents),
+        filtered AS (
+          SELECT * FROM scored WHERE quality >= 0.5 AND lang_pred = lang),
+        keepers AS (SELECT min(doc_id) AS doc_id FROM filtered GROUP BY fp),
+        exact AS (
+          SELECT f.* FROM filtered f
+          WHERE f.doc_id IN (SELECT doc_id FROM keepers))"""
+
   val defs: Seq[QueryDef] = Seq(
 
     // ---- q16: token counting (whitespace tokens + chars) ----
@@ -308,25 +323,9 @@ object TextQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH scored AS (
-          SELECT doc_id, text, lang, $qualitySql AS quality,
-                 $langIdSql AS lang_pred, $fpSql AS fp
-          FROM documents),
-        filtered AS (
-          SELECT * FROM scored WHERE quality >= 0.5 AND lang_pred = lang),
-        keepers AS (SELECT min(doc_id) AS doc_id FROM filtered GROUP BY fp),
-        exact AS (
-          SELECT f.* FROM filtered f
-          WHERE f.doc_id IN (SELECT doc_id FROM keepers)),
+        WITH $cleanedExact,
         tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM exact),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
+        ${DedupOracleSql.shinglePairs},
         drops AS (
           SELECT DISTINCT b AS doc_id FROM pairs WHERE jaccard >= 0.8)
         SELECT doc_id, quality FROM exact
@@ -373,34 +372,10 @@ object TextQueries {
           .orderBy(col("doc_id"))
       },
       Some(s"""
-        WITH RECURSIVE scored AS (
-          SELECT doc_id, text, lang, $qualitySql AS quality,
-                 $langIdSql AS lang_pred, $fpSql AS fp
-          FROM documents),
-        filtered AS (
-          SELECT * FROM scored WHERE quality >= 0.5 AND lang_pred = lang),
-        keepers AS (SELECT min(doc_id) AS doc_id FROM filtered GROUP BY fp),
-        exact AS (
-          SELECT f.* FROM filtered f
-          WHERE f.doc_id IN (SELECT doc_id FROM keepers)),
+        WITH RECURSIVE $cleanedExact,
         tok AS (SELECT doc_id, string_split(text, ' ') AS w FROM exact),
-        sh AS (
-          SELECT doc_id,
-                 CASE WHEN len(w) < 3 THEN [array_to_string(w, ' ')]
-                      ELSE list_distinct([w[i] || ' ' || w[i+1] || ' ' || w[i+2]
-                                          for i in generate_series(1, len(w) - 2)])
-                 END AS shingles
-          FROM tok),
-        ${DedupOracleSql.sparsePairs},
-        p AS (SELECT a AS doc_a, b AS doc_b FROM pairs
-              WHERE jaccard >= 0.8),
-        edges AS (
-          SELECT doc_a AS a, doc_b AS b FROM p
-          UNION SELECT doc_b, doc_a FROM p),
-        reach AS (
-          SELECT a, b FROM edges
-          UNION
-          SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
+        ${DedupOracleSql.shinglePairs},
+        ${DedupOracleSql.nearDupReach},
         comp AS (
           SELECT e.doc_id,
                  LEAST(e.doc_id, coalesce(MIN(r.b), e.doc_id)) AS cluster_id

@@ -111,6 +111,55 @@ object VectorQueries {
           FROM p$m),
         k$m AS (SELECT query_id, neighbor_id FROM r$m WHERE rnk <= 5)"""
 
+  /** PQ asymmetric-distance tables for the unit query vectors
+    * `q(query_id, v)` against the codebook and codes saved under `pq`:
+    * `dtab(query_id, m, cluster, sub_d2)` holds each query's exact
+    * DECIMAL squared distance to every centroid of every subspace, and
+    * `codes(id, m, code)` every vector's code.
+    */
+  private def pqAdcTables(pq: String): String = s"""qd AS (
+          SELECT query_id, (i - 1) // $PqSubDim AS m,
+                 (i - 1) % $PqSubDim AS j,
+                 CAST(round(v[i], 6) AS DECIMAL(18,6)) AS qx
+          FROM q, LATERAL unnest(range(1, len(v) + 1)) AS t(i)),
+        cb AS (
+          SELECT m, cluster, j, CAST(c AS DECIMAL(18,6)) AS c
+          FROM read_parquet('$pq/codebook/*.parquet')),
+        dtab AS (
+          SELECT query_id, qd.m, cluster,
+                 sum(CAST(qx - c AS DECIMAL(18,6)) *
+                     CAST(qx - c AS DECIMAL(18,6))) AS sub_d2
+          FROM qd JOIN cb ON cb.m = qd.m AND cb.j = qd.j
+          GROUP BY 1, 2, 3),
+        codes AS (
+          SELECT id, m, code
+          FROM read_parquet('$pq/codes/*.parquet'))"""
+
+  /** Exact rescore of the ADC shortlist `short(query_id, neighbor_id)`
+    * by 9-decimal cosine over `embeddings`: the top 5 per query (ties
+    * on neighbor_id), as the query's rows.
+    */
+  private val pqRescored: String = """e AS (
+          SELECT vec_id AS id, embedding::DOUBLE[] AS v,
+                 sqrt(list_dot_product(embedding::DOUBLE[],
+                                       embedding::DOUBLE[])) AS n
+          FROM embeddings),
+        resc AS (
+          SELECT s.query_id, s.neighbor_id,
+                 round(list_dot_product(eq.v, ec.v) / (eq.n * ec.n), 9)
+                   AS cosine
+          FROM short s
+          JOIN e eq ON eq.id = s.query_id
+          JOIN e ec ON ec.id = s.neighbor_id),
+        ranked AS (
+          SELECT query_id, neighbor_id, cosine,
+                 ROW_NUMBER() OVER (PARTITION BY query_id
+                   ORDER BY cosine DESC, neighbor_id) AS rnk
+          FROM resc)
+        SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rnk
+        FROM ranked WHERE rnk <= 5
+        ORDER BY query_id, rnk"""
+
   def defs: Seq[QueryDef] = Seq(
 
     // ---- q178: Matryoshka truncation recall curve ----
@@ -197,23 +246,7 @@ object VectorQueries {
         q AS (
           SELECT query_id, list_transform(v0, x -> x / nm) AS v
           FROM q0),
-        qd AS (
-          SELECT query_id, (i - 1) // $PqSubDim AS m,
-                 (i - 1) % $PqSubDim AS j,
-                 CAST(round(v[i], 6) AS DECIMAL(18,6)) AS qx
-          FROM q, LATERAL unnest(range(1, len(v) + 1)) AS t(i)),
-        cb AS (
-          SELECT m, cluster, j, CAST(c AS DECIMAL(18,6)) AS c
-          FROM read_parquet('${pqArtifactDir(dir)}/codebook/*.parquet')),
-        dtab AS (
-          SELECT query_id, qd.m, cluster,
-                 sum(CAST(qx - c AS DECIMAL(18,6)) *
-                     CAST(qx - c AS DECIMAL(18,6))) AS sub_d2
-          FROM qd JOIN cb ON cb.m = qd.m AND cb.j = qd.j
-          GROUP BY 1, 2, 3),
-        codes AS (
-          SELECT id, m, code
-          FROM read_parquet('${pqArtifactDir(dir)}/codes/*.parquet')),
+        ${pqAdcTables(pqArtifactDir(dir))},
         cand AS (
           SELECT d.query_id, codes.id AS neighbor_id,
                  sum(d.sub_d2) AS adist_x
@@ -228,26 +261,7 @@ object VectorQueries {
                      ORDER BY adist_x, neighbor_id) AS rnk
             FROM cand)
           WHERE rnk <= $PqOverfetch),
-        e AS (
-          SELECT vec_id AS id, embedding::DOUBLE[] AS v,
-                 sqrt(list_dot_product(embedding::DOUBLE[],
-                                       embedding::DOUBLE[])) AS n
-          FROM embeddings),
-        resc AS (
-          SELECT s.query_id, s.neighbor_id,
-                 round(list_dot_product(eq.v, ec.v) / (eq.n * ec.n), 9)
-                   AS cosine
-          FROM short s
-          JOIN e eq ON eq.id = s.query_id
-          JOIN e ec ON ec.id = s.neighbor_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rnk
-          FROM resc)
-        SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rnk
-        FROM ranked WHERE rnk <= 5
-        ORDER BY query_id, rnk""")),
+        $pqRescored""")),
 
     // ---- q190: IVF-PQ probe (coarse cells → ADC → exact rescore) ----
     // The FAISS-at-scale index layout, composed from the registry's
@@ -305,23 +319,7 @@ object VectorQueries {
         q AS (
           SELECT query_id, list_transform(qv, x -> x / qn) AS v
           FROM qraw),
-        qd AS (
-          SELECT query_id, (i - 1) // $PqSubDim AS m,
-                 (i - 1) % $PqSubDim AS j,
-                 CAST(round(v[i], 6) AS DECIMAL(18,6)) AS qx
-          FROM q, LATERAL unnest(range(1, len(v) + 1)) AS t(i)),
-        cb AS (
-          SELECT m, cluster, j, CAST(c AS DECIMAL(18,6)) AS c
-          FROM read_parquet('${pqArtifactDir(dir)}/codebook/*.parquet')),
-        dtab AS (
-          SELECT query_id, qd.m, cluster,
-                 sum(CAST(qx - c AS DECIMAL(18,6)) *
-                     CAST(qx - c AS DECIMAL(18,6))) AS sub_d2
-          FROM qd JOIN cb ON cb.m = qd.m AND cb.j = qd.j
-          GROUP BY 1, 2, 3),
-        codes AS (
-          SELECT id, m, code
-          FROM read_parquet('${pqArtifactDir(dir)}/codes/*.parquet')),
+        ${pqAdcTables(pqArtifactDir(dir))},
         adist AS (
           SELECT c.query_id, c.neighbor_id,
                  sum(d.sub_d2) AS adist_x
@@ -338,26 +336,7 @@ object VectorQueries {
                      ORDER BY adist_x, neighbor_id) AS rnk
             FROM adist)
           WHERE rnk <= $PqOverfetch),
-        e AS (
-          SELECT vec_id AS id, embedding::DOUBLE[] AS v,
-                 sqrt(list_dot_product(embedding::DOUBLE[],
-                                       embedding::DOUBLE[])) AS n
-          FROM embeddings),
-        resc AS (
-          SELECT s.query_id, s.neighbor_id,
-                 round(list_dot_product(eq.v, ec.v) / (eq.n * ec.n), 9)
-                   AS cosine
-          FROM short s
-          JOIN e eq ON eq.id = s.query_id
-          JOIN e ec ON ec.id = s.neighbor_id),
-        ranked AS (
-          SELECT query_id, neighbor_id, cosine,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY cosine DESC, neighbor_id) AS rnk
-          FROM resc)
-        SELECT query_id, neighbor_id, cosine, CAST(rnk AS BIGINT) AS rnk
-        FROM ranked WHERE rnk <= 5
-        ORDER BY query_id, rnk""")),
+        $pqRescored""")),
 
     // ---- q191: incremental index maintenance via CDC ----
     // The composition the CDC primitive exists for (SCALE.md §12):

@@ -170,6 +170,22 @@ class BpeSpec extends SparkSpec {
       s"expected >1 merges/job; got ${got.size} merges in $rounds rounds")
   }
 
+  test("each round's sequence checkpoint is released: no persisted " +
+      "RDD outlives a run, whatever its round count") {
+    val docs = Tables.load(spark, sf0001, "documents")
+    val sc = spark.sparkContext
+    // the ContextCleaner may drop a leftover early, never add one, so
+    // only an upper bound is deterministic
+    Seq(2, 12).foreach { numMerges =>
+      val before = sc.getPersistentRDDs.keys.maxOption.getOrElse(-1)
+      val (_, rounds) = BpeLearn.learnMergesWithStats(
+        docs, "text", numMerges, batchCap = 1)
+      val left = sc.getPersistentRDDs.keys.count(_ > before)
+      assert(rounds == numMerges)
+      assert(left == 0, s"$left persisted RDDs left after $rounds rounds")
+    }
+  }
+
   /** Single-node mirror of the RELAXED batched policy: per round,
     * rank all pairs by (count desc, a, b), take the top batchCap,
     * greedily accept every symbol-disjoint candidate (skip

@@ -91,6 +91,30 @@ class DupClustersSpec extends SparkSpec {
     assert((30L until 60L).forall(got2(_) == 30L))
   }
 
+  test("each round's checkpoint is released: persisted RDDs left by " +
+      "a run do not grow with the chain's length") {
+    val sc = spark.sparkContext
+    // persisted RDDs created by `f` and still registered after it; the
+    // ContextCleaner may drop one early, never add one, so only an
+    // upper bound is deterministic
+    def leftover(f: => Unit): Int = {
+      val before = sc.getPersistentRDDs.keys.maxOption.getOrElse(-1)
+      f
+      sc.getPersistentRDDs.keys.count(_ > before)
+    }
+    Seq(4L, 20L).foreach { n =>
+      val ids = (0L until n).toDF("id")
+      val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
+      // label propagation, one round per hop: the final labels stay
+      val prop = leftover(DupClusters.components(ids, chain,
+        driverEdgeBudget = 0L).collect())
+      assert(prop <= 1, s"propagation over $n nodes left $prop")
+      // large-star/small-star: the final edge set stays
+      val star = leftover(DupClusters.starComponents(ids, chain).collect())
+      assert(star <= 1, s"star over $n nodes left $star")
+    }
+  }
+
   test("property: starComponents equals BFS reference on random " +
       "graphs, including isolated nodes and self-loop input") {
     val gen = for {
