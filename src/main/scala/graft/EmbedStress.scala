@@ -60,13 +60,13 @@ object EmbedStress {
       val ((pairs, found), lsh) = Metrics.measure(spark) {
         val p = Similarity.lshNearDupPairs(corpus, threshold = 0.9, dim = 64,
           bitsPerTable = 14, numTables = 24, maxBucketSize = 2000)
-          .cache()
+          .transform(Boundary.lazyLocal)
         (p, p.count())
       }
       val planted = pairs
         .filter(col("id_b") === col("id_a") + 1 && col("id_a") % 2 === 0)
         .count()
-      pairs.unpersist()
+      Boundary.release(pairs)
       out.sec("sec", lsh)
       out("found") = found
       out("planted_found") = planted

@@ -146,6 +146,8 @@ object Tables {
     * registered queries are repartition-invariant by contract.
     * Catalyst pushes filters and pruning through the round-robin
     * exchange into the scan (verified: `PlanDump _rawscan:documents`).
+    * A derived frame behind a checkpoint is widened by
+    * `Boundary.lazyWide`, under the same guard.
     */
   def loadWide(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
@@ -166,33 +168,11 @@ object Tables {
     }
   }
 
-  /** STAGE widening — `loadWide`'s twin for derived frames (r16): a
-    * `localCheckpoint` freezes whatever partitioning AQE left on the
-    * frame, and on the degenerate test layout AQE coalesces a sub-MB
-    * shuffle to ONE partition — so every downstream consumer of the
-    * checkpoint (the BM25 scoring join, the MinHash signature pass)
-    * runs single-threaded no matter how many cores exist. Returns a
-    * function that hash-repartitions by `key` to the worker count
-    * before the caller's checkpoint, under the SAME file-count guard
-    * as `loadWide` (no-op at any healthy production layout — there
-    * the checkpointed frame inherits real parallelism and an extra
-    * exchange would be pure cost). Key-hashed, never round-robin:
-    * results are repartition-invariant by contract. The exchange
-    * carries the whole derived frame, which is not always text-free:
-    * in q119/q120/q128 it is the postings frame, whose `term` column
-    * holds raw tokens. The safety argument is the file-count guard,
-    * which keeps the exchange off every healthily split layout.
-    */
-  def stageWidener(spark: SparkSession, dir: String, name: String,
-      key: org.apache.spark.sql.Column): DataFrame => DataFrame = {
-    if (!wideningEngages(spark, dir, name)) identity
-    else df => df.repartition(spark.sparkContext.defaultParallelism, key)
-  }
-
   /** True iff `loadWide` would insert the widening exchange for this
     * table: fewer files than half the worker count AND ≥1000 rows.
     * Public so PlanDump/diagnostics can report the decision instead
-    * of inferring it from plan shape.
+    * of inferring it from plan shape, and so `Boundary.lazyWide`
+    * widens a checkpoint's input under the same guard.
     */
   def wideningEngages(spark: SparkSession, dir: String,
       name: String): Boolean = {

@@ -105,7 +105,7 @@ object BloomDedup {
         mightContain(xxhash64(col("__bd_key"))))
       .select(col("__bd_key"))
       .distinct()
-      .localCheckpoint()
+      .transform(graft.Boundary.eagerLocal)
     val nCand = candKeys.count()
     val fits = nCand <= broadcastBudgetRows
     def sized(df: DataFrame): DataFrame = if (fits) broadcast(df) else df

@@ -238,7 +238,7 @@ object BpeLearn {
       .map { case (w, c) => (init(w), c) }
       .filter(_._1.lengthCompare(2) >= 0)
       .coalesce(8)
-      .localCheckpoint()
+      .transform(graft.Boundary.eagerLocal)
 
     val merges = scala.collection.mutable.ArrayBuffer
       .empty[(Long, String, String, String, Long)]
@@ -334,7 +334,7 @@ object BpeLearn {
             (ms.foldLeft(s)((st, p) => mergePair(st, p._1, p._2)), c)
           }
           .filter(_._1.lengthCompare(2) >= 0)
-          .localCheckpoint()
+          .transform(graft.Boundary.eagerLocal)
         graft.Boundary.release(seqs)
         seqs = next
       }

@@ -69,14 +69,10 @@ object Containment {
     // shingles are already 8-byte md5-prefix keys (hashed scan-side,
     // before the first exchange — see object scaladoc); the checkpoint
     // materializes the distinct ONCE for the five downstream readers
-    // (measured: dropping it costs ~15% at sf0.1). EAGER since r15:
-    // with a lazy checkpoint the five consumers' AQE stages race to
-    // materialize it concurrently, and q164's isolation med sat at
-    // 4.4 s vs 2.9 s eager (same session, 8 reps) — paying the
-    // materialization up front removes the race without changing the
-    // total work.
+    // (measured: dropping it costs ~15% at sf0.1). Eager since r15
+    // (five separately planned consumers).
     val sh = shingles(docs, idCol, textCol, w)
-      .localCheckpoint(eager = true)
+      .transform(graft.Boundary.eagerLocal)
     val ns = sh.groupBy(col(idCol)).agg(count(lit(1)).as("n"))
     val rare = sh.groupBy(col("s")).agg(count(lit(1)).as("df"))
       .filter(col("df") >= dfMin && col("df") <= dfMax)

@@ -898,7 +898,7 @@ object CorpusOps {
       minDocs: Int = 2): DataFrame = {
     require(n >= 1 && minDocs >= 1, s"n=$n minDocs=$minDocs")
     val docGrams = distinctWindowHashes(df, idCol, textCol, n)
-      .localCheckpoint()
+      .transform(graft.Boundary.eagerLocal)
     val docFreq = docGrams
       .groupBy(col("g"))
       .agg(count(lit(1)).as("df"))

@@ -61,7 +61,7 @@ object DupClusters {
       .select(col("id_a").as("src"), col("id_b").as("dst"))
       .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct()
-      .localCheckpoint()
+      .transform(graft.Boundary.eagerLocal)
     if (edges.count() <= driverEdgeBudget) {
       val es = edges.as[(Long, Long)].collect()
       graft.Boundary.release(edges)
@@ -77,7 +77,7 @@ object DupClusters {
           coalesce(col("_cluster"), col("id")).as("cluster"))
     }
     var labels = ids.select(col("id"), col("id").as("cluster"))
-      .localCheckpoint()
+      .transform(graft.Boundary.eagerLocal)
     // sum over an empty node set is NULL — an emptied-upstream corpus
     // must yield an empty labeling, not a NULL-row crash
     def labelSum(df: DataFrame): Long =
@@ -96,7 +96,7 @@ object DupClusters {
         .select(col("id"),
           least(col("cluster"), coalesce(col("nm"), col("cluster")))
             .as("cluster"))
-        .localCheckpoint()
+        .transform(graft.Boundary.eagerLocal)
       val s = labelSum(next)
       converged = s == prevSum // labels are monotone non-increasing
       prevSum = s
@@ -165,12 +165,13 @@ object DupClusters {
       .select(greatest(col("id_a"), col("id_b")).as("u"),
         least(col("id_a"), col("id_b")).as("v"))
       .distinct()
-      .localCheckpoint()
+      .transform(graft.Boundary.eagerLocal)
     var sig = signature(edges)
     var iter = 0
     var converged = sig._1 == 0L
     while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(edges)).localCheckpoint()
+      val next = smallStar(largeStar(edges))
+        .transform(graft.Boundary.eagerLocal)
       val s = signature(next)
       // the (count, xor-of-hashes) signature is a 64-bit probe — a
       // collision between two DIFFERENT consecutive edge sets would

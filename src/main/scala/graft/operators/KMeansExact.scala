@@ -146,9 +146,9 @@ object KMeansExact {
     // source and re-run the double→micros conversion — iters× full
     // corpus reads at 100 TB where one pass suffices. Eager: the
     // seed collect, every round's aggregate, and the final assignment
-    // all consume it (fan-out ≥ 5, the r15 AQE-race rule).
+    // all consume it (fan-out ≥ 5).
     val fx = base.select(col(idCol), xu.as("_xu"))
-      .localCheckpoint(eager = true)
+      .transform(graft.Boundary.eagerLocal)
     val xm = col("_xu")
 
     // seed centroids: the k smallest ids' vectors, cluster = rank of

@@ -53,11 +53,10 @@ object KsDrift {
     // compute-once boundary (r15): the (group, value) count table
     // feeds FOUR consumers (bounds, the bucketed value table, the
     // group-cardinality frame, and the grid join) — un-checkpointed,
-    // each consumer re-ran the corpus scan+aggregate, and the copies
-    // materialize concurrently under AQE (the q199/q164 race)
+    // each consumer re-ran the corpus scan+aggregate
     val c = df.groupBy(col(groupCol), col(valueCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"))
-      .localCheckpoint(eager = true)
+      .transform(graft.Boundary.eagerLocal)
     // one-row domain-bounds frame: range-bucket width so buckets are
     // monotone in v (DECIMAL(38,0) arithmetic — a full-long value
     // range must not overflow the subtraction)

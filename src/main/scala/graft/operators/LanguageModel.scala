@@ -80,12 +80,8 @@ object LanguageModel {
           .otherwise(array().cast(
             "array<struct<h1:bigint,h12:bigint,h123:bigint>>"))).as("g"))
       .select(col("g.h1"), col("g.h12"), col("g.h123"))
-      // LAZY deliberately (r16 A/B): an eager flip was tried for the
-      // four concurrent consumers (c1/c2/c3/n) and REVERTED — the
-      // bench read q136 +0.2 s / q158 +0.3 s / q160 +1.0 s with it.
-      // Unlike the ≥5-fan-out query-level frames, the four count
-      // tables sit in ONE plan whose AQE stages reuse the exchange;
-      // the eager barrier only serialized construction.
+      // lazy (r16 A/B, eager reverted): four consumers (c1/c2/c3/n)
+      // in ONE plan whose AQE stages reuse the exchange
       .transform(graft.Boundary.lazyLocal)
     val c1 = tTok.groupBy(col("h1")).agg(count(lit(1)).as("c1"))
     val c2 = tTok.filter(col("h12").isNotNull)

@@ -153,20 +153,20 @@ object Retrieval {
     * scoring branches each materialize their own broadcast subtree,
     * so an un-checkpointed postings table would re-tokenize the
     * corpus once PER BRANCH (measured 10 s → 3 s at sf0.1 — the
-    * q48/q67 argument). `widen` (r16) lets callers inject
-    * `Tables.stageWidener` so the checkpoint is not frozen at the
-    * degenerate layout's single partition — the scoring join reads
-    * the checkpoint directly (broadcast build side), so its
-    * parallelism IS the checkpoint's. The widen's doc_id key does
+    * q48/q67 argument). `boundary` (default `Boundary.lazyLocal`)
+    * lets callers pass `Boundary.lazyWide` so the checkpoint is not
+    * frozen at the degenerate layout's single partition — the scoring
+    * join reads the checkpoint directly (broadcast build side), so its
+    * parallelism IS the checkpoint's. The widening's doc_id key does
     * not reach the stats `groupBy(doc_id)`: the checkpoint scan
     * reports `UnknownPartitioning(0)`, so that aggregate keeps its
     * own hash exchange (`plans/q119_bm25_stats_head.txt`, sf0.1).
     */
   def bm25TopK(docs: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, k: Int, maxDfFrac: Double = 1.0,
-      widen: DataFrame => DataFrame = identity): DataFrame =
-    bm25FromPostings(
-      widen(postings(docs, idCol, textCol)).transform(graft.Boundary.lazyLocal),
+      boundary: DataFrame => DataFrame = graft.Boundary.lazyLocal)
+      : DataFrame =
+    bm25FromPostings(boundary(postings(docs, idCol, textCol)),
       queries, k, maxDfFrac)
 
   /** Top-`k` token-set-Jaccard hits per query — the second,
@@ -204,10 +204,9 @@ object Retrieval {
     * inline (checkpointed for the same reason as [[bm25TopK]]).
     */
   def jaccardTopK(docs: DataFrame, idCol: String, textCol: String,
-      queries: DataFrame, k: Int,
-      widen: DataFrame => DataFrame = identity): DataFrame =
+      queries: DataFrame, k: Int): DataFrame =
     jaccardFromPostings(
-      widen(postings(docs, idCol, textCol)).transform(graft.Boundary.lazyLocal),
+      postings(docs, idCol, textCol).transform(graft.Boundary.lazyLocal),
       queries, k)
 
   /** Fit the per-query-term BM25 model from a postings table: each

@@ -23,13 +23,16 @@ object CurationQueries {
           FROM documents GROUP BY 1)"""
 
   /** UniMax water-fill over `tok` with epoch cap E = 2 and budget
-    * B = ⌊1.8·Σn⌋ (`Budgeting.waterFill`): `cc` holds each source's
-    * cap, rank and `capped` flag, `mf(p_m, m)` the capped prefix's
-    * token sum and size.
+    * B = ⌊1.8·Σn⌋ (`Budgeting.waterFill`): `tot(t, budget, k)` holds
+    * Σn, B and the source count, `cc` each source's cap, rank and
+    * `capped` flag, `mf(p_m, m)` the capped prefix's token sum and
+    * size, and `alloc(source, n_tokens, cap_tokens, capped,
+    * alloc_micro)` each source's micro-scaled token allocation.
     */
-  private val unimaxCapped: String = s"""$sourceTokens,
+  private val unimaxAlloc: String = s"""$sourceTokens,
         tot AS (
-          SELECT sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS budget,
+          SELECT sum(CAST(n_tokens AS HUGEINT)) AS t,
+                 sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS budget,
                  CAST(count(*) AS BIGINT) AS k
           FROM tok),
         c AS (
@@ -51,7 +54,16 @@ object CurationQueries {
           SELECT coalesce(sum(CASE WHEN capped THEN cap END), 0)
                    AS p_m,
                  coalesce(sum(CASE WHEN capped THEN 1 END), 0) AS m
-          FROM cc)"""
+          FROM cc),
+        alloc AS (
+          SELECT cc.source, cc.n_tokens, cc.cap AS cap_tokens,
+                 cc.capped,
+                 CAST(CASE WHEN cc.capped
+                      THEN CAST(cc.cap AS HUGEINT) * 1000000
+                      ELSE (cc.budget - CAST(mf.p_m AS HUGEINT))
+                             * 1000000 // CAST(cc.k - mf.m AS HUGEINT)
+                      END AS BIGINT) AS alloc_micro
+          FROM cc CROSS JOIN mf)"""
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -472,16 +484,7 @@ object CurationQueries {
           .orderBy(col("source"))
       },
       Some(s"""
-        WITH $unimaxCapped,
-        alloc AS (
-          SELECT cc.source, cc.n_tokens, cc.cap AS cap_tokens,
-                 cc.capped,
-                 CAST(CASE WHEN cc.capped
-                      THEN CAST(cc.cap AS HUGEINT) * 1000000
-                      ELSE (cc.budget - CAST(mf.p_m AS HUGEINT))
-                             * 1000000 // CAST(cc.k - mf.m AS HUGEINT)
-                      END AS BIGINT) AS alloc_micro
-          FROM cc CROSS JOIN mf)
+        WITH $unimaxAlloc
         SELECT source, n_tokens, cap_tokens, capped, alloc_micro,
                round(CAST(alloc_micro AS DOUBLE) /
                  (CAST(n_tokens AS DOUBLE) * 1000000), 6) AS epochs
@@ -518,15 +521,7 @@ object CurationQueries {
           .orderBy(col("doc_id"), col("epoch"))
       },
       Some(s"""
-        WITH $unimaxCapped,
-        alloc AS (
-          SELECT cc.source, cc.n_tokens,
-                 CAST(CASE WHEN cc.capped
-                      THEN CAST(cc.cap AS HUGEINT) * 1000000
-                      ELSE (cc.budget - CAST(mf.p_m AS HUGEINT))
-                             * 1000000 // CAST(cc.k - mf.m AS HUGEINT)
-                      END AS BIGINT) AS alloc_micro
-          FROM cc CROSS JOIN mf),
+        WITH $unimaxAlloc,
         ep AS (
           SELECT source,
                  CASE WHEN n_tokens > 0
@@ -611,12 +606,7 @@ object CurationQueries {
           .orderBy(col("source"))
       },
       Some(s"""
-        WITH $sourceTokens,
-        tot AS (
-          SELECT sum(CAST(n_tokens AS HUGEINT)) AS t,
-                 sum(CAST(n_tokens AS HUGEINT)) * 9 // 5 AS b,
-                 CAST(count(*) AS BIGINT) AS k
-          FROM tok),
+        WITH $unimaxAlloc,
         u AS (
           SELECT source, n_tokens,
                  CAST(CAST(round(exp(0.3 *
@@ -628,46 +618,19 @@ object CurationQueries {
           SELECT source,
                  round(CAST(ui AS DOUBLE) / CAST(z AS DOUBLE), 6)
                    AS alpha_share
-          FROM u CROSS JOIN z),
-        c AS (
-          SELECT source, n_tokens, n_tokens * 2 AS cap, b, k,
-                 ROW_NUMBER() OVER
-                   (ORDER BY n_tokens * 2, source) AS rn,
-                 coalesce(sum(n_tokens * 2) OVER
-                   (ORDER BY n_tokens * 2, source
-                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-                   0) AS pprev
-          FROM tok CROSS JOIN tot),
-        cc AS (
-          SELECT *,
-                 (CAST(pprev AS HUGEINT) +
-                  CAST(cap AS HUGEINT) * (k - rn + 1)) <= b AS capped
-          FROM c),
-        mf AS (
-          SELECT coalesce(sum(CASE WHEN capped THEN cap END), 0)
-                   AS p_m,
-                 coalesce(sum(CASE WHEN capped THEN 1 END), 0) AS m
-          FROM cc),
-        uni AS (
-          SELECT cc.source,
-                 CAST(CASE WHEN cc.capped
-                      THEN CAST(cc.cap AS HUGEINT) * 1000000
-                      ELSE (cc.b - CAST(mf.p_m AS HUGEINT))
-                             * 1000000 // CAST(cc.k - mf.m AS HUGEINT)
-                      END AS BIGINT) AS alloc_micro
-          FROM cc CROSS JOIN mf)
+          FROM u CROSS JOIN z)
         SELECT tok.source, tok.n_tokens,
                round(CAST(tok.n_tokens AS DOUBLE) /
                  CAST(tot.t AS DOUBLE), 6) AS natural_share,
                alpha.alpha_share,
-               round(CAST(uni.alloc_micro AS DOUBLE) /
-                 (CAST(tot.b AS DOUBLE) * 1000000), 6) AS unimax_share,
-               round(round(CAST(uni.alloc_micro AS DOUBLE) /
-                 (CAST(tot.b AS DOUBLE) * 1000000), 6) -
+               round(CAST(alloc.alloc_micro AS DOUBLE) /
+                 (CAST(tot.budget AS DOUBLE) * 1000000), 6) AS unimax_share,
+               round(round(CAST(alloc.alloc_micro AS DOUBLE) /
+                 (CAST(tot.budget AS DOUBLE) * 1000000), 6) -
                  alpha.alpha_share, 6) AS delta_unimax_vs_alpha
         FROM tok
         JOIN alpha USING (source)
-        JOIN uni ON uni.source = tok.source
+        JOIN alloc ON alloc.source = tok.source
         CROSS JOIN tot
         ORDER BY tok.source"""))
   )

@@ -1111,7 +1111,7 @@ object DedupQueries {
           .select(col("doc_id"), col("text"),
             tokenCount(col("text")).cast("long").as("n_tok"),
             fingerprintMd5(col("text")).as("fp"))
-          .localCheckpoint(eager = true)
+          .transform(graft.Boundary.eagerLocal)
         val tot = d.agg(coalesce(sum(col("n_tok")), lit(0L)).as("nt"))
         val exactDrops = d.withColumn("min_id",
             min(col("doc_id")).over(Window.partitionBy("fp")))

@@ -8,48 +8,61 @@ package graft.queries
   */
 object ModelOracleSql {
 
-  /** NB self-classification under the corpus's own `lang` model, before
-    * the argmax: defines `scored(doc_id, label, score)` with score =
-    * prior + n·smooth + Σ k·(logp − smooth) over the doc's observed
-    * (label, token) pairs, every term a DECIMAL(18,6) of a 6-decimal
-    * rounded ln (the q108 algebra).
+  /** NB scoring under a `lang` model fitted on the documents `train`
+    * selects, before the argmax: defines `scored$sfx(doc_id, label,
+    * score)` over the documents whose (doc_id, w) tokens `scoreTokens`
+    * holds, with score = prior + n·smooth + Σ k·(logp − smooth) over
+    * the doc's observed (label, token) pairs, every term a
+    * DECIMAL(18,6) of a 6-decimal rounded ln (the q108 algebra).
+    * `sfx` suffixes every CTE name, so several models fit in one
+    * `WITH`; `train` is a `WHERE` clause or empty (every document).
     */
-  val nbScored: String = """tok AS (
+  def nbScoredCtes(sfx: String, train: String, scoreTokens: String)
+      : String = s"""tok$sfx AS (
           SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-          FROM documents),
-        dt AS (SELECT doc_id, w, count(*) AS k FROM tok GROUP BY ALL),
-        lt AS (SELECT lang AS label, w, count(*) AS cnt
-               FROM tok GROUP BY ALL),
-        tot AS (SELECT label, sum(cnt) AS tot FROM lt GROUP BY 1),
-        v AS (SELECT count(DISTINCT w) AS v FROM lt),
-        n AS (SELECT count(*) AS n FROM documents),
-        consts AS (
+          FROM documents$train),
+        dt$sfx AS (SELECT doc_id, w, count(*) AS k
+               FROM $scoreTokens GROUP BY ALL),
+        lt$sfx AS (SELECT lang AS label, w, count(*) AS cnt
+               FROM tok$sfx GROUP BY ALL),
+        tot$sfx AS (SELECT label, sum(cnt) AS tot FROM lt$sfx GROUP BY 1),
+        v$sfx AS (SELECT count(DISTINCT w) AS v FROM lt$sfx),
+        n$sfx AS (SELECT count(*) AS n FROM documents$train),
+        consts$sfx AS (
           SELECT d.lang AS label,
-                 CAST(round(ln(count(*) * 1.0 / any_value(n.n)), 6)
+                 CAST(round(ln(count(*) * 1.0 / any_value(n$sfx.n)), 6)
                       AS DECIMAL(18,6)) AS prior,
-                 CAST(round(ln(1.0 / (any_value(tot.tot) + any_value(v.v))), 6)
+                 CAST(round(ln(1.0 / (any_value(tot$sfx.tot)
+                      + any_value(v$sfx.v))), 6)
                       AS DECIMAL(18,6)) AS smooth
-          FROM documents d CROSS JOIN n CROSS JOIN v
-          JOIN tot ON tot.label = d.lang
+          FROM documents d CROSS JOIN n$sfx CROSS JOIN v$sfx
+          JOIN tot$sfx ON tot$sfx.label = d.lang$train
           GROUP BY 1),
-        lp AS (
-          SELECT lt.label, lt.w,
-                 CAST(round(ln((lt.cnt + 1.0) / (tot.tot + v.v)), 6)
+        lp$sfx AS (
+          SELECT lt$sfx.label, lt$sfx.w,
+                 CAST(round(ln((lt$sfx.cnt + 1.0)
+                      / (tot$sfx.tot + v$sfx.v)), 6)
                       AS DECIMAL(18,6)) AS lp
-          FROM lt JOIN tot USING (label) CROSS JOIN v),
-        obs AS (
-          SELECT dt.doc_id, lp.label,
-                 sum(dt.k * (lp.lp - c.smooth)) AS obs_sum
-          FROM dt JOIN lp ON dt.w = lp.w
-          JOIN consts c ON c.label = lp.label
+          FROM lt$sfx JOIN tot$sfx USING (label) CROSS JOIN v$sfx),
+        obs$sfx AS (
+          SELECT dt$sfx.doc_id, lp$sfx.label,
+                 sum(dt$sfx.k * (lp$sfx.lp - c.smooth)) AS obs_sum
+          FROM dt$sfx JOIN lp$sfx ON dt$sfx.w = lp$sfx.w
+          JOIN consts$sfx c ON c.label = lp$sfx.label
           GROUP BY 1, 2),
-        dl AS (SELECT doc_id, sum(k) AS n_tok FROM dt GROUP BY 1),
-        scored AS (
-          SELECT dl.doc_id, c.label,
-                 c.prior + dl.n_tok * c.smooth + coalesce(obs.obs_sum, 0)
-                   AS score
-          FROM dl CROSS JOIN consts c
-          LEFT JOIN obs ON obs.doc_id = dl.doc_id AND obs.label = c.label)"""
+        dl$sfx AS (SELECT doc_id, sum(k) AS n_tok FROM dt$sfx GROUP BY 1),
+        scored$sfx AS (
+          SELECT dl$sfx.doc_id, c.label,
+                 c.prior + dl$sfx.n_tok * c.smooth
+                   + coalesce(obs$sfx.obs_sum, 0) AS score
+          FROM dl$sfx CROSS JOIN consts$sfx c
+          LEFT JOIN obs$sfx ON obs$sfx.doc_id = dl$sfx.doc_id
+            AND obs$sfx.label = c.label)"""
+
+  /** [[nbScoredCtes]] self-classification under the whole corpus's
+    * model: every document trains and is scored.
+    */
+  val nbScored: String = nbScoredCtes("", "", "tok")
 
   /** Bigram cross-entropy of every document with at least one bigram
     * under the corpus bigram model: defines

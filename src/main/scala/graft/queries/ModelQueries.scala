@@ -20,51 +20,12 @@ object ModelQueries {
     * `pred_$f` (doc_id, pred_label). The fold filters are the ONLY
     * difference from q108's replay.
     */
-  private def nbFoldCtes(f: Int, folds: Int): String = {
-    val train = s"doc_id % $folds <> $f"
-    val test = s"doc_id % $folds = $f"
-    s"""tok_$f AS (
-        SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
-        FROM documents WHERE $train),
-      dt_$f AS (
+  private def nbFoldCtes(f: Int, folds: Int): String =
+    s"""dtok_$f AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents WHERE $test),
-      dtc_$f AS (SELECT doc_id, w, count(*) AS k FROM dt_$f GROUP BY ALL),
-      lt_$f AS (SELECT lang AS label, w, count(*) AS cnt
-             FROM tok_$f GROUP BY ALL),
-      tot_$f AS (SELECT label, sum(cnt) AS tot FROM lt_$f GROUP BY 1),
-      v_$f AS (SELECT count(DISTINCT w) AS v FROM lt_$f),
-      n_$f AS (SELECT count(*) AS n FROM documents WHERE $train),
-      consts_$f AS (
-        SELECT d.lang AS label,
-               CAST(round(ln(count(*) * 1.0 / any_value(n_$f.n)), 6)
-                    AS DECIMAL(18,6)) AS prior,
-               CAST(round(ln(1.0 / (any_value(tot_$f.tot)
-                    + any_value(v_$f.v))), 6)
-                    AS DECIMAL(18,6)) AS smooth
-        FROM documents d CROSS JOIN n_$f CROSS JOIN v_$f
-        JOIN tot_$f ON tot_$f.label = d.lang
-        WHERE $train
-        GROUP BY 1),
-      lp_$f AS (
-        SELECT lt_$f.label, lt_$f.w,
-               CAST(round(ln((lt_$f.cnt + 1.0) / (tot_$f.tot + v_$f.v)), 6)
-                    AS DECIMAL(18,6)) AS lp
-        FROM lt_$f JOIN tot_$f USING (label) CROSS JOIN v_$f),
-      obs_$f AS (
-        SELECT dtc_$f.doc_id, lp_$f.label,
-               sum(dtc_$f.k * (lp_$f.lp - c.smooth)) AS obs_sum
-        FROM dtc_$f JOIN lp_$f ON dtc_$f.w = lp_$f.w
-        JOIN consts_$f c ON c.label = lp_$f.label
-        GROUP BY 1, 2),
-      dl_$f AS (SELECT doc_id, sum(k) AS n_tok FROM dtc_$f GROUP BY 1),
-      scored_$f AS (
-        SELECT dl_$f.doc_id, c.label,
-               c.prior + dl_$f.n_tok * c.smooth + coalesce(obs_$f.obs_sum, 0)
-                 AS score
-        FROM dl_$f CROSS JOIN consts_$f c
-        LEFT JOIN obs_$f ON obs_$f.doc_id = dl_$f.doc_id
-          AND obs_$f.label = c.label),
+        FROM documents WHERE doc_id % $folds = $f),
+      ${ModelOracleSql.nbScoredCtes(s"_$f",
+        s" WHERE doc_id % $folds <> $f", s"dtok_$f")},
       pred_$f AS (
         SELECT doc_id, label AS pred_label
         FROM (SELECT doc_id, label,
@@ -72,7 +33,6 @@ object ModelQueries {
                                    ORDER BY score DESC, label) AS rn
               FROM scored_$f)
         WHERE rn = 1)"""
-  }
 
   private val enLabelSql = "CASE WHEN lang = 'en' THEN 1 ELSE 0 END"
   private val LrDim = 64
@@ -126,7 +86,9 @@ object ModelQueries {
   /** Stupid Backoff trigram scoring (`LanguageModel.stupidBackoff`),
     * trained on documents outside src1 and scored over all of them:
     * defines `per(doc_id, n_trigrams, sb)`, sb the DECIMAL sum of
-    * 6-decimal-rounded backoff scores (α = 0.4).
+    * 6-decimal-rounded backoff scores (α = 0.4). Its other CTE names
+    * (`lmn`, `sd2`, `dtg`, `jj`, ...) avoid those of
+    * `LogReg.scoreArtifactCtes`, which q160 puts in the same `WITH`.
     */
   private val stupidBackoff: String = """tr AS (
           SELECT string_split(text, ' ') AS tk FROM documents
@@ -135,7 +97,7 @@ object ModelQueries {
           SELECT tk[i] AS w, count(*) AS c
           FROM tr, LATERAL unnest(range(1, len(tk) + 1)) AS u(i)
           GROUP BY 1),
-        n AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uni),
+        lmn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uni),
         big AS (
           SELECT tk[i] AS w1, tk[i+1] AS w2, count(*) AS c
           FROM tr, LATERAL unnest(range(1, greatest(len(tk), 1))) AS u(i)
@@ -144,23 +106,23 @@ object ModelQueries {
           SELECT tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3, count(*) AS c
           FROM tr, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)
           GROUP BY 1, 2, 3),
-        sd AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
+        sd2 AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
         pos AS (
           SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
-          FROM sd, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
-        dt AS (
+          FROM sd2, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
+        dtg AS (
           SELECT doc_id, w1, w2, w3, count(*) AS k FROM pos GROUP BY ALL),
-        j AS (
-          SELECT dt.doc_id, dt.k,
+        jj AS (
+          SELECT dtg.doc_id, dtg.k,
                  t.c AS c3, b12.c AS c2, b23.c AS c23,
-                 u2.c AS cu2, u3.c AS cu3, n.n
-          FROM dt
-          LEFT JOIN tri t ON dt.w1 = t.w1 AND dt.w2 = t.w2 AND dt.w3 = t.w3
-          LEFT JOIN big b12 ON dt.w1 = b12.w1 AND dt.w2 = b12.w2
-          LEFT JOIN big b23 ON dt.w2 = b23.w1 AND dt.w3 = b23.w2
-          LEFT JOIN uni u2 ON dt.w2 = u2.w
-          LEFT JOIN uni u3 ON dt.w3 = u3.w
-          CROSS JOIN n),
+                 u2.c AS cu2, u3.c AS cu3, lmn.n
+          FROM dtg
+          LEFT JOIN tri t ON dtg.w1 = t.w1 AND dtg.w2 = t.w2 AND dtg.w3 = t.w3
+          LEFT JOIN big b12 ON dtg.w1 = b12.w1 AND dtg.w2 = b12.w2
+          LEFT JOIN big b23 ON dtg.w2 = b23.w1 AND dtg.w3 = b23.w2
+          LEFT JOIN uni u2 ON dtg.w2 = u2.w
+          LEFT JOIN uni u3 ON dtg.w3 = u3.w
+          CROSS JOIN lmn),
         per AS (
           SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_trigrams,
                  sum(CAST(round(CASE
@@ -171,7 +133,7 @@ object ModelQueries {
                      THEN CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
                           * cu3 / CAST(n AS DOUBLE)
                    ELSE 0 END, 6) AS DECIMAL(18,6)) * k) AS sb
-          FROM j GROUP BY 1)"""
+          FROM jj GROUP BY 1)"""
 
   def defs: Seq[QueryDef] = Seq(
 
@@ -944,50 +906,7 @@ object ModelQueries {
       oracleFn = Some(dir => s"""
         WITH ${LogReg.scoreArtifactCtes(enLabelSql, LrDim,
           s"${lrArtifactDir(dir)}/weights")},
-        tr AS (
-          SELECT string_split(text, ' ') AS tk FROM documents
-          WHERE source <> 'src1'),
-        uni AS (
-          SELECT tk[i] AS w, count(*) AS c
-          FROM tr, LATERAL unnest(range(1, len(tk) + 1)) AS u(i)
-          GROUP BY 1),
-        lmn AS (SELECT CAST(sum(c) AS BIGINT) AS n FROM uni),
-        big AS (
-          SELECT tk[i] AS w1, tk[i+1] AS w2, count(*) AS c
-          FROM tr, LATERAL unnest(range(1, greatest(len(tk), 1))) AS u(i)
-          GROUP BY 1, 2),
-        tri AS (
-          SELECT tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3, count(*) AS c
-          FROM tr, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)
-          GROUP BY 1, 2, 3),
-        sd2 AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-        pos AS (
-          SELECT doc_id, tk[i] AS w1, tk[i+1] AS w2, tk[i+2] AS w3
-          FROM sd2, LATERAL unnest(range(1, greatest(len(tk) - 1, 1))) AS u(i)),
-        dtg AS (
-          SELECT doc_id, w1, w2, w3, count(*) AS k FROM pos GROUP BY ALL),
-        jj AS (
-          SELECT dtg.doc_id, dtg.k,
-                 t.c AS c3, b12.c AS c2, b23.c AS c23,
-                 u2.c AS cu2, u3.c AS cu3, lmn.n
-          FROM dtg
-          LEFT JOIN tri t ON dtg.w1 = t.w1 AND dtg.w2 = t.w2 AND dtg.w3 = t.w3
-          LEFT JOIN big b12 ON dtg.w1 = b12.w1 AND dtg.w2 = b12.w2
-          LEFT JOIN big b23 ON dtg.w2 = b23.w1 AND dtg.w3 = b23.w2
-          LEFT JOIN uni u2 ON dtg.w2 = u2.w
-          LEFT JOIN uni u3 ON dtg.w3 = u3.w
-          CROSS JOIN lmn),
-        per AS (
-          SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_trigrams,
-                 sum(CAST(round(CASE
-                   WHEN c3 IS NOT NULL THEN c3 / CAST(c2 AS DOUBLE)
-                   WHEN c23 IS NOT NULL
-                     THEN CAST(0.4 AS DOUBLE) * c23 / CAST(cu2 AS DOUBLE)
-                   WHEN cu3 IS NOT NULL
-                     THEN CAST(0.4 AS DOUBLE) * CAST(0.4 AS DOUBLE)
-                          * cu3 / CAST(n AS DOUBLE)
-                   ELSE 0 END, 6) AS DECIMAL(18,6)) * k) AS sb
-          FROM jj GROUP BY 1),
+        $stupidBackoff,
         lmsc AS (
           SELECT d.doc_id, CAST(per.sb AS DOUBLE) / per.n_trigrams AS avg_sb
           FROM documents d LEFT JOIN per USING (doc_id)),

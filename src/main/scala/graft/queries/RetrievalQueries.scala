@@ -77,7 +77,8 @@ object RetrievalQueries {
       (s, dir) => {
         val d = Tables.loadWide(s, dir, "documents")
         Retrieval.bm25TopK(d, "doc_id", "text", querySet(d), k = 10,
-            widen = Tables.stageWidener(s, dir, "documents", col("doc_id")))
+            boundary =
+              graft.Boundary.lazyWide(dir, "documents", col("doc_id")))
           .orderBy(col("qid"), col("rank"))
       },
       Some(s"""
@@ -99,9 +100,8 @@ object RetrievalQueries {
         // the localCheckpoint stage boundary (q48/q67 argument)
         // keeps the scan+explode from running twice; stage-widened
         // (r16) so both rankers' joins inherit real parallelism
-        val post = Tables.stageWidener(s, dir, "documents",
-            col("doc_id"))(Retrieval.postings(d, "doc_id", "text"))
-          .transform(graft.Boundary.lazyLocal)
+        val post = Retrieval.postings(d, "doc_id", "text")
+          .transform(graft.Boundary.lazyWide(dir, "documents", col("doc_id")))
         Retrieval.rrfTopK(
           Retrieval.bm25FromPostings(post, qs, k = 50),
           Retrieval.jaccardFromPostings(post, qs, k = 50),
@@ -161,7 +161,8 @@ object RetrievalQueries {
         val d = Tables.loadWide(s, dir, "documents")
         val ranked = Retrieval
           .bm25TopK(d, "doc_id", "text", querySet(d), k = 50,
-            widen = Tables.stageWidener(s, dir, "documents", col("doc_id")))
+            boundary =
+              graft.Boundary.lazyWide(dir, "documents", col("doc_id")))
           .transform(graft.Boundary.lazyLocal) // positives + negatives faces
         val pos = ranked.filter(col("rank") === 1)
           .select(col("qid"), col("doc_id").as("pos_id"))

@@ -121,16 +121,15 @@ object StatQueries {
         langId(col("text")).as("lang_pred"),
         fingerprintMd5(col("text")).as("fp"))
       // eager (r16): 5 consumers — the three stage rows, the window
-      // input, and s4's chain; lazy lets AQE race the concurrent
-      // materializations (the r15 ≥5-fan-out rule)
-      .localCheckpoint(eager = true)
+      // input, and s4's chain
+      .transform(graft.Boundary.eagerLocal)
     val s1 = scored.filter(col("quality") >= 0.5)
     val s2 = s1.filter(col("lang_pred") === col("lang"))
     val s3 = s2.withColumn("min_id",
         min(col("doc_id")).over(Window.partitionBy("fp")))
       .filter(col("doc_id") === col("min_id"))
       .select(col("doc_id"), col("text"), col("n_tok"))
-      .localCheckpoint(eager = true) // 4 consumers (r16, same rule)
+      .transform(graft.Boundary.eagerLocal) // 4 consumers
     val drops = MinHashDedup.nearDuplicatePairs(
         s3.select(col("doc_id"), col("text")), "doc_id", "text",
         threshold = 0.8)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.operators.{Containment, MinHashDedup, SimHashDedup}
 
@@ -34,9 +35,12 @@ import graft.operators.{Containment, MinHashDedup, SimHashDedup}
   */
 object StreamDedup {
 
-  final case class DocFp(band: Int, bucket: Long, id: Long, fp: Long,
+  /** One band-bucket row of a document: `fp` its fingerprint, one
+    * `Long` at 64 bits, (hi, lo) at 128.
+    */
+  final case class DocFp[F](band: Int, bucket: Long, id: Long, fp: F,
       et: Long, ts: java.sql.Timestamp)
-  final case class BucketState(members: List[(Long, Long)])
+  final case class BucketState[F](members: List[(Long, F)])
   final case class PairHit(doc_a: Long, doc_b: Long, hamming: Int, band: Int)
 
   /** `docs` needs (doc_id, text[, ts]); ts (timestamp) is required
@@ -49,21 +53,42 @@ object StreamDedup {
       evictAfter: Option[Long] = None, fpBits: Int = 64): Dataset[PairHit] = {
     require(fpBits == 64 || fpBits == 128, "fpBits must be 64 or 128")
     require(maxHamming >= 0 && maxHamming < fpBits, s"maxHamming in [0, $fpBits)")
-    if (fpBits == 128)
-      return simhashPairsStream128(docs, maxHamming, maxBucketSize,
-        portable, evictAfter)
+    if (fpBits == 128) {
+      val fp = docs
+        .withColumn("_bits", SimHashDedup.simhashBits("text", portable, 128))
+        .withColumn("hi", SimHashDedup.packBits("slice(_bits, 1, 64)"))
+        .withColumn("lo", SimHashDedup.packBits("slice(_bits, 65, 64)"))
+        .drop("_bits")
+      return bucketPairs[(Long, Long)](fp,
+        struct(col("hi").as("_1"), col("lo").as("_2")),
+        SimHashDedup.bandBucketCols128(maxHamming), maxHamming,
+        maxBucketSize, evictAfter)((a, b) =>
+        java.lang.Long.bitCount(a._1 ^ b._1) +
+          java.lang.Long.bitCount(a._2 ^ b._2))
+    }
     val numBands = maxHamming + 1
     val bounds = (0 to numBands).map(j => j * 64 / numBands)
     val fp = docs
       .withColumn("_bits", SimHashDedup.simhashBits("text", portable))
       .withColumn("fp", SimHashDedup.packBits("_bits")).drop("_bits")
-    val bandBuckets = array((0 until numBands).map { j =>
+    val bandBuckets = (0 until numBands).map { j =>
       val width = bounds(j + 1) - bounds(j)
       val mask = if (width == 64) -1L else (1L << width) - 1
-      struct(lit(j).as("band"),
-        expr(s"shiftrightunsigned(fp, ${64 - bounds(j + 1)})")
-          .bitwiseAND(lit(mask)).as("bucket"))
-    }: _*)
+      expr(s"shiftrightunsigned(fp, ${64 - bounds(j + 1)})")
+        .bitwiseAND(lit(mask))
+    }
+    bucketPairs[Long](fp, col("fp"), bandBuckets, maxHamming,
+      maxBucketSize, evictAfter)((a, b) => java.lang.Long.bitCount(a ^ b))
+  }
+
+  /** The per-(band, bucket) state machine of [[simhashPairsStream]],
+    * shared by both widths: `fpCol` is a document's fingerprint in
+    * `fp`'s columns, `bandBuckets` its bucket in each band, `hamming`
+    * the distance between two fingerprints.
+    */
+  private def bucketPairs[F: TypeTag](fp: DataFrame, fpCol: Column,
+      bandBuckets: Seq[Column], maxHamming: Int, maxBucketSize: Int,
+      evictAfter: Option[Long])(hamming: (F, F) => Int): Dataset[PairHit] = {
     // the WATERMARKED ts column must survive into the operator input:
     // EventTimeTimeout is rejected at analysis without it, and its
     // presence lets FlatMapGroupsWithStateExec drop late rows before
@@ -72,32 +97,36 @@ object StreamDedup {
     val (et, tsCol) =
       if (evictAfter.isDefined) (unix_millis(col("ts")), col("ts"))
       else (lit(0L), lit(null).cast("timestamp"))
-    implicit val inEnc = Encoders.product[DocFp]
-    implicit val stEnc = Encoders.product[BucketState]
+    implicit val inEnc = Encoders.product[DocFp[F]]
+    implicit val stEnc = Encoders.product[BucketState[F]]
     implicit val outEnc = Encoders.product[PairHit]
     implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    val exploded = fp.select(explode(bandBuckets).as("bb"),
-        col("doc_id").as("id"), col("fp"), et.as("et"), tsCol.as("ts"))
+    val banded = array(bandBuckets.zipWithIndex.map { case (b, j) =>
+      struct(lit(j).as("band"), b.as("bucket"))
+    }: _*)
+    val exploded = fp.select(explode(banded).as("bb"),
+        col("doc_id").as("id"), fpCol.as("fp"), et.as("et"), tsCol.as("ts"))
       .select(col("bb.band"), col("bb.bucket"), col("id"), col("fp"),
         col("et"), col("ts"))
-      .as[DocFp]
+      .as[DocFp[F]]
     val timeoutConf =
       if (evictAfter.isDefined) GroupStateTimeout.EventTimeTimeout()
       else GroupStateTimeout.NoTimeout()
     exploded.groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState[BucketState, PairHit](
+      .flatMapGroupsWithState[BucketState[F], PairHit](
         OutputMode.Append(), timeoutConf) {
         (key, rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            var members = state.getOption.getOrElse(BucketState(Nil)).members
+            var members =
+              state.getOption.getOrElse(BucketState[F](Nil)).members
             val out = scala.collection.mutable.ListBuffer[PairHit]()
             var maxEt = Long.MinValue
             rows.foreach { d =>
               maxEt = math.max(maxEt, d.et)
               members.foreach { case (mid, mfp) =>
                 if (mid != d.id) {
-                  val h = java.lang.Long.bitCount(mfp ^ d.fp)
+                  val h = hamming(mfp, d.fp)
                   if (h <= maxHamming) {
                     val (a, b) = if (mid < d.id) (mid, d.id) else (d.id, mid)
                     out += PairHit(a, b, h, key._1)
@@ -114,75 +143,6 @@ object StreamDedup {
               // would make maxEt + ttl <= watermark and
               // setTimeoutTimestamp would throw — clamp to just past
               // the current watermark
-              if (maxEt > Long.MinValue) state.setTimeoutTimestamp(
-                math.max(state.getCurrentWatermarkMs() + 1, maxEt + ttl))
-            }
-            out.iterator
-          }
-      }
-  }
-
-  final case class DocFp2(band: Int, bucket: Long, id: Long, hi: Long,
-      lo: Long, et: Long, ts: java.sql.Timestamp)
-  final case class BucketState2(members: List[(Long, Long, Long)])
-
-  /** 128-bit branch of `simhashPairsStream` — identical state machine,
-    * (id, hi, lo) members (24 B/doc/band), two-long `bitCount` verify.
-    */
-  private def simhashPairsStream128(docs: DataFrame, maxHamming: Int,
-      maxBucketSize: Int, portable: Boolean,
-      evictAfter: Option[Long]): Dataset[PairHit] = {
-    val fp = docs
-      .withColumn("_bits", SimHashDedup.simhashBits("text", portable, 128))
-      .withColumn("hi", SimHashDedup.packBits("slice(_bits, 1, 64)"))
-      .withColumn("lo", SimHashDedup.packBits("slice(_bits, 65, 64)"))
-      .drop("_bits")
-    val bandBuckets = array(
-      SimHashDedup.bandBucketCols128(maxHamming).zipWithIndex.map {
-        case (b, j) => struct(lit(j).as("band"), b.as("bucket"))
-      }: _*)
-    val (et, tsCol) =
-      if (evictAfter.isDefined) (unix_millis(col("ts")), col("ts"))
-      else (lit(0L), lit(null).cast("timestamp"))
-    implicit val inEnc = Encoders.product[DocFp2]
-    implicit val stEnc = Encoders.product[BucketState2]
-    implicit val outEnc = Encoders.product[PairHit]
-    implicit val keyEnc = Encoders.tuple(Encoders.scalaInt, Encoders.scalaLong)
-    val exploded = fp.select(explode(bandBuckets).as("bb"),
-        col("doc_id").as("id"), col("hi"), col("lo"),
-        et.as("et"), tsCol.as("ts"))
-      .select(col("bb.band"), col("bb.bucket"), col("id"), col("hi"),
-        col("lo"), col("et"), col("ts"))
-      .as[DocFp2]
-    val timeoutConf =
-      if (evictAfter.isDefined) GroupStateTimeout.EventTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    exploded.groupByKey(d => (d.band, d.bucket))
-      .flatMapGroupsWithState[BucketState2, PairHit](
-        OutputMode.Append(), timeoutConf) {
-        (key, rows, state) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var members = state.getOption.getOrElse(BucketState2(Nil)).members
-            val out = scala.collection.mutable.ListBuffer[PairHit]()
-            var maxEt = Long.MinValue
-            rows.foreach { d =>
-              maxEt = math.max(maxEt, d.et)
-              members.foreach { case (mid, mhi, mlo) =>
-                if (mid != d.id) {
-                  val h = java.lang.Long.bitCount(mhi ^ d.hi) +
-                    java.lang.Long.bitCount(mlo ^ d.lo)
-                  if (h <= maxHamming) {
-                    val (a, b) = if (mid < d.id) (mid, d.id) else (d.id, mid)
-                    out += PairHit(a, b, h, key._1)
-                  }
-                }
-              }
-              if (members.length < maxBucketSize)
-                members = (d.id, d.hi, d.lo) :: members
-            }
-            state.update(BucketState2(members))
-            evictAfter.foreach { ttl =>
               if (maxEt > Long.MinValue) state.setTimeoutTimestamp(
                 math.max(state.getCurrentWatermarkMs() + 1, maxEt + ttl))
             }

@@ -90,6 +90,21 @@ class ArtifactHygieneSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"catch Throwable (use NonFatal): $offenders")
   }
 
+  /** `Boundary` is the engine's one compute-once primitive: it keeps a
+    * lazy checkpoint's metrics reachable, widens a checkpoint's input
+    * under the file-count guard and frees superseded checkpoints.
+    */
+  test("only Boundary checkpoints, caches or widens in src/main") {
+    val offenders = mainFilesMatching(
+      ("""\.\s*(localCheckpoint|checkpoint|persist)\s*\(""" +
+        """|\.\s*cache\s*\(\s*\)""").r)
+      .filterNot(_.endsWith("/Boundary.scala")) ++
+      mainFilesMatching("""stageWidener""".r)
+    assert(offenders.isEmpty,
+      s"compute-once boundaries outside graft.Boundary: " +
+        offenders.distinct.sorted.mkString(", "))
+  }
+
   test("artifact dirs disambiguate raw data dirs that sanitize alike") {
     val a = graft.sources.Artifacts.dir("lr", "/data/x.y", "d8")
     val b = graft.sources.Artifacts.dir("lr", "/data/x_y", "d8")

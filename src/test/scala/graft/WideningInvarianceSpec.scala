@@ -5,9 +5,10 @@ import org.apache.spark.sql.functions.col
 import graft.operators.MinHashDedup
 
 /** Registered queries are repartition-invariant by contract; that is
-  * what lets `Tables.loadWide` add its round-robin exchange on a
-  * degenerate layout. This checks the contract where widening really
-  * engages: the 1-file sf0.1 tables on a 4-core session.
+  * what lets `Tables.loadWide` add its round-robin exchange, and
+  * `Boundary.lazyWide` its key-hashed one, on a degenerate layout.
+  * This checks the contract where widening really engages: the
+  * 1-file sf0.1 tables on a 4-core session.
   */
 class WideningInvarianceSpec extends SparkSpec {
 
@@ -35,9 +36,12 @@ class WideningInvarianceSpec extends SparkSpec {
       .write.parquet(s"$split/documents.parquet")
     assert(Tables.wideningEngages(spark, sf01, "documents"))
     assert(!Tables.wideningEngages(spark, split.getPath, "documents"))
+    // the MinHash-pair family widens through loadWide; the three
+    // rankers also widen their postings checkpoint (Boundary.lazyWide)
     val differing = Seq("q59_dup_clusters", "q60_leak_safe_split",
         "q91_crosscorpus_neardup", "q159_dup_degree", "q175_dup_triangles",
-        "q188_cluster_survivors").filter { name =>
+        "q188_cluster_survivors", "q119_bm25_topk", "q120_rrf_fusion",
+        "q128_hard_negatives").filter { name =>
       val q = SparkEntry.queries(name)
       def rows(dir: String) = q(spark, dir).collect().map(_.toString).sorted
       !rows(sf01).sameElements(rows(split.getPath))
