@@ -4,7 +4,6 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.LongAdder
 
 import scala.collection.concurrent.TrieMap
-import scala.collection.mutable
 import scala.util.control.NonFatal
 
 import org.apache.spark.GraftListenerBridge
@@ -57,6 +56,17 @@ object Metrics {
     /** Sum of the observed deltas whose key ends with `suffix`. */
     def observedSum(suffix: String): Long =
       observed.collect { case (k, v) if k.endsWith(suffix) => v }.sum
+
+    /** [[sec]] rounded to ms. */
+    def roundedSec: Double = math.rint(sec * 1000) / 1000
+
+    /** The guard counters: AQE skew splits and the LshSkew cap drops
+      * (buckets, rows) this body caused.
+      */
+    def counters: Seq[(String, Long)] = Seq(
+      "aqe_skew_splits" -> skewSplits,
+      "cap_buckets" -> observedSum(".dropped_buckets"),
+      "cap_rows" -> observedSum(".dropped_rows"))
   }
 
   private def counters(): (Long, Long, Long, Map[String, Long], Long) =
@@ -82,42 +92,18 @@ object Metrics {
     (a, Profile(sec, j1 - j0, t1 - t0, k1 - k0, observed, b1 - b0))
   }
 
-  /** Ordered fields of one stress-main JSON line, starting with
-    * `init`. [[measure]] records an op's [[Profile]] as `<op>_sec` and,
-    * for `guarded` ops, as `<op>_aqe_skew_splits`, `<op>_cap_buckets`
-    * and `<op>_cap_rows` (the LshSkew cap drops it caused). Seconds are
-    * rounded to ms. Strings render quoted, a NaN as `null`, a nested
-    * Report as an object.
+  /** One JSON object of `fields` in order: strings quoted, a NaN or
+    * null as `null`, anything else as its `toString`.
     */
-  final class Report(spark: SparkSession, init: (String, Any)*) {
-    private val fields = mutable.LinkedHashMap[String, Any](init: _*)
-
-    def update(key: String, value: Any): Unit = fields(key) = value
-
-    def sec(key: String, p: Profile): Unit =
-      fields(key) = math.rint(p.sec * 1000) / 1000
-
-    def measure[A](op: String, guarded: Boolean = false)(body: => A): A = {
-      val (a, p) = Metrics.measure(spark)(body)
-      sec(s"${op}_sec", p)
-      if (guarded) {
-        fields(s"${op}_aqe_skew_splits") = p.skewSplits
-        fields(s"${op}_cap_buckets") = p.observedSum(".dropped_buckets")
-        fields(s"${op}_cap_rows") = p.observedSum(".dropped_rows")
-      }
-      a
+  def json(fields: Seq[(String, Any)]): String = fields.map { case (k, v) =>
+    val s = v match {
+      case null => "null"
+      case s: String => "\"" + s + "\""
+      case d: Double if d.isNaN => "null"
+      case other => other.toString
     }
-
-    def json: String = fields.map { case (k, v) =>
-      val s = v match {
-        case s: String => "\"" + s + "\""
-        case d: Double if d.isNaN => "null"
-        case r: Report => r.json
-        case other => other.toString
-      }
-      "\"" + k + "\":" + s
-    }.mkString("{", ",", "}")
-  }
+    "\"" + k + "\":" + s
+  }.mkString("{", ",", "}")
 
   /** Every node of an executed plan as it finally ran: AQE's final
     * plan, each query stage's materialized subtree, children and

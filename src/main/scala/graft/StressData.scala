@@ -3,11 +3,10 @@ package graft
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Deterministic ×N corpus replication shared by the stress harnesses
-  * (TailStress, CorpusStress, ScaleStress, EmbedStress) and the
-  * sized-corpus quality gate (IvfSizedRecallSpec): one definition so
-  * the corpus the per-round stress measures and the corpus the suite
-  * GATES are the same data.
+/** Deterministic ×N corpus replication shared by the stress harness
+  * (`Stress`) and the sized-corpus quality gate (IvfSizedRecallSpec):
+  * one definition so the corpus the per-round stress measures and the
+  * corpus the suite GATES are the same data.
   *
   * Copy `cp` of a row gets its id remapped to `id + cp·Stride`. The
   * stride is a multiple of 50 and 8, larger than any base id, so the
@@ -77,6 +76,36 @@ object StressData {
       case "embedding" => signFlip(col("embedding"), col("cp"))
     }
 
+  /** `f` sign-flipped copies of an embeddings frame as `(id, vec)`,
+    * plus a planted near-duplicate twin of every 25th base vector —
+    * near-dup ground truth that a recall count can read directly:
+    *   - copy `cp` of vector v is D_cp·v ([[signFlip]]): within-copy
+    *     cosines are EXACTLY preserved, cross-copy cosines are
+    *     scrambled to the noise floor — true pairs stay within a copy;
+    *   - a twin is its source with per-element multiplicative jitter
+    *     u ∈ [1−0.4, 1+0.4] (deterministic, keyed on (oid, cp,
+    *     element)), giving twin cosines ≈ 0.97;
+    *   - source ids are even (2·(oid·f+cp)), twin ids odd (+1), so the
+    *     ground-truth pair set is {(2k, 2k+1)}.
+    * At cosine threshold 0.9 the natural corpus has zero pairs (max
+    * natural cosine ≈ 0.6), so found pairs ≈ planted pairs.
+    */
+  def plantedTwins(emb: DataFrame, f: Int): DataFrame = {
+    val rows = emb.select(col("vec_id").as("oid"), col("embedding").as("v"))
+      .crossJoin(copies(emb.sparkSession, f))
+    val flip = signFlip(col("v"), col("cp"))
+    val srcs = rows.select(
+      ((col("oid") * f + col("cp")) * 2).as("id"), flip.as("vec"))
+    val twins = rows.filter(col("oid") % 25 === 0)
+      .select(((col("oid") * f + col("cp")) * 2 + 1).as("id"),
+        transform(flip, (x, i) =>
+          (x * (lit(1.0f) +
+            (pmod(xxhash64(col("oid"), col("cp"), i, lit(7)), lit(1000))
+              .cast("double") / 500.0 - 1.0).cast("float") * lit(0.4f)))
+            .cast("float")).as("vec"))
+    srcs.union(twins)
+  }
+
   /** Writes `df` as `Tables.cpus` hash splits on `key` and reads it
     * back. A replicated corpus is written as MANY splits: the crossJoin
     * plan funnels everything into the handful of source-scan
@@ -94,12 +123,16 @@ object StressData {
   }
 
   /** Forces every column of `df` through Bench's `noop` sink and
-    * returns its row count, observed in the same action: `.count()`
-    * would let Catalyst prune the unused projections.
+    * returns its row count as `n` plus each of `aggs` by its alias,
+    * all observed in the same action: `.count()` would let Catalyst
+    * prune the unused projections.
     */
-  def forcedRows(df: DataFrame): Long = {
-    val rows = Observation("stress_rows")
-    Bench.force(df.observe(rows, count(lit(1)).as("n")))
-    rows.get("n").asInstanceOf[Long]
+  def forced(df: DataFrame, aggs: Column*): Map[String, Any] = {
+    val obs = Observation("stress_rows")
+    Bench.force(df.observe(obs, count(lit(1)).as("n"), aggs: _*))
+    obs.get
   }
+
+  /** The row count of [[forced]]. */
+  def forcedRows(df: DataFrame): Long = forced(df)("n").asInstanceOf[Long]
 }

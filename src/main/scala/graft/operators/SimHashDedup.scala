@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   * recall at every radius, so the pair query is
   * brute-force-oracle-checkable.
   *
-  * Scale law (measured in ScaleStress / PERF.md): a band of
+  * Scale law (measured by `graft.Stress` / PERF.md): a band of
   * `fpBits/(maxHamming+1)` bits has only `2^(fpBits/(maxHamming+1))`
   * possible buckets, so the radius bounds the blocking capacity at a
   * given width — 64-bit at radius 8 (~128 buckets/band) saturates the

@@ -444,7 +444,7 @@ object Similarity {
       * consumers n^(7/4), still sub-quadratic) while the probe count
       * grows enough that finer cells keep localizing the true
       * neighbor. The constant 2 is MEASURED, not argued: the
-      * IvfSizingStress probe-sweep mode's recall@1-vs-nProbe curve
+      * `graft.Stress` ivf_nprobe sweep's recall@1-vs-nProbe curve
       * on the ×50 stress corpus (PERF.md r14) is where it comes
       * from, and IvfSizedRecallSpec re-measures the law point
       * against the sampled exact anchor every suite run. At the

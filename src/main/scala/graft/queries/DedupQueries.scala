@@ -41,10 +41,10 @@ object DedupQueries {
   /** Sizing law for the shared quantizer — cells ∝ √n, floor 16
     * (r12 verdict: a FIXED nLists makes any all-queries-vs-corpus
     * consumer quadratic — every query scans nProbe/nLists of the
-    * corpus while the query count grows with it; TailStress ×50
+    * corpus while the query count grows with it; the ×50 tail stress
     * measured q169 at 244× under the old hardcoded 16). With
     * nLists = ⌈√n/2⌉ a probe costs nProbe·n/nLists = 2·nProbe·√n
-    * per query — the IvfSizingStress-measured rule (PERF.md §r13),
+    * per query — the rule `graft.Stress` measures (PERF.md §r13),
     * the same E|cell| ∝ √n contract `semDedupPairs` documents. The
     * ½ constant keeps the smallest gated corpus (500 vectors, where
     * RetrievalSpec measures the q169-vs-q162 ≥0.9 recall contract at

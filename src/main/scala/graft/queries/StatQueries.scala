@@ -47,7 +47,7 @@ object StatQueries {
   /** (chk, n_docs, vocab) cumulative checkpoint frame for the Heaps
     * fit — the q182 linear plan (first-occurrence collapse: one
     * (token → min doc_id) exchange, checkpoint counts as bucket sums
-    * over a 7-row spine). Shared with CorpusStress.
+    * over a 7-row spine). Shared with `graft.Stress`'s q182 entry.
     */
   private[graft] def heapsCum(s: org.apache.spark.sql.SparkSession,
       d: DataFrame): DataFrame = {
@@ -106,7 +106,7 @@ object StatQueries {
 
   /** The q183 curation funnel — raw → quality gate → lang agreement →
     * exact dedup → near dedup, five (stage, rule, docs, tokens) rows
-    * off ONE checkpointed scored scan. Shared with CorpusStress,
+    * off ONE checkpointed scored scan. Shared with `graft.Stress`,
     * whose pure-duplication corpus proves the collapse invariants
     * (stages 0–2 scale ×f, stages 3–4 return to the base survivor
     * set).

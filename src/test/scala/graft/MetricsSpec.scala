@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
   * AQE skew-split counter counts REAL skew handling — a deliberately
   * hot-keyed sort-merge join under lowered thresholds must be detected
   * and split by AQE, and `Metrics.aqeSkewSplits` must see it. The
-  * CorpusStress tables report zeros for these counters (token-disjoint
+  * `graft.Stress` tables report zeros for these counters (token-disjoint
   * replication builds an unskewed corpus by construction); this spec is
   * the evidence those zeros are measurements, not a dead listener.
   */
@@ -57,7 +57,7 @@ class MetricsSpec extends SparkSpec {
     ).map(k => k -> conf.getOption(k))
     try {
       // thresholds scaled to a test-sized corpus (same ratios as the
-      // production defaults — see CorpusStress); broadcasts off so the
+      // production defaults — see Stress.session); broadcasts off so the
       // join is sort-merge and skew handling is in play
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "256k")
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "128k")

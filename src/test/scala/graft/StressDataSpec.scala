@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** The ×N replication every stress main shares (`StressData`), checked
+/** The ×N replication the stress harness reads (`StressData`), checked
   * at sf0.001 ×3: the properties the stress tables' linearity claims
   * rest on.
   */

@@ -14,7 +14,7 @@ import graft.sources.{ArtifactGuard, Artifacts}
   * recall@1 0.856 → 0.376 on the ×50 corpus, PERF.md r13) stayed
   * invisible to the suite. This spec measures the law point on a
   * SIZED corpus (n = 100 000 ≥ the ×50 stress size — the same
-  * replication `TailStress` stresses, via the shared `StressData`,
+  * replication `graft.Stress` stresses, via the shared `StressData`,
   * which is the adversarial case: 50 mutually decorrelated isometric
   * copies, no global cluster structure for the quantizer to exploit)
   * against a deterministic sampled EXACT anchor, through the SAME
@@ -61,7 +61,7 @@ class IvfSizedRecallSpec extends SparkSpec {
       .select(col("vec_id").as("id"), col("embedding").as("vec"))
 
   /** Deterministic 1/101 sample of the even-id (query-side) vectors —
-    * the same sample IvfSizingStress anchors its sweep on.
+    * the same sample `graft.Stress`'s IVF entries anchor on.
     */
   private def sampleQueries(emb: DataFrame): DataFrame =
     emb.filter(col("id") % 2 === 0)

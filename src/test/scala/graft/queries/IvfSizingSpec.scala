@@ -6,7 +6,7 @@ import graft.SparkSpec
 /** The artifact sizing contract (r12 verdict #1/#2, SCALE.md §7):
   * the shared IVF quantizer derives nLists from the corpus it
   * indexes (cells ∝ √n, floor 16) instead of a hardcoded constant —
-  * the fix for the measured TailStress ×50 quadratic (q169 at 244×
+  * the fix for the measured ×50 tail-stress quadratic (q169 at 244×
   * under nLists=16) — and records what it was sized for in the
   * artifact's `_meta`, readable without rebuilding the index.
   */
