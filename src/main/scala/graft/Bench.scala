@@ -112,7 +112,7 @@ object Bench {
           try { force(fn(spark, sfDir)); true } catch {
             case NonFatal(e) =>
               errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
-                .replaceAll("[\"\\\\\\n\\r\\t]", " ").take(200)
+                .take(200)
               false
           }
         }
@@ -128,7 +128,8 @@ object Bench {
     val qs = results.map { case (k, v) =>
       s"\"" + k + "\":" + v.map(_.toString).getOrElse("null")
     }.mkString("{", ",", "}")
-    val errJson = errors.map { case (k, v) => s"\"$k\":\"$v\"" }
+    val errJson = errors
+      .map { case (k, v) => Metrics.quote(k) + ":" + Metrics.quote(v) }
       .mkString("{", ",", "}")
     val total = results.flatMap(_._2).sum
     // Per-sweep totals (successful timings only) ride the artifact so a

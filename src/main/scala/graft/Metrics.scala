@@ -98,12 +98,26 @@ object Metrics {
   def json(fields: Seq[(String, Any)]): String = fields.map { case (k, v) =>
     val s = v match {
       case null => "null"
-      case s: String => "\"" + s + "\""
+      case s: String => quote(s)
       case d: Double if d.isNaN => "null"
       case other => other.toString
     }
-    "\"" + k + "\":" + s
+    quote(k) + ":" + s
   }.mkString("{", ",", "}")
+
+  /** `s` as a JSON string literal: quote, backslash and every control
+    * character (< 0x20) escaped, so a tab or newline in an error
+    * message or in SQL cannot break the reader's parse.
+    */
+  def quote(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 
   /** Every node of an executed plan as it finally ran: AQE's final
     * plan, each query stage's materialized subtree, children and

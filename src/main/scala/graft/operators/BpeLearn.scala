@@ -352,23 +352,15 @@ object BpeLearn {
   def artifactPath(dataDir: String, numMerges: Int): String =
     graft.sources.Artifacts.dir("bpe", dataDir, s"m$numMerges")
 
-  /** Fingerprint of the input data's file listing — see
-    * [[graft.sources.ArtifactGuard.dataFingerprint]] (shared with the
-    * IVF index guard).
-    */
-  def dataFingerprint(
-      spark: org.apache.spark.sql.SparkSession, path: String): String =
-    graft.sources.ArtifactGuard.dataFingerprint(spark, path)
-
-  /** Learn-once artifact (the IvfIndex.buildIfAbsent pattern):
+  /** Learn-once artifact ([[graft.sources.ArtifactGuard.once]]):
     * tokenizer training is an OFFLINE pass — queries load the saved
     * merge table and only pay encoding. First caller trains and
-    * writes; everyone after reads the parquet. When `fingerprint` is
-    * provided it is stored beside the parquet and checked on reuse —
-    * a stale artifact (data regenerated at the same path) retrains
-    * instead of silently serving old merges. The artifact path stays
-    * STABLE for a given (corpus dir, numMerges) so the DuckDB oracle
-    * can replay the saved merges from a static location.
+    * writes; everyone after reads the parquet. `fingerprint` (of the
+    * training data) keys freshness — a stale artifact (data
+    * regenerated at the same path) retrains instead of silently
+    * serving old merges. The artifact path stays STABLE for a given
+    * (corpus dir, numMerges) so the DuckDB oracle can replay the
+    * saved merges from a static location.
     */
   def learnMergesIfAbsent(
       spark: org.apache.spark.sql.SparkSession,
@@ -380,13 +372,11 @@ object BpeLearn {
       fingerprint: Option[String] = None,
       byteLevel: Boolean = false,
       specialTokens: Seq[String] = Nil): DataFrame = {
-    import graft.sources.ArtifactGuard
-    if (!ArtifactGuard.fresh(spark, path, s"$path/_SUCCESS", fingerprint)) {
+    graft.sources.ArtifactGuard.once(spark, path, fingerprint) {
       learnMergesWithStats(corpus, textCol, numMerges, minPairCount,
         byteLevel = byteLevel, specialTokens = specialTokens)._1
         .coalesce(1).write.mode("overwrite").parquet(path)
-      ArtifactGuard.stamp(spark, path, fingerprint)
-    }
+    }(())
     graft.Tables.read(spark, path)
   }
 

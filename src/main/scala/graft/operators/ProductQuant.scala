@@ -50,16 +50,15 @@ object ProductQuant {
     (parts.map(_._2).reduce(_ union _), parts.map(_._1).reduce(_ union _))
   }
 
-  /** Persist codebook + codes under `path` iff absent (fingerprint-
-    * guarded, the IVF/BPE artifact contract), then return the loaded
-    * parquet-backed pair.
+  /** Persist codebook + codes under `path` unless fresh (the
+    * learn-once [[graft.sources.ArtifactGuard.once]] contract), then
+    * return the loaded parquet-backed pair, memoized per (path,
+    * fingerprint).
     */
   def buildIfAbsent(spark: SparkSession, emb: => DataFrame, path: String,
       m: Int, subDim: Int, k: Int, iters: Int,
-      fingerprint: Option[String] = None): (DataFrame, DataFrame) = {
-    import graft.sources.ArtifactGuard
-    if (!ArtifactGuard.fresh(spark, path, s"$path/codes/_SUCCESS",
-        fingerprint)) {
+      fingerprint: Option[String] = None): (DataFrame, DataFrame) =
+    graft.sources.ArtifactGuard.once(spark, path, fingerprint) {
       val e = emb
       require(e.limit(1).count() > 0, "empty corpus: PQ codebook " +
         "training requires vectors")
@@ -67,11 +66,10 @@ object ProductQuant {
       codebook.coalesce(1).write.mode("overwrite")
         .parquet(s"$path/codebook")
       codes.write.mode("overwrite").parquet(s"$path/codes")
-      ArtifactGuard.stamp(spark, path, fingerprint)
+    } {
+      (graft.Tables.read(spark, s"$path/codebook"),
+        graft.Tables.read(spark, s"$path/codes"))
     }
-    (graft.Tables.read(spark, s"$path/codebook"),
-      graft.Tables.read(spark, s"$path/codes"))
-  }
 
   /** L2-normalize (id, vec) — norm computed ONCE per vector, then one
     * element-wise transform. Quantizing NORMALIZED vectors makes ADC

@@ -67,40 +67,25 @@ object Similarity {
     * as a parquet artifact `(tbl, bit, plane)` — table `t`'s planes
     * are `gaussianPlanes(bitsPerTable, dim, seed + t)`, exactly the
     * values the operators bake into the plan as literals. A pure
-    * function of the parameters, so no data fingerprint is needed
-    * (the q86/q92 artifact-oracle pattern minus the staleness guard):
-    * the artifact exists solely so the DuckDB oracle can replay the
-    * sign-bit buckets from the SAME doubles — parquet round-trips
-    * them bit-exactly, where a SQL-literal rendering would bloat the
-    * oracle by ~6k doubles.
-    *
-    * Existence is probed through the Hadoop FileSystem API (not
-    * `java.io.File`, which only sees the local filesystem — advisor
-    * r6) and the write is temp-then-rename so a concurrent oracle
-    * read can never observe a half-rewritten artifact: content is
-    * deterministic, but `mode("overwrite")` in place is not atomic.
-    * A losing racer's rename fails against the existing dir and its
-    * temp output is discarded — both outcomes are the same bytes.
+    * function of the parameters, which the caller's path names, so it
+    * carries no data fingerprint: the artifact exists solely so the
+    * DuckDB oracle can replay the sign-bit buckets from the SAME
+    * doubles — parquet round-trips them bit-exactly, where a
+    * SQL-literal rendering would bloat the oracle by ~6k doubles.
+    * Written once through [[graft.sources.ArtifactGuard.once]].
     */
   def savePlanesArtifact(spark: org.apache.spark.sql.SparkSession,
       path: String, bitsPerTable: Int, numTables: Int, dim: Int,
-      seed: Long): Unit = {
-    val target = new org.apache.hadoop.fs.Path(path)
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(new org.apache.hadoop.fs.Path(s"$path/_SUCCESS"))) {
+      seed: Long): Unit =
+    graft.sources.ArtifactGuard.once(spark, path, None) {
       import spark.implicits._
-      val tmp = new org.apache.hadoop.fs.Path(
-        s"${path}__tmp_${java.util.UUID.randomUUID().toString.take(8)}")
       (0 until numTables).flatMap { t =>
         gaussianPlanes(bitsPerTable, dim, seed + t).zipWithIndex.map {
           case (p, b) => (t, b, p)
         }
       }.toDF("tbl", "bit", "plane")
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val renamed = !fs.exists(target) && fs.rename(tmp, target)
-      if (!renamed) fs.delete(tmp, true)
-    }
-  }
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    }(())
 
   /** Exact cosine top-k neighbors for each query vector.
     * `queries`/`corpus`: (id, vec). Output: (query_id, neighbor_id,
@@ -455,58 +440,44 @@ object Similarity {
     def nProbeLaw(nLists: Int): Int =
       math.max(8, math.ceil(2.0 * math.sqrt(nLists.toDouble)).toInt)
 
-    // loaded-index cache so a bench/verify sweep builds each index at
-    // most once per JVM; the cached object's `assigned` is a PARQUET
-    // SCAN (from load), never the in-memory KMeans lineage — reusing
-    // the built DataFrame directly would silently re-run training on
-    // every probe.
-    private val loadedCache =
-      scala.collection.concurrent.TrieMap[String, IvfIndex]()
-
     /** Production probe entry: load the index at `path`, building and
-      * saving it first IFF absent (the offline pass, run once — in a
-      * real deployment by a separate indexing job). Every returned
-      * index reads postings from parquet, so repeated probes cost
-      * probe work only, never training. When `fingerprint` is given
-      * (e.g. `BpeLearn.dataFingerprint` of the embeddings table) it
-      * is stored beside the postings and checked on reuse, so
-      * regenerating the data at the same path retrains instead of
-      * silently serving a stale index (the advisor-r5 staleness
-      * guard, same contract as the BPE merge artifact).
+      * saving it first unless fresh (the offline pass, run once — in a
+      * real deployment by a separate indexing job). The returned index
+      * reads postings from parquet, never the KMeans lineage, so
+      * repeated probes cost probe work only, and it is memoized per
+      * (path, fingerprint). `fingerprint` (e.g.
+      * `ArtifactGuard.dataFingerprint` of the embeddings table) keys
+      * freshness: regenerating the data at the same path retrains
+      * instead of silently serving a stale index.
+      *
+      * Sizing contract (SCALE.md §4b): `_meta` states what the
+      * quantizer was sized for, beside the postings it sizes, with the
+      * index's actual list count. Every rebuild rewrites it, so a
+      * corpus whose row count stays in the same nLists band cannot
+      * keep the previous corpus's `corpus_rows`. A reused artifact
+      * whose `_meta` lacks keys the current contract states (e.g.
+      * n_probe) backfills them with the LOADED index's list count.
       */
     def buildIfAbsent(spark: org.apache.spark.sql.SparkSession,
         corpus: => DataFrame, path: String, nLists: Int,
         seed: Long = 7L, fingerprint: Option[String] = None,
-        meta: Map[String, String] = Map.empty): IvfIndex =
-      loadedCache.getOrElseUpdate(path + fingerprint.mkString("#", "", ""), {
-        import graft.sources.ArtifactGuard
-        val rebuilt = !ArtifactGuard.fresh(spark, path,
-          s"$path/assigned/_SUCCESS", fingerprint)
-        if (rebuilt) {
-          build(corpus, nLists, seed).save(path)
-          ArtifactGuard.stamp(spark, path, fingerprint)
-        }
+        meta: Map[String, String] = Map.empty): IvfIndex = {
+      import graft.sources.ArtifactGuard
+      def writeMeta(idx: IvfIndex): Unit = if (meta.nonEmpty)
+        ArtifactGuard.writeMeta(spark, path,
+          meta + ("n_lists" -> idx.nLists.toString))
+      ArtifactGuard.once(spark, path, fingerprint) {
+        val built = build(corpus, nLists, seed)
+        built.save(path)
+        writeMeta(built)
+      } {
         val idx = load(spark, path)
-        // sizing contract (SCALE.md §4b): state what the quantizer
-        // was sized for, beside the postings it sizes. Written on
-        // load, not build, so a pre-contract artifact backfills —
-        // with the LOADED index's actual list count, which is the
-        // truth either way (a caller-supplied nLists that disagreed
-        // with a fresh artifact would record the artifact, not the
-        // request). A fingerprint-triggered REBUILD rewrites _meta
-        // unconditionally (advisor r13: a corpus whose row count
-        // stays in the same nLists band reuses the artifact path, and
-        // the empty-only backfill would leave the old corpus_rows
-        // standing — defeating the audit the file exists for), and a
-        // reused artifact whose _meta lacks keys the CURRENT contract
-        // stamps (e.g. n_probe, added r14) upgrades in place.
-        if (meta.nonEmpty && (rebuilt ||
-            (meta.keySet -- ArtifactGuard.readMeta(spark, path).keySet)
-              .nonEmpty))
-          ArtifactGuard.writeMeta(spark, path,
-            meta + ("n_lists" -> idx.nLists.toString))
+        if ((meta.keySet -- ArtifactGuard.readMeta(spark, path).keySet)
+            .nonEmpty)
+          writeMeta(idx)
         idx
-      })
+      }
+    }
 
     /** Train the quantizer and assign the corpus (the offline pass).
       *

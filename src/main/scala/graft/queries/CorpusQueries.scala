@@ -1,9 +1,10 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.CorpusOps
+import graft.operators.{BpeLearn, CorpusOps}
 
 /** Training-corpus preparation battery (q63–q67): Gopher repetition
   * filters, PII redaction, deterministic mixture resampling,
@@ -12,6 +13,34 @@ import graft.operators.CorpusOps
   * and LATERAL unnest mirror the Spark higher-order functions).
   */
 object CorpusQueries {
+
+  /** The word-level 24-merge table learned from the documents
+    * (q81/q86/q135 share this one artifact).
+    */
+  private def wordMerges(s: SparkSession, dir: String): DataFrame =
+    BpeLearn.learnMergesIfAbsent(s, Tables.load(s, dir, "documents"),
+      "text", BpeLearn.artifactPath(dir, 24), numMerges = 24,
+      fingerprint = Some(docsFingerprint(s, dir)))
+
+  /** The documents each suffixed with a special token and a multi-byte
+    * word: the byte-level tokenizer's training input.
+    */
+  private def suffixedDocs(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "documents").select(col("doc_id"),
+      concat(col("text"), lit(" <|doc|> caf\u00e9")).as("text"))
+
+  /** The byte-level 16-merge table learned from [[suffixedDocs]]
+    * (q101/q102/q195 share this one artifact).
+    */
+  private def byteMerges(s: SparkSession, dir: String): DataFrame =
+    BpeLearn.learnMergesIfAbsent(s, suffixedDocs(s, dir), "text",
+      BpeLearn.bytesArtifactPath(dir, 16), numMerges = 16,
+      fingerprint = Some(docsFingerprint(s, dir)), byteLevel = true,
+      specialTokens = Seq("<|doc|>"))
+
+  private def docsFingerprint(s: SparkSession, dir: String): String =
+    graft.sources.ArtifactGuard
+      .dataFingerprint(s, s"$dir/documents.parquet")
 
   // regex literals shared between the Spark side (TextFunctions
   // .piiPatterns) and the DuckDB oracle. DuckDB single-quoted strings
@@ -746,13 +775,7 @@ object CorpusQueries {
     QueryDef(
       "q81_bpe_merges",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-        val path = graft.operators.BpeLearn.artifactPath(dir, 24)
-        val fp = graft.operators.BpeLearn
-          .dataFingerprint(s, s"$dir/documents.parquet")
-        graft.operators.BpeLearn
-          .learnMergesIfAbsent(s, d, "text", path, numMerges = 24,
-            fingerprint = Some(fp))
+        wordMerges(s, dir)
           .filter(col("rank") <= 12)
           .orderBy(col("rank"))
       },
@@ -875,12 +898,7 @@ object CorpusQueries {
       "q86_bpe_encode",
       (s, dir) => {
         val d = Tables.load(s, dir, "documents")
-        val path = graft.operators.BpeLearn.artifactPath(dir, 24)
-        val fp = graft.operators.BpeLearn
-          .dataFingerprint(s, s"$dir/documents.parquet")
-        val merges = graft.operators.BpeLearn
-          .learnMergesIfAbsent(s, d, "text", path, numMerges = 24,
-            fingerprint = Some(fp))
+        val merges = wordMerges(s, dir)
         graft.operators.BpeLearn
           .encodeTokenCounts(d, "doc_id", "text", merges)
           .orderBy(col("doc_id"))
@@ -915,12 +933,7 @@ object CorpusQueries {
       "q135_bpe_fertility",
       (s, dir) => {
         val d = Tables.load(s, dir, "documents")
-        val path = graft.operators.BpeLearn.artifactPath(dir, 24)
-        val fp = graft.operators.BpeLearn
-          .dataFingerprint(s, s"$dir/documents.parquet")
-        val merges = graft.operators.BpeLearn
-          .learnMergesIfAbsent(s, d, "text", path, numMerges = 24,
-            fingerprint = Some(fp))
+        val merges = wordMerges(s, dir)
         graft.operators.BpeLearn
           .encodeTokenCounts(d, "doc_id", "text", merges)
           .join(d.select(col("doc_id"), col("lang")), Seq("doc_id"))
@@ -965,16 +978,7 @@ object CorpusQueries {
     QueryDef(
       "q101_bpe_bytelevel_merges",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-          .select(col("doc_id"),
-            concat(col("text"), lit(" <|doc|> caf\u00e9")).as("text"))
-        val path = graft.operators.BpeLearn.bytesArtifactPath(dir, 16)
-        val fp = graft.operators.BpeLearn
-          .dataFingerprint(s, s"$dir/documents.parquet")
-        graft.operators.BpeLearn
-          .learnMergesIfAbsent(s, d, "text", path, numMerges = 16,
-            fingerprint = Some(fp), byteLevel = true,
-            specialTokens = Seq("<|doc|>"))
+        byteMerges(s, dir)
           .filter(col("rank") <= 12)
           .orderBy(col("rank"))
       },
@@ -1018,16 +1022,8 @@ object CorpusQueries {
     QueryDef(
       "q102_bpe_bytelevel_encode",
       (s, dir) => {
-        val d = Tables.load(s, dir, "documents")
-          .select(col("doc_id"),
-            concat(col("text"), lit(" <|doc|> caf\u00e9")).as("text"))
-        val path = graft.operators.BpeLearn.bytesArtifactPath(dir, 16)
-        val fp = graft.operators.BpeLearn
-          .dataFingerprint(s, s"$dir/documents.parquet")
-        val merges = graft.operators.BpeLearn
-          .learnMergesIfAbsent(s, d, "text", path, numMerges = 16,
-            fingerprint = Some(fp), byteLevel = true,
-            specialTokens = Seq("<|doc|>"))
+        val d = suffixedDocs(s, dir)
+        val merges = byteMerges(s, dir)
         graft.operators.BpeLearn
           .encodeTokenCounts(d, "doc_id", "text", merges,
             byteLevel = true, specialTokens = Seq("<|doc|>"))
@@ -1182,17 +1178,7 @@ object CorpusQueries {
       "q195_fertility_report",
       (s, dir) => {
         val d0 = Tables.load(s, dir, "documents")
-        // identical training input to q101/q102 so whichever query
-        // runs first builds the SAME fingerprinted artifact
-        val dTrain = d0.select(col("doc_id"),
-          concat(col("text"), lit(" <|doc|> café")).as("text"))
-        val path = graft.operators.BpeLearn.bytesArtifactPath(dir, 16)
-        val fp = graft.operators.BpeLearn
-          .dataFingerprint(s, s"$dir/documents.parquet")
-        val merges = graft.operators.BpeLearn
-          .learnMergesIfAbsent(s, dTrain, "text", path, numMerges = 16,
-            fingerprint = Some(fp), byteLevel = true,
-            specialTokens = Seq("<|doc|>"))
+        val merges = byteMerges(s, dir)
         val enc = graft.operators.BpeLearn
           .encodeTokenCounts(d0, "doc_id", "text", merges,
             byteLevel = true, specialTokens = Seq("<|doc|>"))

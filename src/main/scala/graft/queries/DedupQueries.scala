@@ -83,7 +83,7 @@ object DedupQueries {
       dir: String, emb: org.apache.spark.sql.DataFrame)
       : graft.operators.Similarity.IvfIndex = {
     val idxPath = ivfArtifactDir(dir)
-    val fp = graft.operators.BpeLearn
+    val fp = graft.sources.ArtifactGuard
       .dataFingerprint(s, s"$dir/embeddings.parquet")
     val nl = ivfNLists(dir)
     Similarity.IvfIndex.buildIfAbsent(s, emb, idxPath, nLists = nl,

@@ -52,27 +52,19 @@ object ModelQueries {
     graft.sources.Artifacts.dir("lr", dir,
       s"d${LrDim}_r${LrRounds}_lr$LrLr")
 
-  private val lrWeightCache =
-    scala.collection.concurrent.TrieMap[String, Unit]()
-
   private def lrWeights(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame = {
     import graft.sources.ArtifactGuard
     val path = lrArtifactDir(dir)
-    val fp = graft.operators.BpeLearn
-      .dataFingerprint(s, s"$dir/documents.parquet")
-    lrWeightCache.getOrElseUpdate(path + "#" + fp, {
-      if (!ArtifactGuard.fresh(s, path, s"$path/weights/_SUCCESS",
-          Some(fp))) {
-        val d = Tables.load(s, dir, "documents")
-        val feats = LogReg.features(d, "doc_id", "text",
-          col("lang") === "en", LrDim).transform(graft.Boundary.lazyLocal)
-        LogReg.train(feats, "doc_id", LrDim, LrRounds, LrLr)
-          .repartition(1)
-          .write.mode("overwrite").parquet(s"$path/weights")
-        ArtifactGuard.stamp(s, path, Some(fp))
-      }
-    })
+    ArtifactGuard.once(s, path, Some(ArtifactGuard
+        .dataFingerprint(s, s"$dir/documents.parquet"))) {
+      val d = Tables.load(s, dir, "documents")
+      val feats = LogReg.features(d, "doc_id", "text",
+        col("lang") === "en", LrDim).transform(graft.Boundary.lazyLocal)
+      LogReg.train(feats, "doc_id", LrDim, LrRounds, LrLr)
+        .repartition(1)
+        .write.mode("overwrite").parquet(s"$path/weights")
+    }(())
     Tables.read(s, s"$path/weights")
   }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.operators.{IndexMaintenance, KMeansExact, ProductQuant, Similarity}
+import graft.sources.ArtifactGuard
 
 /** Round-10 embedding-geometry battery: Matryoshka truncation recall
   * (q178) and product-quantization ADC search (q180) — the two
@@ -29,22 +30,12 @@ object VectorQueries {
     graft.sources.Artifacts.dir("pq", dir,
       s"m${PqM}_sd${PqSubDim}_k${PqK}_i$PqIters")
 
-  // build-once-per-JVM gate (the lrWeightCache pattern): the FS
-  // freshness check stays authoritative; this only stops concurrent
-  // sweep threads from racing the build
-  private val pqCache = scala.collection.concurrent.TrieMap[String,
-    (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]()
-
   private def sharedPq(s: org.apache.spark.sql.SparkSession, dir: String,
       emb: => org.apache.spark.sql.DataFrame)
-      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    val path = pqArtifactDir(dir)
-    val fp = graft.operators.BpeLearn
-      .dataFingerprint(s, s"$dir/embeddings.parquet")
-    pqCache.getOrElseUpdate(path + "#" + fp,
-      ProductQuant.buildIfAbsent(s, emb, path, PqM, PqSubDim, PqK,
-        PqIters, fingerprint = Some(fp)))
-  }
+      : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
+    ProductQuant.buildIfAbsent(s, emb, pqArtifactDir(dir), PqM, PqSubDim,
+      PqK, PqIters, fingerprint = Some(ArtifactGuard
+        .dataFingerprint(s, s"$dir/embeddings.parquet")))
 
   // coarse quantizer for the CDC-maintained index (q191): exact-Lloyd
   // so the fitted assignment arithmetic is SQL-replayable
@@ -54,42 +45,32 @@ object VectorQueries {
   private[queries] def ivfCdcDir(dir: String): String =
     graft.sources.Artifacts.dir("ivfcdc", dir, s"k${CdcK}_i$CdcIters")
 
-  private val ivfCdcCache = scala.collection.concurrent.TrieMap[String,
-    (org.apache.spark.sql.DataFrame,
-      Map[(Int, Int), java.math.BigDecimal])]()
-
   /** Load (postings, fitted centroid model) for the CDC index,
-    * training + saving both halves IFF absent (the offline indexing
-    * job; fingerprint-guarded like the PQ/IVF artifacts). Postings
-    * are (id, cluster); centroids persist as the (cluster, j, c)
-    * DECIMAL(18,6) table the oracle replays assignment from.
+    * training + saving both halves unless fresh (the offline indexing
+    * job, learn-once like the PQ/IVF artifacts). Postings are (id,
+    * cluster); centroids persist as the (cluster, j, c) DECIMAL(18,6)
+    * table the oracle replays assignment from.
     */
   private def sharedIvfCdc(s: org.apache.spark.sql.SparkSession,
       dir: String, base: => org.apache.spark.sql.DataFrame)
       : (org.apache.spark.sql.DataFrame,
         Map[(Int, Int), java.math.BigDecimal]) = {
     val path = ivfCdcDir(dir)
-    val fp = graft.operators.BpeLearn
-      .dataFingerprint(s, s"$dir/embeddings.parquet")
-    ivfCdcCache.getOrElseUpdate(path + "#" + fp, {
-      import graft.sources.ArtifactGuard
-      if (!ArtifactGuard.fresh(s, path, s"$path/postings/_SUCCESS",
-          Some(fp))) {
-        val (assigned, cent) = KMeansExact
-          .assignAndModel(base, "id", "embedding", CdcK, CdcIters)
-        cent.coalesce(1).write.mode("overwrite")
-          .parquet(s"$path/centroids")
-        assigned.select(col("id"), col("cluster"))
-          .write.mode("overwrite").parquet(s"$path/postings")
-        ArtifactGuard.stamp(s, path, Some(fp))
-      }
-      val postings = Tables.read(s, s"$path/postings")
+    ArtifactGuard.once(s, path, Some(ArtifactGuard
+        .dataFingerprint(s, s"$dir/embeddings.parquet"))) {
+      val (assigned, cent) = KMeansExact
+        .assignAndModel(base, "id", "embedding", CdcK, CdcIters)
+      cent.coalesce(1).write.mode("overwrite")
+        .parquet(s"$path/centroids")
+      assigned.select(col("id"), col("cluster"))
+        .write.mode("overwrite").parquet(s"$path/postings")
+    } {
       val model = Tables.read(s, s"$path/centroids").collect()
         .map(r => (r.getAs[Int]("cluster"), r.getAs[Int]("j")) ->
           r.getAs[java.math.BigDecimal]("c").setScale(6))
         .toMap
-      (postings, model)
-    })
+      (Tables.read(s, s"$path/postings"), model)
+    }
   }
 
   /** One truncated-space exact-top-k CTE chain (the q28 arithmetic

@@ -3,14 +3,16 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Shared staleness guard for learn-once artifacts (the BPE merge
-  * table, the IVF index): an artifact is fresh iff its `_SUCCESS`
-  * marker exists AND the `_fingerprint` stored beside it matches the
-  * caller's fingerprint of the CURRENT input data — regenerating the
-  * data at the same path retrains instead of silently serving a stale
-  * model (advisor r5). One implementation for every artifact, so
-  * every artifact's stamps are written atomically (temp file, then
-  * rename).
+/** The one learn-once primitive for saved models (BPE merges, the
+  * IVF/PQ/CDC quantizers, LR weights, the suffix-rank pyramid, the LSH
+  * planes): [[once]] builds an artifact iff it is not fresh, stamps it,
+  * and memoizes what loading it returns. One freshness rule for every
+  * artifact: the `_fingerprint` stamp is written last and is the commit
+  * marker, so an artifact is fresh iff its stamp matches the caller's
+  * fingerprint of the CURRENT input data. Regenerating the data at the
+  * same path retrains instead of silently serving a stale model, and a
+  * build that dies part-way leaves no stamp, so it is never served.
+  * Stamps are written atomically (temp file, then rename).
   */
 object ArtifactGuard {
 
@@ -42,25 +44,64 @@ object ArtifactGuard {
     digest.map(b => f"$b%02x").mkString
   }
 
-  /** True iff the artifact at `path` is complete (`successFile`
-    * exists) and, when a fingerprint is supplied, matches the stored
-    * one.
+  /** Stamp of an artifact whose content is a pure function of its
+    * path (the LSH planes, spec fixtures): stamped like any other, so
+    * the one freshness rule covers it.
     */
-  def fresh(spark: SparkSession, path: String, successFile: String,
-      fingerprint: Option[String]): Boolean = {
-    val success = new Path(successFile)
-    val fs = success.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def storedFp: Option[String] = {
-      val fpFile = new Path(s"$path/_fingerprint")
-      if (!fs.exists(fpFile)) None
-      else {
-        val in = fs.open(fpFile)
-        try Some(new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim)
-        finally in.close()
-      }
+  private val NoFingerprint = "-"
+
+  /** One memo slot per (path, fingerprint); its lock serializes
+    * concurrent first callers, so each artifact builds once per JVM.
+    */
+  private final class Slot { var loaded: Option[Any] = None }
+
+  private val slots =
+    scala.collection.concurrent.TrieMap[(String, String), Slot]()
+
+  /** Learn-once artifact at `path`: unless its stamp matches
+    * `fingerprint` (None = fingerprint-less, stamped all the same), drop
+    * the stale stamp and what the path's other fingerprints loaded, run
+    * `build` (which writes the artifact's parts under `path`), then
+    * stamp it. Returns `load`, memoized per (path, fingerprint) for the
+    * JVM: a repeat call probes nothing and builds nothing. A `build`
+    * that throws leaves the artifact unstamped and nothing memoized, so
+    * the next call rebuilds.
+    */
+  def once[A](spark: SparkSession, path: String,
+      fingerprint: Option[String])(build: => Unit)(load: => A): A = {
+    val fp = fingerprint.getOrElse(NoFingerprint)
+    val slot = slots.getOrElseUpdate((path, fp), new Slot)
+    slot.synchronized {
+      slot.loaded.getOrElse {
+        if (!fresh(spark, path, fp)) {
+          // the parts are about to be overwritten: nothing loaded from
+          // them under another fingerprint may be served again
+          val stampFile = new Path(s"$path/_fingerprint")
+          stampFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .delete(stampFile, false)
+          slots.keys.filter(k => k._1 == path && k._2 != fp)
+            .foreach(slots.remove)
+          build
+          stamp(spark, path, fp)
+        }
+        val a = load
+        slot.loaded = Some(a)
+        a
+      }.asInstanceOf[A]
     }
-    fs.exists(success) && fingerprint.forall(fp => storedFp.contains(fp))
+  }
+
+  /** True iff the stamp stored at `path` is `fingerprint`. */
+  private def fresh(spark: SparkSession, path: String,
+      fingerprint: String): Boolean = {
+    val fpFile = new Path(s"$path/_fingerprint")
+    val fs = fpFile.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(fpFile) && {
+      val in = fs.open(fpFile)
+      try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+        "UTF-8").trim == fingerprint
+      finally in.close()
+    }
   }
 
   /** Ordered log of artifact paths stamped this JVM — every guarded
@@ -75,15 +116,13 @@ object ArtifactGuard {
 
   def buildEventCount: Int = stamped.size
 
-  /** Record `fingerprint` beside a just-written artifact, and the
-    * build event itself (recorded even for fingerprint-less
-    * artifacts — the event log tracks WRITES, not guards).
+  /** Commit a just-built artifact: record the build event, then write
+    * `fingerprint` beside it.
     */
-  def stamp(spark: SparkSession, path: String,
-      fingerprint: Option[String]): Unit = {
+  private def stamp(spark: SparkSession, path: String,
+      fingerprint: String): Unit = {
     stamped.add(path)
-    fingerprint.foreach(fp =>
-      writeAtomically(spark, new Path(s"$path/_fingerprint"), fp))
+    writeAtomically(spark, new Path(s"$path/_fingerprint"), fingerprint)
   }
 
   /** Write `body` to `file` through a hidden temp file in the same

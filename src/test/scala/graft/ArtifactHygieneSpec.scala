@@ -105,6 +105,30 @@ class ArtifactHygieneSpec extends AnyFunSuite {
         offenders.distinct.sorted.mkString(", "))
   }
 
+  /** `ArtifactGuard.once` is the one learn-once primitive: its stamp is
+    * every artifact's commit marker, so no other file probes freshness,
+    * stamps, or picks a `_SUCCESS` marker of its own. Comment lines may
+    * still name `_SUCCESS` (Spark writes one into every parquet dir).
+    */
+  test("learn-once artifacts go through ArtifactGuard.once") {
+    val codeSuccess = scalaFiles(new java.io.File("src/main/scala"))
+      .filter { f =>
+        val lines = new String(
+          java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").linesIterator
+        lines.exists { l =>
+          val t = l.trim
+          !(t.startsWith("*") || t.startsWith("/*") || t.startsWith("//")) &&
+            t.contains("_SUCCESS")
+        }
+      }.map(_.getPath)
+    val offenders = (mainFilesMatching(
+      """ArtifactGuard\s*\.\s*(fresh|stamp)\b""".r) ++ codeSuccess)
+      .filterNot(_.endsWith("/ArtifactGuard.scala"))
+    assert(offenders.isEmpty,
+      "freshness probes, stamps or _SUCCESS markers outside " +
+        "ArtifactGuard.once: " + offenders.distinct.sorted.mkString(", "))
+  }
+
   test("artifact dirs disambiguate raw data dirs that sanitize alike") {
     val a = graft.sources.Artifacts.dir("lr", "/data/x.y", "d8")
     val b = graft.sources.Artifacts.dir("lr", "/data/x_y", "d8")

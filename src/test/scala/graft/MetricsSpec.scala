@@ -91,4 +91,16 @@ class MetricsSpec extends SparkSpec {
       case (k, None) => conf.unset(k)
     }
   }
+
+  test("json escapes string values: a reader gets back quotes, " +
+      "backslashes and control characters") {
+    val nasty = "say \"hi\" \\ C:\\dir\nnext\tcol\u0001end"
+    val out = Metrics.json(Seq("err \"q\"" -> nasty, "n" -> 3,
+      "nan" -> Double.NaN))
+    val node = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(out)
+    assert(node.get("err \"q\"").asText == nasty, out)
+    assert(node.get("n").asInt == 3)
+    assert(node.get("nan").isNull)
+  }
 }

@@ -43,17 +43,13 @@ class IvfSizedRecallSpec extends SparkSpec {
     */
   private lazy val sizedDir: String = {
     val out = Artifacts.dir("sized_recall", baseDir, s"x$factor")
-    val fp = ArtifactGuard.dataFingerprint(
-      spark, s"$baseDir/embeddings.parquet")
-    val embOut = s"$out/embeddings.parquet"
-    if (!ArtifactGuard.fresh(spark, out, s"$embOut/_SUCCESS", Some(fp))) {
+    ArtifactGuard.once(spark, out, Some(ArtifactGuard.dataFingerprint(
+        spark, s"$baseDir/embeddings.parquet"))) {
       val base = Tables.load(spark, baseDir, "embeddings")
       StressData.replicateEmbeddings(base, factor)
         .repartition(16, col("vec_id"))
-        .write.mode("overwrite").parquet(embOut)
-      ArtifactGuard.stamp(spark, out, Some(fp))
-    }
-    out
+        .write.mode("overwrite").parquet(s"$out/embeddings.parquet")
+    }(out)
   }
 
   private def corpus: DataFrame =
@@ -73,18 +69,15 @@ class IvfSizedRecallSpec extends SparkSpec {
     */
   private lazy val exactAnchor: DataFrame = {
     val path = s"$sizedDir/exact_anchor.parquet"
-    val fp = ArtifactGuard.dataFingerprint(
-      spark, s"$sizedDir/embeddings.parquet")
-    if (!ArtifactGuard.fresh(spark, path, s"$path/_SUCCESS", Some(fp))) {
+    ArtifactGuard.once(spark, path, Some(ArtifactGuard.dataFingerprint(
+        spark, s"$sizedDir/embeddings.parquet"))) {
       val emb = corpus
       Similarity.bruteForceTopK(
           emb.filter(col("id") % 2 === 1), sampleQueries(emb), k = 1)
         .select(col("query_id"), col("neighbor_id").as("exact_id"),
           col("cosine").as("exact_cos"))
         .write.mode("overwrite").parquet(path)
-      ArtifactGuard.stamp(spark, path, Some(fp))
-    }
-    spark.read.parquet(path)
+    }(spark.read.parquet(path))
   }
 
   private def recallAndRatio(leg: DataFrame): (Double, Double) = {
